@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Driver benchmark: one JSON line with per-query seconds.
   *
@@ -61,13 +63,14 @@ object Bench {
     * tail-survivability property.
     */
   def renderLine(warm: Seq[(String, Double)], cold: Seq[(String, Double)], sfDir: String): String = {
-    def obj(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def top10(rs: Seq[(String, Double)]): String =
-      obj(rs.filter(_._2 >= 0).sortBy(-_._2).take(10))
+    def obj(fields: Seq[(String, Any)]) = ListMap(fields: _*).asJava
+    def top10(rs: Seq[(String, Double)]) = obj(rs.filter(_._2 >= 0).sortBy(-_._2).take(10))
     val total = warm.map(_._2).filter(_ >= 0).sum
     val coldTotal = cold.map(_._2).filter(_ >= 0).sum
     val failed = warm.count(_._2 < 0)
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(warm)},"cold":${obj(cold)},"warm_top":${top10(warm)},"cold_top":${top10(cold)},"failed":$failed,"cold_total":$coldTotal,"warm_total":$total,"sf":"$sfDir"}"""
+    Json.mapper.writeValueAsString(obj(Seq("metric" -> "total", "value" -> total,
+      "unit" -> "sec", "queries" -> obj(warm), "cold" -> obj(cold),
+      "warm_top" -> top10(warm), "cold_top" -> top10(cold), "failed" -> failed,
+      "cold_total" -> coldTotal, "warm_total" -> total, "sf" -> sfDir)))
   }
 }

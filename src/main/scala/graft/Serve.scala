@@ -36,7 +36,7 @@ object Serve {
       session.graph = GraphStore.load(session.spark, dataDir)
 
     val broker = new EngineBroker(session, logDir)
-    val http = new HttpApi(session, port, apiKey, logDir, Some(broker), bindAddr)
+    val http = new HttpApi(broker, port, apiKey, bindAddr)
     val ws = new WsRepl(broker, wsPort, apiKey, bindAddr = bindAddr)
     val grpc: Option[GrpcApi] =
       grpcPort.map(p => new GrpcApi(broker, p, apiKey, bindAddr))

@@ -1,77 +1,45 @@
 package graft.api
 
+import com.fasterxml.jackson.databind.node.ObjectNode
+
+import graft.Json
 import graft.engine.{QueryOutcome, ResultRow}
 
 /** JSON rendering of the reference's outcome DTO
   * (api/server.rs:70-127 `OutcomeDto`: rows with
-  * `kind/id/label/from/to/metadata/info`, counters, mutated flag).
-  * Hand-rolled — no JSON deps in the sandbox; the shapes are flat.
-  * Compact form serves HTTP; the pretty form mirrors the WS REPL's
-  * `serde_json::to_string_pretty` output (api/server.rs:213).
+  * `kind/id/label/from/to/metadata/info`, counters, mutated flag),
+  * written through [[graft.Json]]. Compact form serves HTTP; the pretty
+  * form mirrors the WS REPL's `serde_json::to_string_pretty` output
+  * (api/server.rs:213). Metadata keys are sorted.
   */
 object Dto {
 
-  def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  def q(s: String): String = "\"" + jsonEscape(s) + "\""
-
-  def mapJson(m: Map[String, String]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}:${q(v)}" }
-      .mkString("{", ",", "}")
-
-  def rowJson(r: ResultRow): String = r.kind match {
-    case "node" =>
-      s"""{"kind":"node","id":${q(r.id)},"label":${q(r.label)},"metadata":${mapJson(r.properties)}}"""
-    case "relationship" =>
-      s"""{"kind":"relationship","id":${q(r.id)},"label":${q(r.label)},"from":${q(r.src)},"to":${q(r.dst)},"metadata":${mapJson(r.properties)}}"""
-    case _ =>
-      s"""{"kind":"info","id":"","info":${q(r.info)}}"""
-  }
-
-  def outcomeJson(o: QueryOutcome): String =
-    s"""{"rows":[${o.rows.map(rowJson).mkString(",")}],""" +
-      s""""affected_nodes":${o.affectedNodes},""" +
-      s""""affected_relationships":${o.affectedRels},"mutated":${o.mutated}}"""
-
-  /** 2-space-indented rendering for the WS REPL (shape parity with the
-    * reference's pretty printer; field order matches [[outcomeJson]]). */
-  def outcomeJsonPretty(o: QueryOutcome): String = {
-    def prettyMap(m: Map[String, String], ind: String): String =
-      if (m.isEmpty) "{}"
-      else m.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"$ind  ${q(k)}: ${q(v)}" }
-        .mkString("{\n", ",\n", s"\n$ind}")
-    def prettyRow(r: ResultRow, ind: String): String = {
-      val fields: Seq[(String, String)] = r.kind match {
-        case "node" => Seq(
-          "kind" -> q("node"), "id" -> q(r.id), "label" -> q(r.label),
-          "metadata" -> prettyMap(r.properties, ind + "  "))
-        case "relationship" => Seq(
-          "kind" -> q("relationship"), "id" -> q(r.id), "label" -> q(r.label),
-          "from" -> q(r.src), "to" -> q(r.dst),
-          "metadata" -> prettyMap(r.properties, ind + "  "))
-        case _ => Seq("kind" -> q("info"), "id" -> q(""), "info" -> q(r.info))
-      }
-      fields.map { case (k, v) => s"$ind  ${q(k)}: $v" }
-        .mkString("{\n", ",\n", s"\n$ind}")
+  private def rowNode(r: ResultRow): ObjectNode = {
+    val n = Json.mapper.createObjectNode()
+    r.kind match {
+      case "node" | "relationship" =>
+        n.put("kind", r.kind).put("id", r.id).put("label", r.label)
+        if (r.kind == "relationship") n.put("from", r.src).put("to", r.dst)
+        val meta = n.putObject("metadata")
+        r.properties.toSeq.sortBy(_._1).foreach { case (k, v) => meta.put(k, v) }
+      case _ =>
+        n.put("kind", "info").put("id", "").put("info", r.info)
     }
-    val rows =
-      if (o.rows.isEmpty) "[]"
-      else o.rows.map(r => "    " + prettyRow(r, "    "))
-        .mkString("[\n", ",\n", "\n  ]")
-    s"""{
-       |  "rows": $rows,
-       |  "affected_nodes": ${o.affectedNodes},
-       |  "affected_relationships": ${o.affectedRels},
-       |  "mutated": ${o.mutated}
-       |}""".stripMargin
+    n
   }
+
+  private def outcomeNode(o: QueryOutcome): ObjectNode = {
+    val n = Json.mapper.createObjectNode()
+    val rows = n.putArray("rows")
+    o.rows.foreach(r => rows.add(rowNode(r)))
+    n.put("affected_nodes", o.affectedNodes)
+      .put("affected_relationships", o.affectedRels)
+      .put("mutated", o.mutated)
+  }
+
+  def outcomeJson(o: QueryOutcome): String = Json.mapper.writeValueAsString(outcomeNode(o))
+
+  /** 2-space-indented rendering for the WS REPL; same fields and order
+    * as [[outcomeJson]]. */
+  def outcomeJsonPretty(o: QueryOutcome): String = Json.pretty.writeValueAsString(outcomeNode(o))
 }

@@ -4,27 +4,28 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import graft.engine.GraphSession
+import com.fasterxml.jackson.core.JsonProcessingException
+
+import graft.Json
 
 /** HTTP query API — the reference's `POST /api/query` contract
   * (api/server.rs:60-177): JSON `{query, params?, log?}` in, DTO rows +
   * counters out (`kind/id/label/from/to/metadata/info` row shape,
   * api/server.rs:70-127); optional `X-API-Key`; 400 with the raw error
   * string on failure; 504 on timeout (30 s); per-request RID + latency
-  * log lines.
+  * log lines. Bodies are read and answers written through
+  * [[graft.Json]].
   *
   * Transport only: execution goes through the shared [[EngineBroker]]
   * (the reference's single-engine-thread architecture, SURVEY §3/API4),
   * so HTTP requests serialize with the WebSocket REPL and the headless
-  * daemon against one engine thread.
+  * daemon against one engine thread. The caller owns the broker.
   */
-class HttpApi(session: GraphSession, port: Int = 0,
-    apiKey: Option[String] = None, logDir: Option[String] = None,
-    broker0: Option[EngineBroker] = None, bindAddr: String = "127.0.0.1") {
-
-  val broker: EngineBroker = broker0.getOrElse(new EngineBroker(session, logDir))
+class HttpApi(broker: EngineBroker, port: Int = 0,
+    apiKey: Option[String] = None, bindAddr: String = "127.0.0.1") {
 
   // bind the configured address only (settings.rs api_bind_addr
   // default loopback; server.rs:233-259) — not the wildcard
@@ -45,11 +46,9 @@ class HttpApi(session: GraphSession, port: Int = 0,
         if (apiKey.exists(k => ex.getRequestHeaders.getFirst("X-API-Key") != k)) {
           respond(ex, 401, "unauthorized"); return
         }
-        val body = readBounded(ex) match {
-          case Some(b) => b
-          case None => respond(ex, 413, "request body too large"); return
-        }
-        val (query, params) = parseBody(body) match {
+        val body = ex.getRequestBody.readNBytes(maxBodyBytes + 1)
+        if (body.length > maxBodyBytes) { respond(ex, 413, "request body too large"); return }
+        val (query, params) = parseBody(new String(body, StandardCharsets.UTF_8)) match {
           case Some(qp) => qp
           case None => respond(ex, 400, "malformed request body"); return
         }
@@ -58,7 +57,7 @@ class HttpApi(session: GraphSession, port: Int = 0,
         broker.execute(query, params, timeoutSec = 30) match {
           case Some(Right(out)) =>
             broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, 200))
-            respondJson(ex, 200, Dto.outcomeJson(out))
+            respond(ex, 200, Dto.outcomeJson(out), "application/json")
           case Some(Left(err)) =>
             broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, 400))
             respond(ex, 400, err)
@@ -81,150 +80,29 @@ class HttpApi(session: GraphSession, port: Int = 0,
   def stop(): Unit = {
     server.stop(0)
     pool.shutdown() // non-daemon workers would otherwise pin the JVM open
-    if (broker0.isEmpty) broker.stop()
   }
 
-  /** Read the request body up to [[maxBodyBytes]]; None once over. */
-  private def readBounded(ex: HttpExchange): Option[String] = {
-    val in = ex.getRequestBody
-    val buf = new java.io.ByteArrayOutputStream()
-    val chunk = new Array[Byte](8192)
-    var read = in.read(chunk)
-    while (read >= 0) {
-      if (buf.size() + read > maxBodyBytes) return None
-      buf.write(chunk, 0, read)
-      read = in.read(chunk)
-    }
-    Some(buf.toString(StandardCharsets.UTF_8.name()))
-  }
-
-  /** Parse `{"query": "...", "params": {...}, "log": bool}` with a
-    * single depth-aware scan of the TOP-LEVEL object members. Two bugs
-    * the previous regex probes had, both closed by construction here:
-    * a `"query"` key nested inside params could shadow the real
-    * statement (JSON key order is client-controlled), and any param
-    * key/value containing a backslash escape was silently dropped from
-    * the map. */
+  /** `{"query": "...", "params": {...}, "log": bool}`: the top level
+    * must be an object whose `query` is a string. `params` is optional
+    * (None keeps the reference's no-params router split,
+    * server.rs:64,149); its non-string values are dropped. */
   private def parseBody(body: String): Option[(String, Option[Map[String, String]])] = {
-    val n = body.length
-    var i = body.indexOf('{')
-    if (i < 0) return None
-    i += 1
-    var query: Option[String] = None
-    // None = no params key in the request — the reference keeps the
-    // Option through to the router split (server.rs:64,149)
-    var params: Option[Map[String, String]] = None
-
-    def ws(): Unit = while (i < n && body(i).isWhitespace) i += 1
-    // reads a JSON string at body(i) == '"'; returns None if not one
-    def str(): Option[String] = {
-      if (i >= n || body(i) != '"') return None
-      val sb = new StringBuilder
-      i += 1
-      while (i < n && body(i) != '"') {
-        if (body(i) == '\\' && i + 1 < n) {
-          body(i + 1) match {
-            case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-            case 'r' => sb.append('\r'); case 'b' => sb.append('\b')
-            case 'f' => sb.append('\f')
-            case 'u' if i + 5 < n &&
-                body.substring(i + 2, i + 6).forall(h =>
-                  Character.digit(h, 16) >= 0) =>
-              sb.append(Integer.parseInt(body.substring(i + 2, i + 6), 16).toChar)
-              i += 4
-            // malformed \\u (short/non-hex) degrades like any unknown
-            // escape instead of a NumberFormatException -> 500
-            case c => sb.append(c)
-          }
-          i += 2
-        } else { sb.append(body(i)); i += 1 }
-      }
-      if (i >= n) return None // unterminated
-      i += 1
-      Some(sb.toString)
-    }
-    // skips any JSON value (string / object / array / scalar)
-    def skipValue(): Unit = {
-      ws()
-      if (i >= n) return
-      body(i) match {
-        case '"' => str(): Unit
-        case '{' | '[' =>
-          var depth = 0
-          while (i < n && { body(i) match {
-            case '{' | '[' => depth += 1; i += 1
-            case '}' | ']' => depth -= 1; i += 1
-            case '"' => str(): Unit
-            case _ => i += 1
-          }; depth > 0 }) ()
-        case _ =>
-          while (i < n && !",}]".contains(body(i))) i += 1
-      }
-    }
-    // flat string map at body(i) == '{'; non-string values are skipped
-    def stringMap(): Map[String, String] = {
-      val out = Map.newBuilder[String, String]
-      i += 1 // '{'
-      ws()
-      var ok = true
-      while (ok && i < n && body(i) != '}') {
-        str() match {
-          case Some(k) =>
-            ws()
-            if (i < n && body(i) == ':') { i += 1; ws() } else ok = false
-            if (ok) {
-              val vStart = i
-              str() match {
-                case Some(v) => out += k -> v
-                case None => i = vStart; skipValue()
-              }
-            }
-            ws()
-            if (i < n && body(i) == ',') { i += 1; ws() }
-          case None => ok = false
-        }
-      }
-      if (i < n && body(i) == '}') i += 1
-      out.result()
-    }
-
-    ws()
-    var ok = true
-    while (ok && i < n && body(i) != '}') {
-      str() match {
-        case Some(k) =>
-          ws()
-          if (i < n && body(i) == ':') { i += 1; ws() } else ok = false
-          if (ok) k match {
-            case "query" =>
-              val vStart = i
-              str() match {
-                case Some(q) => query = Some(q)
-                case None => i = vStart; skipValue()
-              }
-            case "params" =>
-              if (i < n && body(i) == '{') params = Some(stringMap()) else skipValue()
-            case _ => skipValue()
-          }
-          ws()
-          if (i < n && body(i) == ',') { i += 1; ws() }
-        case None => ok = false
-      }
-    }
-    query.map((_, params))
+    val root =
+      try Json.mapper.readTree(body)
+      catch { case _: JsonProcessingException => return None }
+    val query = root.path("query")
+    val params = root.path("params")
+    if (!root.isObject || !query.isTextual) None
+    else if (params.isMissingNode || params.isNull) Some((query.textValue, None))
+    else if (params.isObject) Some((query.textValue, Some(params.properties.asScala
+      .collect { case e if e.getValue.isTextual => e.getKey -> e.getValue.textValue }.toMap)))
+    else None
   }
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+  private def respond(ex: HttpExchange, code: Int, body: String,
+      contentType: String = "text/plain; charset=utf-8"): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.add("Content-Type", "text/plain; charset=utf-8")
-    ex.sendResponseHeaders(code, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  }
-
-  private def respondJson(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.add("Content-Type", "application/json")
+    ex.getResponseHeaders.add("Content-Type", contentType)
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
     ex.close()

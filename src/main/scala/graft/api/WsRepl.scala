@@ -14,7 +14,8 @@ import scala.util.control.NonFatal
   * close honored; optional `X-API-Key` checked at the HTTP upgrade.
   *
   * RFC 6455 over a plain ServerSocket — text/ping/close frames need no
-  * external dependency (none is available offline). Queries execute on
+  * external dependency; the outcome JSON is [[Dto.outcomeJsonPretty]],
+  * written with Spark's Jackson. Queries execute on
   * the shared [[EngineBroker]] engine thread, serialized with HTTP
   * traffic exactly like the reference's broker (api/mod.rs:8-32).
   */

@@ -2,14 +2,19 @@ package graft.io
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.databind.JsonNode
+
+import graft.Json
+
 /** Settings persistence — parity with the reference's
   * `persistence/settings.rs`: a flat JSON settings file in the user
   * config dir (`$XDG_CONFIG_HOME/graft/settings.json`, falling back to
   * `~/.config/graft`), same field set and defaults
   * (settings.rs:8-58,180-182: LOD thresholds, API bind/port/key, gRPC
   * port, autosave/export/log dir overrides, background-on-close).
-  * Load tolerates missing keys (serde `#[serde(default)]` semantics);
-  * save is atomic (tmp + rename, like persist.rs:100-131).
+  * Read and written through [[graft.Json]]. Load tolerates missing keys
+  * (serde `#[serde(default)]` semantics); save is atomic (tmp + rename,
+  * like persist.rs:100-131).
   */
 case class AppSettings(
     autosaveOverride: Option[String] = None,
@@ -31,32 +36,23 @@ case class AppSettings(
 
   def apiEndpoint: String = s"$apiBindAddr:$apiPort"
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   def toJson: String = {
-    def opt(o: Option[String]): String = o.map(jsonStr).getOrElse("null")
-    s"""{
-       |  "autosave_override": ${opt(autosaveOverride)},
-       |  "export_override": ${opt(exportOverride)},
-       |  "api_log_override": ${opt(apiLogOverride)},
-       |  "lod_enabled": $lodEnabled,
-       |  "lod_label_min_zoom": $lodLabelMinZoom,
-       |  "lod_hide_labels_node_threshold": $lodHideLabelsNodeThreshold,
-       |  "api_enabled": $apiEnabled,
-       |  "api_bind_addr": ${jsonStr(apiBindAddr)},
-       |  "api_port": $apiPort,
-       |  "api_key": ${opt(apiKey)},
-       |  "grpc_enabled": $grpcEnabled,
-       |  "grpc_port": $grpcPort,
-       |  "background_on_close": $backgroundOnClose,
-       |  "max_result_rows": ${maxResultRows.map(_.toString).getOrElse("null")}
-       |}""".stripMargin
+    val n = Json.mapper.createObjectNode()
+      .put("autosave_override", autosaveOverride.orNull)
+      .put("export_override", exportOverride.orNull)
+      .put("api_log_override", apiLogOverride.orNull)
+      .put("lod_enabled", lodEnabled)
+      .put("lod_label_min_zoom", lodLabelMinZoom)
+      .put("lod_hide_labels_node_threshold", lodHideLabelsNodeThreshold)
+      .put("api_enabled", apiEnabled)
+      .put("api_bind_addr", apiBindAddr)
+      .put("api_port", apiPort)
+      .put("api_key", apiKey.orNull)
+      .put("grpc_enabled", grpcEnabled)
+      .put("grpc_port", grpcPort)
+      .put("background_on_close", backgroundOnClose)
+      .put("max_result_rows", maxResultRows.map(Long.box).orNull)
+    Json.pretty.writeValueAsString(n)
   }
 }
 
@@ -89,55 +85,30 @@ object AppSettings {
     p
   }
 
-  /** Flat-JSON field extraction (the settings shape has no nesting). */
+  /** Missing and null keys, and values of the wrong JSON type, take
+    * their defaults. */
   private[graft] def parse(json: String): AppSettings = {
-    // values may contain escapes that save() itself produces (quotes,
-    // backslashes in paths) — match them and unescape, so save→load
-    // round-trips instead of silently dropping to defaults
-    def unescape(s: String): String = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\\' && i + 1 < s.length) {
-          s.charAt(i + 1) match {
-            case 'u' if i + 5 < s.length =>
-              sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-              i += 6
-            case 'n' => sb.append('\n'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case other => sb.append(other); i += 2
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
-    def str(key: String): Option[String] =
-      (("\"" + key + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r)
-        .findFirstMatchIn(json).map(m => unescape(m.group(1)))
-    def num(key: String): Option[Double] =
-      (("\"" + key + "\"\\s*:\\s*(-?[0-9.eE+\\-]+)").r)
-        .findFirstMatchIn(json).map(_.group(1).toDouble)
-    def bool(key: String): Option[Boolean] =
-      (("\"" + key + "\"\\s*:\\s*(true|false)").r)
-        .findFirstMatchIn(json).map(_.group(1) == "true")
+    val root = Json.mapper.readTree(json)
+    def field(key: String, ok: JsonNode => Boolean) = Option(root.get(key)).filter(ok)
+    def str(key: String): Option[String] = field(key, _.isTextual).map(_.textValue)
+    def num(key: String): Option[JsonNode] = field(key, _.isNumber)
+    def bool(key: String): Option[Boolean] = field(key, _.isBoolean).map(_.booleanValue)
     val d = AppSettings()
     AppSettings(
       autosaveOverride = str("autosave_override"),
       exportOverride = str("export_override"),
       apiLogOverride = str("api_log_override"),
       lodEnabled = bool("lod_enabled").getOrElse(d.lodEnabled),
-      lodLabelMinZoom = num("lod_label_min_zoom").getOrElse(d.lodLabelMinZoom),
+      lodLabelMinZoom = num("lod_label_min_zoom").map(_.doubleValue).getOrElse(d.lodLabelMinZoom),
       lodHideLabelsNodeThreshold =
-        num("lod_hide_labels_node_threshold").map(_.toInt).getOrElse(d.lodHideLabelsNodeThreshold),
+        num("lod_hide_labels_node_threshold").map(_.intValue).getOrElse(d.lodHideLabelsNodeThreshold),
       apiEnabled = bool("api_enabled").getOrElse(d.apiEnabled),
       apiBindAddr = str("api_bind_addr").getOrElse(d.apiBindAddr),
-      apiPort = num("api_port").map(_.toInt).getOrElse(d.apiPort),
+      apiPort = num("api_port").map(_.intValue).getOrElse(d.apiPort),
       apiKey = str("api_key"),
       grpcEnabled = bool("grpc_enabled").getOrElse(d.grpcEnabled),
-      grpcPort = num("grpc_port").map(_.toInt).getOrElse(d.grpcPort),
+      grpcPort = num("grpc_port").map(_.intValue).getOrElse(d.grpcPort),
       backgroundOnClose = bool("background_on_close").getOrElse(d.backgroundOnClose),
-      maxResultRows = num("max_result_rows").map(_.toLong))
+      maxResultRows = num("max_result_rows").map(_.longValue))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the tail-survivability contract of the bench artifact line.
@@ -36,6 +37,10 @@ class BenchLineSpec extends AnyFunSuite {
     assert(line.contains("\"queries\":{"))
     assert(line.contains("\"cold\":{"))
     names.foreach(n => assert(line.contains("\"" + n + "\":")))
+    // the sf path is escaped like any other JSON string
+    val odd = """/tmp/sf "q" \x"""
+    val parsed = new ObjectMapper().readTree(Bench.renderLine(warm, cold, odd))
+    assert(parsed.get("sf").textValue == odd)
   }
 
   test("failed queries (-1 sentinel) are excluded from totals and top-10 but counted") {

@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.HttpApi
+import graft.api.{EngineBroker, HttpApi}
 import graft.engine.GraphSession
 
 /** Drives the reference's POST /api/query contract over a real socket
@@ -22,7 +22,8 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("http_query_roundtrip_and_errors") {
     val logDir = java.nio.file.Files.createTempDirectory("graft_api_logs").toString
-    val api = new HttpApi(new GraphSession(spark), logDir = Some(logDir))
+    val broker = new EngineBroker(new GraphSession(spark), Some(logDir))
+    val api = new HttpApi(broker)
     val port = api.start()
     try {
       val c1 = post(port, """{"query": "CREATE NODE Person {name:\"Ada\"};"}""")
@@ -46,16 +47,17 @@ class HttpApiSpec extends AnyFunSuite {
       val logs = new java.io.File(logDir).listFiles().map(_.getName).toSeq
       assert(logs.exists(_.startsWith("api_")))
       assert(logs.exists(_.startsWith("queries_")))
-    } finally api.stop()
+    } finally { api.stop(); broker.stop() }
   }
 
   test("http_transport_survives_fuzzed_bodies") {
     // every body — valid, mutated, truncated, raw garbage — must get
-    // AN HTTP STATUS back (the hand-rolled top-level JSON scanner and
-    // the engine both fail typed), and the server must still answer a
-    // healthy request afterwards. A hang or connection reset here is a
-    // parser hole a public endpoint would be hammered with.
-    val api = new HttpApi(new GraphSession(spark))
+    // AN HTTP STATUS back (Jackson's body parse and the engine both
+    // fail typed), and the server must still answer a healthy request
+    // afterwards. A hang or connection reset here is a parser hole a
+    // public endpoint would be hammered with.
+    val broker = new EngineBroker(new GraphSession(spark))
+    val api = new HttpApi(broker)
     val port = api.start()
     try {
       val rnd = new scala.util.Random(7L)
@@ -87,16 +89,17 @@ class HttpApiSpec extends AnyFunSuite {
       // liveness probe must be a statement the grammar accepts: a
       // leading RETURN is a parse error like the reference
       assert(post(port, """{"query": "CREATE (n:Ping {k:'alive'}) RETURN n"}""").statusCode() == 200)
-    } finally api.stop()
+    } finally { api.stop(); broker.stop() }
   }
 
-  // top-level scan, not regex probes: a "query" key nested inside
+  // the body is read as a JSON tree: a "query" key nested inside
   // params must not shadow the real statement (JSON key order is
   // client-controlled), and escaped quotes/backslashes in param values
   // must survive into the parameter map instead of being dropped
   test("http_body_parse_is_top_level_and_escape_aware") {
     val session = new GraphSession(spark)
-    val api = new HttpApi(session)
+    val broker = new EngineBroker(session)
+    val api = new HttpApi(broker)
     val port = api.start()
     try {
       session.execute("""CREATE (:Person {name: 'O"Brien'})""")
@@ -106,26 +109,44 @@ class HttpApiSpec extends AnyFunSuite {
           """ "query": "MATCH (p:Person {name: $who}) RETURN p"}""")
       assert(r.statusCode() == 200)
       assert(r.body().contains("Brien"), "escaped param value must resolve")
+      // a number-valued param is dropped; the string one beside it resolves
+      val num = post(port,
+        """{"query": "MATCH (p:Person {name: $who}) RETURN p",""" +
+          """ "params": {"n": 5, "who": "O\"Brien"}}""")
+      assert(num.statusCode() == 200 && num.body().contains("Brien"))
+      // a unicode escape in a param value decodes to its character
+      session.execute("CREATE (:Person {name: 'Jos\u00e9'})")
+      val uni = post(port,
+        """{"query": "MATCH (p:Person {name: $who}) RETURN p",""" +
+          """ "params": {"who": "Jos""" + "\\u00e9\"}}")
+      assert(uni.statusCode() == 200 && uni.body().contains("Jos\u00e9"))
+      // truncated or trailed bodies are malformed, not answered best-effort
+      for (b <- Seq("""{"query": "MATCH (p:Person) RETURN p"""",
+          """{"query": "MATCH (p:Person) RETURN p"} x""")) {
+        val cut = post(port, b)
+        assert(cut.statusCode() == 400 && cut.body() == "malformed request body", b)
+      }
       // broker restart: stop() then start() must serve again (a
       // terminated Thread can't be start()ed twice)
-      api.broker.stop()
-      api.broker.start()
+      broker.stop()
+      broker.start()
       val r2 = post(port, """{"query": "MATCH (p:Person) RETURN p"}""")
       assert(r2.statusCode() == 200)
       // oversized body rejected instead of buffered
       val big = "x" * (9 * 1024 * 1024)
       val r3 = post(port, s"""{"query": "$big"}""")
       assert(r3.statusCode() == 413)
-    } finally api.stop()
+    } finally { api.stop(); broker.stop() }
   }
 
   test("http_api_key_enforced") {
-    val api = new HttpApi(new GraphSession(spark), apiKey = Some("sekret"))
+    val broker = new EngineBroker(new GraphSession(spark))
+    val api = new HttpApi(broker, apiKey = Some("sekret"))
     val port = api.start()
     try {
       assert(post(port, """{"query": "MATCH NODE Person;"}""").statusCode() == 401)
       assert(post(port, """{"query": "MATCH NODE Person;"}""",
         key = Some("sekret")).statusCode() == 200)
-    } finally api.stop()
+    } finally { api.stop(); broker.stop() }
   }
 }

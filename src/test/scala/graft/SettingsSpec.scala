@@ -59,6 +59,8 @@ class SettingsSpec extends AnyFunSuite {
     AppSettings.save(s, Some(p))
     assert(AppSettings.load(Some(p)) == s)
     assert(AppSettings.parse("""{"max_result_rows": null}""").maxResultRows.isEmpty)
+    // \b and \f are JSON escapes for backspace and form feed, not letters
+    assert(AppSettings.parse("""{"api_key": "a\bb\fc"}""").apiKey.contains("a\bb\fc"))
   }
 
   test("missing_or_corrupt_file_yields_defaults") {
