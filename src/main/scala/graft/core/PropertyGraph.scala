@@ -27,6 +27,15 @@ case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
   def materialized: PropertyGraph =
     PropertyGraph(nodes.graftCheckpoint(), edges.graftCheckpoint())
 
+  /** Commit a mutation that changed only the node table: the new nodes
+    * are materialized, the unchanged edge table is kept as it is. */
+  def commitNodes(newNodes: DataFrame): PropertyGraph =
+    PropertyGraph(newNodes.graftCheckpoint(), edges)
+
+  /** Commit a mutation that changed only the edge table. */
+  def commitEdges(newEdges: DataFrame): PropertyGraph =
+    PropertyGraph(nodes, newEdges.graftCheckpoint())
+
   /** Referential integrity of edges (graph.rs:58-65): both endpoints
     * must exist. Returns edges that violate it. */
   def danglingEdges: DataFrame = {

@@ -33,11 +33,16 @@ case class QueryOutcome(rows: Seq[ResultRow], affectedNodes: Long,
   *
   * The binding table (reference: `Vec<HashMap<String,Val>>`,
   * cypher_spec.rs:751-753) is a DataFrame with one STRING id column per
-  * bound variable; variable kinds (node vs relationship) are tracked
-  * driver-side since they are static per statement. MATCH = joins,
-  * WHERE = filters, mutations = anti-join/union set operations — every
-  * step distributed; the driver only sequences clauses (mirroring the
-  * reference's single engine thread, §3 of SURVEY.md).
+  * bound variable. A node variable bound by a node scan also carries
+  * that row's label and properties (`<v>__label`, `<v>__props`), so
+  * reads project from the rows their MATCH scanned instead of joining
+  * the node table again; relationship steps join the bound frontier to
+  * the edges before they filter the far endpoint. Variable kinds (node
+  * vs relationship) are tracked driver-side since they are static per
+  * statement. MATCH = joins, WHERE = filters, mutations = anti-join/
+  * union set operations — every step distributed; the driver only
+  * sequences clauses (mirroring the reference's single engine thread,
+  * §3 of SURVEY.md).
   */
 class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
 
@@ -60,6 +65,12 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
       params.getOrElse(name, throw ParseException(s"Missing parameter: $$$name"))
   }
 
+  /** A pattern value as written: `$name` for a parameter. */
+  private def rawText(v: PropValue): String = v match {
+    case PropValue.Lit(s) => s
+    case PropValue.Param(name) => "$" + name
+  }
+
   /** Pattern / CREATE / MERGE prop-value resolution — the reference's
     * resolve_param (cypher_spec.rs:738-746) applied to parse_props
     * output (cypher_spec.rs:94-104): quotes are stripped at parse, so
@@ -73,10 +84,7 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     // quoted value's trailing U+2029/U+00A0 strips there while
     // 0x1C-0x1F (Java-trimmed, not Rust-ws) survive — probed r11,
     // found by MutFuzz seed 38: {g:'g2\u2029'} matches g=g2.
-    val t = Parser.rustTrim(v match {
-      case PropValue.Lit(s) => s
-      case PropValue.Param(name) => "$" + name
-    })
+    val t = Parser.rustTrim(rawText(v))
     if (t.startsWith("$")) {
       val key = t.substring(1)
       params.getOrElse(key, throw ParseException(s"Missing parameter: $$$key"))
@@ -94,68 +102,102 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
 
   /** True when resolving `v` would raise Missing parameter. */
   private def isMissingParam(v: PropValue): Boolean = {
-    val t = Parser.rustTrim(v match {
-      case PropValue.Lit(s) => s
-      case PropValue.Param(name) => "$" + name
-    })
+    val t = Parser.rustTrim(rawText(v))
     t.startsWith("$") && !params.contains(t.substring(1))
   }
 
   private def missingParamError(v: PropValue): Nothing = {
-    val t = Parser.rustTrim(v match {
-      case PropValue.Lit(s) => s
-      case PropValue.Param(name) => "$" + name
-    })
+    val t = Parser.rustTrim(rawText(v))
     throw ParseException(s"Missing parameter: $$${t.substring(1)}")
   }
+
+  /** Label (or type) and property test of a pattern over a row's
+    * label and properties columns, one conjunction; None when the
+    * pattern constrains nothing. `value` renders a pattern value. */
+  private def patternTest(label: Option[String], props: Map[String, PropValue],
+      labelC: Column, propsC: Column, value: PropValue => String): Option[Column] =
+    (label.map(labelC === _).toSeq ++
+      props.map { case (k, v) => propsC(k) === value(v) }).reduceOption(_ && _)
 
   /** Missing-param errors are LAZY in the reference: resolve_param runs
     * per candidate inside the scan loop (cypher_spec.rs:774-776 nodes,
     * 890-892 rel props), so when nothing reaches the check the
     * statement succeeds with zero rows. Emulated by testing the
     * resolvable-prop candidate set for emptiness before raising. */
-  private def lazyParamFilter(base: DataFrame,
+  private def lazyParamFilter(base: DataFrame, label: Option[String],
       props: Map[String, PropValue]): DataFrame = {
+    def filtered(ps: Map[String, PropValue]): DataFrame =
+      patternTest(label, ps, col("label"), col("properties"), resolvePropValue)
+        .fold(base)(base.filter)
     props.collectFirst { case (_, v) if isMissingParam(v) => v } match {
       case Some(bad) =>
-        val cand = props.filterNot(p => isMissingParam(p._2)).foldLeft(base) {
-          case (d, (k, v)) => d.filter(col("properties")(k) === resolvePropValue(v))
-        }
-        if (cand.limit(1).count() > 0) missingParamError(bad)
+        if (filtered(props.filterNot(p => isMissingParam(p._2))).limit(1).count() > 0)
+          missingParamError(bad)
         base.limit(0)
-      case None =>
-        props.foldLeft(base) { case (d, (k, v)) =>
-          d.filter(col("properties")(k) === resolvePropValue(v))
-        }
+      case None => filtered(props)
     }
   }
 
   private def filterNodes(nodes: DataFrame, label: Option[String],
-      props: Map[String, PropValue]): DataFrame =
-    lazyParamFilter(
-      label.map(lb => nodes.filter(col("label") === lb)).getOrElse(nodes), props)
+      props: Map[String, PropValue]): DataFrame = lazyParamFilter(nodes, label, props)
 
   private def filterEdges(edges: DataFrame, typ: Option[String],
-      props: Map[String, PropValue]): DataFrame =
-    lazyParamFilter(
-      typ.map(t => edges.filter(col("label") === t)).getOrElse(edges), props)
+      props: Map[String, PropValue]): DataFrame = lazyParamFilter(edges, typ, props)
 
-  /** Endpoint-node filter for relationship steps: `$param` props are NOT
-    * resolved — the reference's triple-enumeration endpoint check
-    * compares the raw pattern text (cypher_spec.rs:903-905), exactly
-    * like var-length endpoints (cypher_spec.rs:806-810). Only node-ONLY
-    * patterns resolve params (cypher_spec.rs:775). */
-  private def filterNodesRawParams(nodes: DataFrame, label: Option[String],
-      props: Map[String, PropValue]): DataFrame = {
-    val l = label.map(lb => nodes.filter(col("label") === lb)).getOrElse(nodes)
-    props.foldLeft(l) { case (d, (k, v)) =>
-      val raw = v match {
-        case PropValue.Lit(s) => s
-        case PropValue.Param(name) => "$" + name
-      }
-      d.filter(col("properties")(k) === raw)
-    }
+  /** Endpoint-node test for relationship steps over a label and a
+    * properties column: `$param` props are NOT resolved — the
+    * reference's triple-enumeration endpoint check compares the raw
+    * pattern text (cypher_spec.rs:903-905), exactly like var-length
+    * endpoints (cypher_spec.rs:806-810). Only node-ONLY patterns
+    * resolve params (cypher_spec.rs:775). */
+  private def endpointTest(np: NodePattern, label: Column, props: Column): Option[Column] =
+    patternTest(np.label, np.props, label, props, rawText)
+
+  private def constrained(np: NodePattern): Boolean =
+    np.label.nonEmpty || np.props.nonEmpty
+
+  private def filterNodesRawParams(nodes: DataFrame, np: NodePattern): DataFrame =
+    endpointTest(np, col("label"), col("properties")).fold(nodes)(nodes.filter)
+
+  // ------------------------------------------------------ carried columns
+  //
+  // A node variable bound by a node scan carries that row's label and
+  // properties as `<v>__label` / `<v>__props` beside its id column, so
+  // WHERE, ORDER BY and RETURN read them without a lookup join. A
+  // variable bound without a scan (an unconstrained endpoint, a CREATE)
+  // gets them from a left join against the current graph on first use
+  // ([[withNode]]); a dangling id then carries nulls, which every reader
+  // treats as "no such node". Mutations drop every carried column, so a
+  // read after a write looks the CURRENT graph up again (T6).
+
+  private def labelCol(v: String): String = s"${v}__label"
+  private def propsCol(v: String): String = s"${v}__props"
+
+  private def carries(b: DataFrame, v: String): Boolean = b.columns.contains(propsCol(v))
+
+  /** Node-table projection binding `v` to `idAs` with its carried
+    * columns (none for a hidden variable, which nothing reads). */
+  private def nodeCols(v: String, idAs: String): Seq[Column] =
+    if (hidden.contains(v)) Seq(col("id").as(idAs))
+    else Seq(col("id").as(idAs), col("label").as(labelCol(v)),
+      col("properties").as(propsCol(v)))
+
+  private def withNode(g: PropertyGraph, b: DataFrame, v: String): DataFrame =
+    if (carries(b, v)) b
+    else b.join(g.nodes.select(col("id").as(s"${v}__pid"), col("label").as(labelCol(v)),
+      col("properties").as(propsCol(v))), vcol(v) === vcol(s"${v}__pid"), "left")
+      .drop(vcol(s"${v}__pid"))
+
+  private def dropCarried(b: DataFrame): DataFrame = {
+    val carried = b.columns.filter(c => c.endsWith("__label") || c.endsWith("__props"))
+    if (carried.isEmpty) b else b.drop(carried.toSeq: _*)
   }
+
+  /** A statement starts from the unit binding (one row, no variables),
+    * held as null until a clause needs it as a frame: the first scan
+    * replaces it instead of cross-joining it. */
+  private def crossBinding(b: DataFrame, rows: DataFrame): DataFrame =
+    if (b == null) rows else b.crossJoin(rows)
 
   // ---------------------------------------------------------------- MATCH
 
@@ -179,14 +221,14 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     np.variable match {
       case Some(v) if kinds.contains(v) =>
         // variable-binding consistency (J3): re-filter existing binding
-        val cand = filterNodes(g.nodes, np.label, np.props)
-          .select(col("id").as("__cand"))
-        binding.join(cand, vcol(v) === col("__cand")).drop("__cand")
+        if (carries(binding, v) && !np.props.values.exists(isMissingParam))
+          binding.filter(vcol(labelCol(v)).isNotNull && patternTest(np.label, np.props,
+            vcol(labelCol(v)), vcol(propsCol(v)), resolvePropValue).getOrElse(lit(true)))
+        else joinBound(binding, v, filterNodes(g.nodes, np.label, np.props))
       case other =>
         val v = other.getOrElse { val a = freshAnon(); hidden += a; a }
         kinds(v) = NodeKind
-        val cand = filterNodes(g.nodes, np.label, np.props).select(col("id").as(v))
-        binding.crossJoin(cand)
+        crossBinding(binding, filterNodes(g.nodes, np.label, np.props).select(nodeCols(v, v): _*))
     }
   }
 
@@ -201,28 +243,31 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     val rv = npR.variable.getOrElse { val a = freshAnon(); hidden += a; a }
     val relv = rp.variable.getOrElse { val a = freshAnon(); hidden += a; a }
 
+    // The binding drives the edge join (Pregelix's rule for a sparse
+    // frontier): a constrained, unbound left endpoint is bound from a
+    // node scan first, and endpoint filters on bound variables run on
+    // the binding side before the join. Raw-param endpoint matching
+    // per cypher_spec.rs:903-905.
+    var b = binding
+    if (constrained(npL)) {
+      if (!kinds.contains(lv)) {
+        b = crossBinding(b, filterNodesRawParams(g.nodes, npL).select(nodeCols(lv, lv): _*))
+        kinds(lv) = NodeKind
+      } else b = constrainBound(g, b, lv, npL)
+    }
+    if (constrained(npR) && kinds.contains(rv)) b = constrainBound(g, b, rv, npR)
+
     val e0 = filterEdges(g.edges, rp.relType, rp.props)
-      .select(col("id").as("__rid"), col("src").as("__src"), col("dst").as("__dst"))
     // orientations: (leftEndpointCol, rightEndpointCol)
     val orients: Seq[DataFrame] = rp.direction match {
-      case Direction.Out  => Seq(e0.select(col("__rid"), col("__src").as("__l"), col("__dst").as("__r")))
+      case Direction.Out  => Seq(e0.select(col("id").as("__rid"), col("src").as("__l"), col("dst").as("__r")))
       case Direction.Both => Seq(
-        e0.select(col("__rid"), col("__src").as("__l"), col("__dst").as("__r")),
-        e0.select(col("__rid"), col("__dst").as("__l"), col("__src").as("__r")))
+        e0.select(col("id").as("__rid"), col("src").as("__l"), col("dst").as("__r")),
+        e0.select(col("id").as("__rid"), col("dst").as("__l"), col("src").as("__r")))
     }
 
-    def expand(b: DataFrame, eo0: DataFrame): DataFrame = {
+    def expand(eo0: DataFrame): DataFrame = {
       var eo = eo0
-      // endpoint label/prop constraints applied to the edge candidate
-      // set; raw-param matching per cypher_spec.rs:903-905
-      if (npL.label.nonEmpty || npL.props.nonEmpty) {
-        val nl = filterNodesRawParams(g.nodes, npL.label, npL.props).select(col("id").as("__l"))
-        eo = eo.join(nl, "__l")
-      }
-      if (npR.label.nonEmpty || npR.props.nonEmpty) {
-        val nr = filterNodesRawParams(g.nodes, npR.label, npR.props).select(col("id").as("__r"))
-        eo = eo.join(nr, "__r")
-      }
       // shared-variable collisions WITHIN the pattern (the reference
       // inserts the left binding, then checks the right endpoint
       // against it, cypher_spec.rs:925-936): the same unbound variable
@@ -232,27 +277,56 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
       if (lv == rv && !kinds.contains(lv)) eo = eo.filter(col("__l") === col("__r"))
       if (relv == lv && !kinds.contains(relv)) eo = eo.filter(col("__rid") === col("__l"))
       if (relv == rv && !kinds.contains(relv)) eo = eo.filter(col("__rid") === col("__r"))
+      // an unbound right endpoint binds from the node scan it is
+      // checked against, after the frontier join
+      val nr =
+        if (constrained(npR) && !kinds.contains(rv))
+          Some(filterNodesRawParams(g.nodes, npR).select(nodeCols(rv, "__nr"): _*))
+        else None
       val conds = mutable.Buffer.empty[Column]
       if (kinds.contains(lv)) conds += vcol(lv) === col("__l")
       if (kinds.contains(rv)) conds += vcol(rv) === col("__r")
       if (kinds.contains(relv)) conds += vcol(relv) === col("__rid")
-      val joined =
-        if (conds.isEmpty) b.crossJoin(eo)
-        else b.join(eo, conds.reduce(_ && _))
-      var out = joined
-      if (!kinds.contains(lv)) out = out.withColumn(lv, col("__l"))
-      if (!kinds.contains(rv) && rv != lv) out = out.withColumn(rv, col("__r"))
-      if (!kinds.contains(relv) && relv != lv && relv != rv)
-        out = out.withColumn(relv, col("__rid"))
-      out.drop("__rid", "__l", "__r")
+      val out =
+        if (conds.isEmpty) {
+          // nothing bound: filter the edges before crossing them in
+          crossBinding(b, nr.fold(eo)(n => eo.join(n, col("__r") === col("__nr"))))
+        } else {
+          val joined = b.join(eo, conds.reduce(_ && _))
+          nr.fold(joined)(n => joined.join(n, col("__r") === col("__nr")))
+        }
+      val bound = mutable.Buffer.empty[Column]
+      if (!kinds.contains(lv)) bound += col("__l").as(lv)
+      if (!kinds.contains(rv) && rv != lv) bound += col("__r").as(rv)
+      if (!kinds.contains(relv) && relv != lv && relv != rv) bound += col("__rid").as(relv)
+      val scratch = Set("__rid", "__l", "__r", "__nr")
+      out.select(out.columns.filterNot(scratch).map(vcol).toSeq ++ bound: _*)
     }
 
-    val parts = orients.map(eo => expand(binding, eo))
+    val parts = orients.map(expand)
     val res = parts.reduce(_ unionByName _)
     if (!kinds.contains(lv)) kinds(lv) = NodeKind
     if (!kinds.contains(rv)) kinds(rv) = NodeKind
     if (!kinds.contains(relv)) kinds(relv) = RelKind
     res
+  }
+
+  /** Keeps the rows whose bound variable `v` passes endpoint pattern
+    * `np`: on its carried columns when it has them, else by a join
+    * against the node table. */
+  private def constrainBound(g: PropertyGraph, b: DataFrame, v: String,
+      np: NodePattern): DataFrame =
+    if (carries(b, v)) b.filter(endpointTest(np, vcol(labelCol(v)), vcol(propsCol(v))).get)
+    else joinBound(b, v, filterNodesRawParams(g.nodes, np))
+
+  /** Keeps the rows whose bound variable `v` names a row of `cand`, a
+    * filtered node table; a node variable without carried columns takes
+    * them from the join. A relationship variable never passes (node and
+    * rel ids are disjoint namespaces). */
+  private def joinBound(b: DataFrame, v: String, cand: DataFrame): DataFrame = {
+    val cols =
+      if (kinds(v) == NodeKind && !carries(b, v)) nodeCols(v, "__cid") else Seq(col("id").as("__cid"))
+    b.join(cand.select(cols: _*), vcol(v) === col("__cid")).drop("__cid")
   }
 
   /** Variable-length path (J5): BFS with min-depth-only semantics
@@ -284,22 +358,16 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
 
     // param props in var-length endpoints are NOT resolved (reference
     // falls back to exact-string matching of the raw "$name" text,
-    // cypher_spec.rs:806-810) — same rule as single-hop endpoints
-    def filterNodesRaw(label: Option[String], props: Map[String, PropValue]): DataFrame =
-      filterNodesRawParams(g.nodes, label, props)
-
-    // bound left endpoints are still re-filtered by the left node
+    // cypher_spec.rs:806-810) — same rule as single-hop endpoints.
+    // Bound left endpoints are still re-filtered by the left node
     // pattern (the reference applies node_ok over left_ids before the
     // BFS, cypher_spec.rs:818-831): rows whose bound node fails the
     // pattern are dropped by the final inner join on the pairs
     val sources: DataFrame =
       (if (kinds.contains(lv)) {
-        val b0 = binding.select(vcol(lv).as("__s")).distinct()
-        if (npL.label.nonEmpty || npL.props.nonEmpty)
-          b0.join(filterNodesRaw(npL.label, npL.props).select(col("id").as("__s")),
-            Seq("__s"), "left_semi")
-        else b0
-      } else filterNodesRaw(npL.label, npL.props).select(col("id").as("__s")))
+        val b0 = if (constrained(npL)) constrainBound(g, binding, lv, npL) else binding
+        b0.select(vcol(lv).as("__s")).distinct()
+      } else filterNodesRawParams(g.nodes, npL).select(col("id").as("__s")))
         .graftCheckpoint()
 
     var frontier = sources.select(col("__s"), col("__s").as("__c"))
@@ -314,18 +382,19 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
         .distinct()
         .join(visited, Seq("__s", "__c"), "left_anti")
         .graftCheckpoint()
-      visited = visited.unionByName(frontier).graftCheckpoint()
+      // the last level is never read back, so it is not added
+      if (depth < mx) visited = visited.unionByName(frontier).graftCheckpoint()
       if (depth >= mn) {
         results = if (results == null) frontier else results.unionByName(frontier)
       }
     }
     if (results == null) results = frontier.limit(0)
-    // right endpoint constraints
+    // right endpoint constraints; a constrained target carries the
+    // node row it was checked against
     var pairs = results.select(col("__s").as("__l"), col("__c").as("__r")).distinct()
-    if (npR.label.nonEmpty || npR.props.nonEmpty) {
-      val nr = filterNodesRaw(npR.label, npR.props).select(col("id").as("__r"))
-      pairs = pairs.join(nr, "__r")
-    }
+    if (constrained(npR))
+      pairs = pairs.join(filterNodesRawParams(g.nodes, npR).select(nodeCols(rv, "__nr"): _*),
+        col("__r") === col("__nr")).drop("__nr")
     // UNLIKE single-hop steps, the right endpoint var is never
     // consistency-checked: the reference inserts it unconditionally
     // into the row, overwriting any earlier binding
@@ -338,9 +407,13 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     // (for a shared bound var this checks the OLD value; the overwrite
     // below then rebinds it to the target)
     if (kinds.contains(lv)) conds += vcol(lv) === col("__l")
+    // the rebound right variable's old carried columns go with its old id
+    val base =
+      if (binding != null && carries(binding, rv)) binding.drop(labelCol(rv), propsCol(rv))
+      else binding
     val joined =
-      if (conds.isEmpty) binding.crossJoin(pairs)
-      else binding.join(pairs, conds.reduce(_ && _))
+      if (conds.isEmpty) crossBinding(base, pairs)
+      else base.join(pairs, conds.reduce(_ && _))
     var out = joined
     if (!kinds.contains(lv) && lv != rv) out = out.withColumn(lv, col("__l"))
     out = out.withColumn(rv, col("__r"))
@@ -352,7 +425,6 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
 
   // ---------------------------------------------------------------- WHERE
 
-  /** Attach `<v>__props` helper column via left join (node vars only). */
   /** Column reference for a USER-supplied variable name (or a name
     * derived from one). The reference accepts any character run as a
     * pattern variable — `.a`, `a.`, `.` all bind fine (probed against
@@ -363,13 +435,6 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     * need no quoting. */
   private def vcol(name: String): Column =
     col("`" + name.replace("`", "``") + "`")
-
-  private def withProps(g: PropertyGraph, b: DataFrame, v: String): DataFrame = {
-    if (b.columns.contains(s"${v}__props")) b
-    else b.join(
-      g.nodes.select(col("id").as(s"${v}__pid"), col("properties").as(s"${v}__props")),
-      vcol(v) === vcol(s"${v}__pid"), "left").drop(vcol(s"${v}__pid"))
-  }
 
   private def collectCapped(b: DataFrame): Array[org.apache.spark.sql.Row] =
     CypherExecutor.collectCapped(spark, b)
@@ -404,97 +469,112 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     // space, once, at the boundary (see CypherExecutor.nm)
     val stmt = CypherExecutor.mangleVars(stmt0)
     var g = g0
-    var binding: DataFrame = spark.range(1).select(lit(0).as("__seed"))
+    var binding: DataFrame = null
     val statementMs = System.currentTimeMillis()
 
     def visibleVars: Seq[String] = kinds.keys.filterNot(hidden.contains).toSeq.sorted
 
-    for (clause <- stmt.clauses) clause match {
-      case Clause.Match(paths, _optional) =>
-        // OPTIONAL MATCH is parsed but behaves as MATCH (T7,
-        // cypher_spec.rs:338-339 — the optional flag is never read)
-        paths.foreach { p => binding = matchPath(g, binding, p) }
+    for (clause <- stmt.clauses) {
+      if (binding == null && !clause.isInstanceOf[Clause.Match])
+        binding = spark.range(1).select(lit(0).as("__seed"))
+      clause match {
+        case Clause.Match(paths, _optional) =>
+          // OPTIONAL MATCH is parsed but behaves as MATCH (T7,
+          // cypher_spec.rs:338-339 — the optional flag is never read)
+          paths.foreach { p => binding = matchPath(g, binding, p) }
 
-      case Clause.Where(conds) =>
-        binding = applyWhere(g, binding, conds)
+        case Clause.Where(conds) =>
+          binding = applyWhere(g, binding, conds)
 
-      case Clause.With(items, _distinct, orderBy, skip, limit) =>
-        // projects to the listed *variables* only; prop/id items dropped
-        // (O4, cypher_spec.rs:1181-1186); WITH DISTINCT parsed+ignored
-        val keep = items.collect { case Expr.Var(v) if kinds.contains(v) => v }
-        val (sorted, _) = applyOrder(g, binding, orderBy)
-        var b = applyPage(
-          sorted.select(keep.map(vcol) :+ lit(0).as("__seed"): _*), skip, limit)
-        val keepSet = keep.toSet
-        kinds.keys.toSeq.foreach { v => if (!keepSet.contains(v)) kinds.remove(v) }
-        binding = b
+        case Clause.With(items, _distinct, orderBy, skip, limit) =>
+          // projects to the listed *variables* only; prop/id items dropped
+          // (O4, cypher_spec.rs:1181-1186); WITH DISTINCT parsed+ignored.
+          // Kept variables keep their carried columns.
+          val keep = items.collect { case Expr.Var(v) if kinds.contains(v) => v }
+          val sorted = applyOrder(g, binding, orderBy)
+          val carried = keep.distinct.filter(carries(sorted, _))
+            .flatMap(v => Seq(vcol(labelCol(v)), vcol(propsCol(v))))
+          val b = applyPage(
+            sorted.select(keep.map(vcol) ++ carried :+ lit(0).as("__seed"): _*), skip, limit)
+          val keepSet = keep.toSet
+          kinds.keys.toSeq.foreach { v => if (!keepSet.contains(v)) kinds.remove(v) }
+          binding = b
 
-      case Clause.Create(paths) =>
-        val (b2, g2) = execCreate(g, binding, paths, statementMs)
-        binding = b2; g = g2
+        case Clause.Create(paths) =>
+          val (b2, g2) = execCreate(g, dropCarried(binding), paths, statementMs)
+          binding = b2; g = g2
 
-      case Clause.Merge(path) =>
-        val (b2, g2) = execMerge(g, binding, path, statementMs)
-        binding = b2; g = g2
+        case Clause.Merge(path) =>
+          val (b2, g2) = execMerge(g, dropCarried(binding), path, statementMs)
+          binding = b2; g = g2
 
-      case Clause.SetProp(v, key, value) =>
-        // SET values are stored as written — the reference's Set
-        // executor never calls resolve_param (cypher_spec.rs:1283-1292),
-        // so `SET n.p = $x` stores the literal text "$x"
-        val raw = value match {
-          case PropValue.Lit(s) => s
-          case PropValue.Param(name) => "$" + name
-        }
-        g = execSetProp(g, binding, v, key, raw)
+        case Clause.SetProp(v, key, value) =>
+          // SET values are stored as written — the reference's Set
+          // executor never calls resolve_param (cypher_spec.rs:1283-1292),
+          // so `SET n.p = $x` stores the literal text "$x"
+          binding = dropCarried(binding)
+          g = execSetProp(g, binding, v, key, rawText(value))
 
-      case Clause.SetLabel(v, label) =>
-        g = execSetLabel(g, binding, v, label)
+        case Clause.SetLabel(v, label) =>
+          binding = dropCarried(binding)
+          g = execSetLabel(g, binding, v, label)
 
-      case Clause.RemoveProp(v, key) =>
-        g = execRemoveProp(g, binding, v, key)
+        case Clause.RemoveProp(v, key) =>
+          binding = dropCarried(binding)
+          g = execRemoveProp(g, binding, v, key)
 
-      case Clause.Delete(vars, detach) =>
-        g = execDelete(g, binding, vars, detach)
+        case Clause.Delete(vars, detach) =>
+          binding = dropCarried(binding)
+          g = execDelete(g, binding, vars, detach)
 
-      case Clause.Return(items, distinct, orderBy, skip, limit) =>
-        return (execReturn(g, binding, items, distinct, orderBy, skip, limit), g)
+        case Clause.Return(items, distinct, orderBy, skip, limit) =>
+          return (execReturn(g, binding, items, distinct, orderBy, skip, limit), g)
+      }
     }
 
     // implicit return: all bound visible vars of every row (T6,
     // cypher_spec.rs:1520-1531), looked up against the CURRENT graph
     val rows = mutable.Buffer.empty[ResultRow]
-    if (visibleVars.nonEmpty) {
-      val nodeVars = visibleVars.filter(v => kinds(v) == NodeKind)
-      val relVars = visibleVars.filter(v => kinds(v) == RelKind)
-      var b = binding
-      nodeVars.foreach { v =>
-        b = b.join(g.nodes.select(col("id").as(s"${v}__id"), col("label").as(s"${v}__label"),
-          col("properties").as(s"${v}__props")), vcol(v) === vcol(s"${v}__id"), "left")
-      }
-      relVars.foreach { v =>
-        b = b.join(g.edges.select(col("id").as(s"${v}__id"), col("src").as(s"${v}__src"),
-          col("dst").as(s"${v}__dst"), col("label").as(s"${v}__label"),
-          col("properties").as(s"${v}__props")), vcol(v) === vcol(s"${v}__id"), "left")
-      }
-      val collected = collectCapped(b)
-      collected.foreach { row =>
-        visibleVars.foreach { v =>
-          if (row.getAs[String](s"${v}__id") != null) {
-            if (kinds(v) == NodeKind)
-              rows += ResultRow.node(row.getAs[String](s"${v}__id"),
-                row.getAs[String](s"${v}__label"),
-                Option(row.getAs[Map[String, String]](s"${v}__props")).getOrElse(Map.empty))
-            else
-              rows += ResultRow.rel(row.getAs[String](s"${v}__id"),
-                row.getAs[String](s"${v}__src"), row.getAs[String](s"${v}__dst"),
-                row.getAs[String](s"${v}__label"),
-                Option(row.getAs[Map[String, String]](s"${v}__props")).getOrElse(Map.empty))
-          }
+    val vars = visibleVars
+    if (vars.nonEmpty) {
+      val prefixes = vars.indices.map(i => s"__v$i")
+      val b = vars.zip(prefixes).foldLeft(binding) { case (d, (v, p)) => lookup(g, d, v, p) }
+      collectCapped(b.select(vars.zip(prefixes).flatMap { case (v, p) => entityCols(v, p) }: _*))
+        .foreach { row =>
+          vars.zip(prefixes).foreach { case (v, p) => rows ++= entityRow(row, kinds(v), p) }
         }
-      }
     }
     (rows.toSeq, g)
   }
+
+  /** Joins what reading bound variable `v` needs: the node table for a
+    * node variable without carried columns ([[withNode]]), the edge
+    * table (as `<p>_*` columns) for a relationship variable. */
+  private def lookup(g: PropertyGraph, b: DataFrame, v: String, p: String): DataFrame =
+    kinds(v) match {
+      case NodeKind => withNode(g, b, v)
+      case RelKind =>
+        b.join(g.edges.select(col("id").as(s"${p}_id"), col("src").as(s"${p}_src"),
+          col("dst").as(s"${p}_dst"), col("label").as(s"${p}_label"),
+          col("properties").as(s"${p}_props")), vcol(v) === col(s"${p}_id"), "left")
+    }
+
+  /** The `<p>_id`, `<p>_label`, `<p>_props` (plus `<p>_src`, `<p>_dst`
+    * for a relationship) columns describing `v` after [[lookup]];
+    * `<p>_id` is null when `v` names no entity of the current graph. */
+  private def entityCols(v: String, p: String): Seq[Column] = kinds(v) match {
+    case NodeKind => Seq(when(vcol(labelCol(v)).isNotNull, vcol(v)).as(s"${p}_id"),
+      vcol(labelCol(v)).as(s"${p}_label"), vcol(propsCol(v)).as(s"${p}_props"))
+    case RelKind => Seq("id", "src", "dst", "label", "props").map(c => col(s"${p}_$c"))
+  }
+
+  private def entityRow(row: Row, kind: Kind, p: String): Option[ResultRow] =
+    Option(row.getAs[String](s"${p}_id")).map { id =>
+      val props = Option(row.getAs[Map[String, String]](s"${p}_props")).getOrElse(Map.empty)
+      if (kind == NodeKind) ResultRow.node(id, row.getAs[String](s"${p}_label"), props)
+      else ResultRow.rel(id, row.getAs[String](s"${p}_src"), row.getAs[String](s"${p}_dst"),
+        row.getAs[String](s"${p}_label"), props)
+    }
 
   /** WHERE: AND-conjunction filter over the binding table.
     * Fidelity notes: rel-var property predicates drop the row (P10),
@@ -508,8 +588,8 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     def nodePropLhs(v: String, key: String): Option[Column] = {
       if (kinds.get(v).contains(RelKind) || !kinds.contains(v)) None
       else {
-        b = withProps(g, b, v)
-        Some(coalesce(vcol(s"${v}__props")(key), lit("")))
+        b = withNode(g, b, v)
+        Some(coalesce(vcol(propsCol(v))(key), lit("")))
       }
     }
 
@@ -572,7 +652,7 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
           filter = filter && nodePropLhs(v, key).map(_.endsWith(resolve(value))).getOrElse(lit(false))
       case Cond.Unknown(_) => ()
     }
-    b.filter(filter).drop(b.columns.filter(_.endsWith("__props")).toSeq: _*)
+    b.filter(filter)
   }
 
   // ------------------------------------------------------------ mutations
@@ -609,7 +689,7 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
         }
         val newNodes = PropertyGraph.nodesDf(spark,
           rows.map { case (_, id, label, props) => (id, label, props) })
-        g = PropertyGraph(g.nodes.unionByName(newNodes), g.edges).materialized
+        g = g.commitNodes(g.nodes.unionByName(newNodes))
         rows.foreach { case (np, id, _, _) =>
           np.variable.foreach { v =>
             binding = binding.withColumn(v, lit(id))
@@ -645,7 +725,7 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
             val newEdges = b2.select(col("__newrel").as("id"), vcol(lv).as("src"),
               vcol(rv).as("dst"), lit(typ).as("label"),
               propsLit(rel.props).as("properties"))
-            g = PropertyGraph(g.nodes, g.edges.unionByName(newEdges)).materialized
+            g = g.commitEdges(g.edges.unionByName(newEdges))
             binding = rel.variable match {
               case Some(rvn) =>
                 kinds(rvn) = RelKind
@@ -708,7 +788,7 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
       .select(col("id"), col("src"), col("dst"), lit(typ).as("label"),
         propsLit(rel.props).as("properties"))
 
-    val g = PropertyGraph(g0.nodes, g0.edges.unionByName(toCreate)).materialized
+    val g = g0.commitEdges(g0.edges.unionByName(toCreate))
 
     // bind rel var: existing rid or the created edge's id
     val created = toCreate.select(col("src").as("__csrc"), col("dst").as("__cdst"),
@@ -740,8 +820,8 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
             .otherwise(col("properties")))
         .drop("__tid")
     kinds(v) match {
-      case NodeKind => PropertyGraph(upd(g.nodes), g.edges).materialized
-      case RelKind  => PropertyGraph(g.nodes, upd(g.edges)).materialized
+      case NodeKind => g.commitNodes(upd(g.nodes))
+      case RelKind  => g.commitEdges(upd(g.edges))
     }
   }
 
@@ -755,8 +835,8 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
         .drop("__tid")
     // SET n:Label REPLACES the label (M5, cypher_spec.rs:1262-1274)
     kinds(v) match {
-      case NodeKind => PropertyGraph(upd(g.nodes), g.edges).materialized
-      case RelKind  => PropertyGraph(g.nodes, upd(g.edges)).materialized
+      case NodeKind => g.commitNodes(upd(g.nodes))
+      case RelKind  => g.commitEdges(upd(g.edges))
     }
   }
 
@@ -771,8 +851,8 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
             .otherwise(col("properties")))
         .drop("__tid")
     kinds(v) match {
-      case NodeKind => PropertyGraph(upd(g.nodes), g.edges).materialized
-      case RelKind  => PropertyGraph(g.nodes, upd(g.edges)).materialized
+      case NodeKind => g.commitNodes(upd(g.nodes))
+      case RelKind  => g.commitEdges(upd(g.edges))
     }
   }
 
@@ -810,165 +890,160 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
       edges = edges.join(nodeIds, col("src") === col("__tid"), "left_anti")
       edges = edges.join(nodeIds, col("dst") === col("__tid"), "left_anti")
     }
-    var nodes = g.nodes
-    if (nodeIds != null)
-      nodes = nodes.join(nodeIds, col("id") === col("__tid"), "left_anti")
-    PropertyGraph(nodes, edges).materialized
+    val nodes =
+      if (nodeIds == null) g.nodes
+      else g.nodes.join(nodeIds, col("id") === col("__tid"), "left_anti")
+    // commit only the tables that changed
+    (nodeIds != null, relIds != null || (nodeIds != null && detach)) match {
+      case (true, true) => PropertyGraph(nodes, edges).materialized
+      case (true, false) => g.commitNodes(nodes)
+      case (false, true) => g.commitEdges(edges)
+      case (false, false) => g
+    }
   }
 
   // -------------------------------------------------------------- RETURN
 
-  private def applyOrder(g: PropertyGraph, binding0: DataFrame,
-      orderBy: Seq[OrderKey]): (DataFrame, Seq[String]) = {
-    if (orderBy.isEmpty) return (binding0, Seq.empty)
+  /** The string sort key column `__ok<i>` of each ORDER BY item, and
+    * the binding with the node lookups those keys read. */
+  private def orderKeys(g: PropertyGraph, binding0: DataFrame,
+      orderBy: Seq[OrderKey]): (DataFrame, Seq[Column]) = {
     var b = binding0
-    val keyCols = mutable.Buffer.empty[String]
-    orderBy.zipWithIndex.foreach { case (OrderKey(e, _), i) =>
-      val kc = s"__ok$i"
-      e match {
-        case Expr.Var(v) if kinds.contains(v) =>
-          b = b.withColumn(kc, coalesce(vcol(v), lit("")))
-        case Expr.Id(v) if kinds.contains(v) =>
-          b = b.withColumn(kc, coalesce(vcol(v), lit("")))
+    val keys = orderBy.zipWithIndex.map { case (OrderKey(e, _), i) =>
+      val k = e match {
+        case Expr.Var(v) if kinds.contains(v) => coalesce(vcol(v), lit(""))
+        case Expr.Id(v) if kinds.contains(v) => coalesce(vcol(v), lit(""))
         case Expr.Prop(v, key) if kinds.get(v).contains(NodeKind) =>
-          b = withProps(g, b, v)
-          b = b.withColumn(kc, coalesce(vcol(s"${v}__props")(key), lit("")))
-        case Expr.StrLit(s) => b = b.withColumn(kc, lit(s))
-        case _ => b = b.withColumn(kc, lit(""))
+          b = withNode(g, b, v)
+          coalesce(vcol(propsCol(v))(key), lit(""))
+        case Expr.StrLit(s) => lit(s)
+        case _ => lit("")
       }
-      keyCols += kc
+      k.as(s"__ok$i")
     }
-    // numeric-when-both-parse else string, per PAIR (O1, cypher_spec.rs
-    // :1191-1209 / :1478-1497). A pairwise comparator is not a Spark sort
-    // key in general: a digit-initial non-numeric key ("1001?") string-
-    // interleaves BETWEEN numerics, and a sign/dot-initial numeric
-    // ("-5") string-compares below digit strings. But when neither shape
-    // is present — the overwhelmingly common case: keys are plain digit
-    // strings, "" (the missing-prop default), or non-digit-initial
-    // strings — the reference's order is exactly the three-bucket total
-    // order below: strings below "0" (incl. "" — string compare puts
-    // them FIRST ascending), then numerics by value, then strings above.
-    // One cheap probe job (pushed filter + limit 1) decides; keys with
-    // either shape fall back to a driver-side sort with the literal
-    // pairwise comparator, bounded by the same result cap that guards
-    // every ORDER BY surface (the reference materializes all rows too).
-    // Numeric detection mirrors Rust f64::from_str (no whitespace trim,
-    // which Spark's cast would otherwise do; inf/nan handled only on the
-    // exact path — the probe routes them there). The predicate, the
-    // bucketed sort keys, and the scalar pairwise compare live on
-    // [[CypherExecutor]] so OrderPathEquivalenceSpec can property-pin
-    // the two paths against each other.
-    val keyExact =
-      keyCols.map(kc => CypherExecutor.cycleCapable(col(kc))).reduce(_ || _)
-    val bucketedIsExact = b.filter(keyExact).limit(1).count() == 0
+    (b, keys)
+  }
 
-    if (bucketedIsExact) {
-      val sortExprs = orderBy.zipWithIndex.flatMap { case (OrderKey(_, asc), i) =>
-        CypherExecutor.bucketSortExprs(col(s"__ok$i"), asc)
+  // numeric-when-both-parse else string, per PAIR (O1, cypher_spec.rs
+  // :1191-1209 / :1478-1497). A pairwise comparator is not a Spark sort
+  // key in general: a digit-initial non-numeric key ("1001?") string-
+  // interleaves BETWEEN numerics, and a sign/dot-initial numeric
+  // ("-5") string-compares below digit strings. But when neither shape
+  // is present — the overwhelmingly common case: keys are plain digit
+  // strings, "" (the missing-prop default), or non-digit-initial
+  // strings — the reference's order is exactly the three-bucket total
+  // order of [[bucketedSort]]: strings below "0" (incl. "" — string
+  // compare puts them FIRST ascending), then numerics by value, then
+  // strings above. [[cycleFlag]] decides which path a key set takes:
+  // keys with either shape fall back to [[exactSort]], a driver-side
+  // sort with the literal pairwise comparator, bounded by the same
+  // result cap that guards every ORDER BY surface (the reference
+  // materializes all rows too). Numeric detection mirrors Rust
+  // f64::from_str (no whitespace trim, which Spark's cast would
+  // otherwise do; inf/nan handled only on the exact path — the flag
+  // routes them there). The predicate, the bucketed sort keys, and the
+  // scalar pairwise compare live on [[CypherExecutor]] so
+  // OrderPathEquivalenceSpec can property-pin the two paths against
+  // each other.
+
+  /** True on a row whose sort keys make the bucketed order inexact. */
+  private def cycleFlag(n: Int): Column =
+    (0 until n).map(i => CypherExecutor.cycleCapable(col(s"__ok$i"))).reduce(_ || _)
+
+  private def bucketedSort(b: DataFrame, orderBy: Seq[OrderKey]): DataFrame =
+    b.orderBy(orderBy.zipWithIndex.flatMap { case (OrderKey(_, asc), i) =>
+      CypherExecutor.bucketSortExprs(col(s"__ok$i"), asc)
+    }: _*)
+
+  /** Exact pairwise mirror, driver-side under the result cap. When the
+    * comparator is a strict total order on the key set, any correct
+    * sort yields the reference's unique order; when it has ties or
+    * cycles the reference's own output tracks its per-process HashMap
+    * iteration order and is irreproducible in principle. */
+  private def exactSort(b: DataFrame, orderBy: Seq[OrderKey]): DataFrame = {
+    val collected = collectCapped(b)
+    val keyIdx = orderBy.indices.map(i => b.schema.fieldIndex(s"__ok$i")).toArray
+    val ascs = orderBy.map(_.ascending).toArray
+    val cmp: (Row, Row) => Int = { (x, y) =>
+      var ord = 0
+      var i = 0
+      while (ord == 0 && i < keyIdx.length) {
+        val a = Option(x.getString(keyIdx(i))).getOrElse("")
+        val c = Option(y.getString(keyIdx(i))).getOrElse("")
+        val o0 = CypherExecutor.dualCompare(a, c)
+        ord = if (ascs(i)) o0 else -o0
+        i += 1
       }
-      (b.orderBy(sortExprs: _*), keyCols.toSeq)
-    } else {
-      // exact pairwise mirror, driver-side under the result cap. When
-      // the comparator is a strict total order on the key set, any
-      // correct sort yields the reference's unique order; when it has
-      // ties or cycles the reference's own output tracks its per-process
-      // HashMap iteration order and is irreproducible in principle.
-      val collected = collectCapped(b)
-      val keyIdx = keyCols.map(b.schema.fieldIndex(_)).toArray
-      val ascs = orderBy.map(_.ascending).toArray
-      val cmp: (Row, Row) => Int = { (x, y) =>
-        var ord = 0
-        var i = 0
-        while (ord == 0 && i < keyIdx.length) {
-          val a = Option(x.getString(keyIdx(i))).getOrElse("")
-          val c = Option(y.getString(keyIdx(i))).getOrElse("")
-          val o0 = CypherExecutor.dualCompare(a, c)
-          ord = if (ascs(i)) o0 else -o0
-          i += 1
-        }
-        ord
-      }
-      val sorted = CypherExecutor.stableMergeSort(collected, cmp)
-      val df = spark.createDataFrame(
-        java.util.Arrays.asList(sorted: _*), b.schema)
-      (df, keyCols.toSeq)
+      ord
     }
+    val sorted = CypherExecutor.stableMergeSort(collected, cmp)
+    spark.createDataFrame(java.util.Arrays.asList(sorted: _*), b.schema)
+  }
+
+  /** WITH's ORDER BY: the binding stays a frame, so one probe job over
+    * the keys picks the path up front. */
+  private def applyOrder(g: PropertyGraph, binding0: DataFrame,
+      orderBy: Seq[OrderKey]): DataFrame = {
+    if (orderBy.isEmpty) return binding0
+    val (b0, keys) = orderKeys(g, binding0, orderBy)
+    val b = b0.select(col("*") +: keys: _*)
+    if (b.filter(cycleFlag(keys.size)).limit(1).count() == 0) bucketedSort(b, orderBy)
+    else exactSort(b, orderBy)
   }
 
   private def execReturn(g: PropertyGraph, binding0: DataFrame, items: Seq[Expr],
       distinct: Boolean, orderBy: Seq[OrderKey], skip: Option[Int],
       limit: Option[Int]): Seq[ResultRow] = {
-    val singleItem = items.size == 1
-    var b = binding0
-
-    // per-item projection columns (left joins; null = item yields nothing)
-    items.zipWithIndex.foreach { case (it, i) =>
-      it match {
-        case Expr.Var(v) if kinds.contains(v) =>
-          kinds(v) match {
-            case NodeKind =>
-              b = b.join(g.nodes.select(col("id").as(s"__it${i}_id"),
-                col("label").as(s"__it${i}_label"),
-                col("properties").as(s"__it${i}_props")),
-                vcol(v) === col(s"__it${i}_id"), "left")
-            case RelKind =>
-              b = b.join(g.edges.select(col("id").as(s"__it${i}_id"),
-                col("src").as(s"__it${i}_src"), col("dst").as(s"__it${i}_dst"),
-                col("label").as(s"__it${i}_label"),
-                col("properties").as(s"__it${i}_props")),
-                vcol(v) === col(s"__it${i}_id"), "left")
-          }
-        case Expr.Prop(v, key) if kinds.get(v).contains(NodeKind) =>
-          // node vars only; missing property → row dropped for this item
-          // (P2, cypher_spec.rs:1409-1419)
-          b = withProps(g, b, v)
-          b = b.withColumn(s"__it${i}_info", vcol(s"${v}__props")(key))
-        case Expr.Prop(_, _) =>
-          b = b.withColumn(s"__it${i}_info", lit(null).cast("string"))
-        case Expr.Id(v) if kinds.contains(v) =>
-          b = b.withColumn(s"__it${i}_info", vcol(v))
-        case Expr.Id(_) =>
-          b = b.withColumn(s"__it${i}_info", lit(null).cast("string"))
-        case Expr.StrLit(s) =>
-          b = b.withColumn(s"__it${i}_info", lit(s))
-        case Expr.Var(_) =>
-          b = b.withColumn(s"__it${i}_info", lit(null).cast("string"))
-      }
+    val nodeVar = (v: String) => kinds.get(v).contains(NodeKind)
+    // lookups first (uncarried node vars, rel vars), then one projection
+    // of per-item columns: `__it<i>_*` entity columns for a bound
+    // variable, else `__it<i>_info` (null = the item yields nothing)
+    var b = items.zipWithIndex.foldLeft(binding0) {
+      case (d, (Expr.Var(v), i)) if kinds.contains(v) => lookup(g, d, v, s"__it$i")
+      case (d, (Expr.Prop(v, _), _)) if nodeVar(v) => withNode(g, d, v)
+      case (d, _) => d
+    }
+    val itemCols = items.zipWithIndex.flatMap {
+      case (Expr.Var(v), i) if kinds.contains(v) => entityCols(v, s"__it$i")
+      // node vars only; missing property → row dropped for this item
+      // (P2, cypher_spec.rs:1409-1419)
+      case (Expr.Prop(v, key), i) if nodeVar(v) => Seq(vcol(propsCol(v))(key).as(s"__it${i}_info"))
+      case (Expr.Id(v), i) if kinds.contains(v) => Seq(vcol(v).as(s"__it${i}_info"))
+      case (Expr.StrLit(s), i) => Seq(lit(s).as(s"__it${i}_info"))
+      case (_, i) => Seq(lit(null).cast("string").as(s"__it${i}_info"))
     }
 
-    if (singleItem) {
-      // the single projected value drives DISTINCT / ORDER / SKIP / LIMIT
-      val valueCol: Column = items.head match {
-        case Expr.Var(v) if kinds.contains(v) => col("__it0_id")
-        case _ => col("__it0_info")
+    val collected =
+      if (items.size != 1) collectCapped(b.select(itemCols: _*))
+      else {
+        // the single projected value drives DISTINCT / ORDER / SKIP / LIMIT
+        val value = items.head match {
+          case Expr.Var(v) if kinds.contains(v) => "__it0_id"
+          case _ => "__it0_info"
+        }
+        val (b1, keys) = orderKeys(g, b, orderBy)
+        b = b1.select(itemCols ++ keys: _*).filter(col(value).isNotNull)
+        if (distinct) b = b.dropDuplicates(value)
+        if (orderBy.isEmpty) collectCapped(applyPage(b, skip, limit))
+        else {
+          // the bucketed collect observes the cycle flag over every row
+          // below its sort; an inexact key set reruns on the exact path
+          val observed = b.observe("__cycle", max(cycleFlag(keys.size).cast("int")))
+          val page = CypherExecutor.capped(spark,
+            applyPage(bucketedSort(observed, orderBy), skip, limit))
+          val rows = CypherExecutor.collectRows(spark, page)
+          val cycle = page.queryExecution.observedMetrics.get("__cycle")
+            .exists(r => !r.isNullAt(0) && r.getInt(0) == 1)
+          if (cycle) collectCapped(applyPage(exactSort(b, orderBy), skip, limit))
+          else rows
+        }
       }
-      b = b.withColumn("__val", valueCol).filter(col("__val").isNotNull)
-      if (distinct) b = b.dropDuplicates("__val")
-      val (sorted, _) = applyOrder(g, b, orderBy)
-      b = applyPage(sorted, skip, limit)
-    }
 
-    val collected = collectCapped(b)
     val rows = mutable.Buffer.empty[ResultRow]
     collected.foreach { row =>
-      items.zipWithIndex.foreach { case (it, i) =>
-        it match {
-          case Expr.Var(v) if kinds.contains(v) =>
-            if (row.getAs[String](s"__it${i}_id") != null) {
-              if (kinds(v) == NodeKind)
-                rows += ResultRow.node(row.getAs[String](s"__it${i}_id"),
-                  row.getAs[String](s"__it${i}_label"),
-                  Option(row.getAs[Map[String, String]](s"__it${i}_props")).getOrElse(Map.empty))
-              else
-                rows += ResultRow.rel(row.getAs[String](s"__it${i}_id"),
-                  row.getAs[String](s"__it${i}_src"), row.getAs[String](s"__it${i}_dst"),
-                  row.getAs[String](s"__it${i}_label"),
-                  Option(row.getAs[Map[String, String]](s"__it${i}_props")).getOrElse(Map.empty))
-            }
-          case _ =>
-            val s = row.getAs[String](s"__it${i}_info")
-            if (s != null) rows += ResultRow.info(s)
-        }
+      items.zipWithIndex.foreach {
+        case (Expr.Var(v), i) if kinds.contains(v) => rows ++= entityRow(row, kinds(v), s"__it$i")
+        case (_, i) => Option(row.getAs[String](s"__it${i}_info")).foreach(rows += ResultRow.info(_))
       }
     }
     rows.toSeq
@@ -993,9 +1068,18 @@ object CypherExecutor {
       .getOrElse(1000000)
 
   private[graft] def collectCapped(
-      spark: SparkSession, b: DataFrame): Array[org.apache.spark.sql.Row] = {
+      spark: SparkSession, b: DataFrame): Array[org.apache.spark.sql.Row] =
+    collectRows(spark, capped(spark, b))
+
+  /** The frame [[collectCapped]] collects: at most one row past the cap. */
+  private[graft] def capped(spark: SparkSession, b: DataFrame): DataFrame =
+    b.limit(resultCap(spark) + 1)
+
+  /** Collects a [[capped]] frame, refusing a result past the cap. */
+  private[graft] def collectRows(
+      spark: SparkSession, c: DataFrame): Array[org.apache.spark.sql.Row] = {
     val cap = resultCap(spark)
-    val rows = b.limit(cap + 1).collect()
+    val rows = c.collect()
     if (rows.length > cap)
       throw ParseException(
         s"Result exceeds spark.graft.maxResultRows=$cap rows; add LIMIT or raise the cap")

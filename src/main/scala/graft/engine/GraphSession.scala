@@ -23,7 +23,9 @@ import graft.cypher.Parser.ParseException
   */
 class GraphSession(val spark: SparkSession) {
 
-  var graph: PropertyGraph = PropertyGraph.empty(spark)
+  /** The committed snapshot. Volatile: the daemon's autosave thread
+    * reads it while the engine thread replaces it. */
+  @volatile var graph: PropertyGraph = PropertyGraph.empty(spark)
 
   def nodeCount: Long = graph.nodeCount
   def relationshipCount: Long = graph.relationshipCount
@@ -148,7 +150,7 @@ class GraphSession(val spark: SparkSession) {
   private def execCreateNode(c: LegacyCmd.CreateNode): (Seq[ResultRow], Long, Long, Boolean) = {
     val id = IdGen.next()
     val df = PropertyGraph.nodesDf(spark, Seq((id, c.label, c.props)))
-    graph = PropertyGraph(graph.nodes.unionByName(df), graph.edges).materialized
+    graph = graph.commitNodes(graph.nodes.unionByName(df))
     (Seq(ResultRow.node(id, c.label, c.props)), 1L, 0L, true)
   }
 
@@ -161,7 +163,7 @@ class GraphSession(val spark: SparkSession) {
       throw ParseException("invalid endpoint(s) for relationship")
     val id = IdGen.next()
     val df = PropertyGraph.edgesDf(spark, Seq((id, c.from, c.to, c.label, c.props)))
-    graph = PropertyGraph(graph.nodes, graph.edges.unionByName(df)).materialized
+    graph = graph.commitEdges(graph.edges.unionByName(df))
     (Seq(ResultRow.rel(id, c.from, c.to, c.label, c.props)), 0L, 1L, true)
   }
 
@@ -217,7 +219,7 @@ class GraphSession(val spark: SparkSession) {
   private def execDeleteRel(c: LegacyCmd.DeleteRel): (Seq[ResultRow], Long, Long, Boolean) = {
     val existed = graph.edges.filter(col("id") === c.id).limit(1).count()
     if (existed > 0) {
-      graph = PropertyGraph(graph.nodes, graph.edges.filter(col("id") =!= c.id)).materialized
+      graph = graph.commitEdges(graph.edges.filter(col("id") =!= c.id))
     }
     (Seq.empty, 0L, existed, true)
   }
@@ -275,7 +277,7 @@ class GraphSession(val spark: SparkSession) {
     val echo = collectRels(toCreate)
     val created = echo.size.toLong
     if (created > 0)
-      graph = PropertyGraph(graph.nodes, graph.edges.unionByName(toCreate)).materialized
+      graph = graph.commitEdges(graph.edges.unionByName(toCreate))
     (echo, 0L, created, created > 0)
   }
 }

@@ -1457,6 +1457,87 @@ class CypherConformanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s.execute(
       "MATCH (a)-[r1:CE {e:'x,f:y'}]->(b)-[r2:CE]->(c) RETURN c").rows.isEmpty)
   }
+
+  // Reads project node properties from the rows their MATCH scanned;
+  // every mutation clause drops those carried columns, so a read after
+  // a write in the same statement sees the CURRENT graph (T6).
+  test("cypher_read_after_mutation_sees_current_graph") {
+    val s = newSession()
+    s.execute("CREATE (:Rw {p: 'old', q: 'keep'}), (:Rw {p: 'old', q: 'keep'})")
+    assert(s.execute("MATCH (n:Rw) SET n.p = 'x' RETURN n.p").rows.map(_.info) == Seq("x", "x"))
+    val set2 = s.execute("MATCH (n:Rw) SET n.p = 'y' RETURN n").rows
+    assert(set2.map(_.properties) == Seq.fill(2)(Map("p" -> "y", "q" -> "keep")))
+    // implicit return after REMOVE
+    val removed = s.execute("MATCH (n:Rw) REMOVE n.q").rows
+    assert(removed.map(_.properties) == Seq.fill(2)(Map("p" -> "y")))
+    assert(s.execute("MATCH (n:Rw) SET n:Rx RETURN n").rows.map(_.label) == Seq("Rx", "Rx"))
+    assert(s.execute("MATCH (n:Rx) WHERE n.p = 'y' SET n.p = 'z' RETURN n.p")
+      .rows.map(_.info) == Seq("z", "z"))
+    // implicit return after DETACH DELETE: the deleted nodes are gone
+    assert(s.execute("MATCH (n:Rx) DETACH DELETE n").rows.isEmpty)
+    assert(s.execute("MATCH (n:Rx) RETURN n").rows.isEmpty)
+  }
+
+  // The clause slicer cannot express WITH..RETURN or DELETE..RETURN
+  // (see cypher_clause_slicing_artifacts), so these run parsed-AST
+  // statements on the executor directly.
+  test("cypher_ast_with_and_delete_then_return") {
+    import graft.cypher.Ast._
+    import graft.engine.CypherExecutor
+    val s = newSession()
+    s.execute("CREATE (:Wk {p: 'a', q: '1'}), (:Wk {p: 'b', q: '2'})")
+    def run(clauses: Clause*): Seq[ResultRow] = {
+      val (rows, g) = new CypherExecutor(spark, Map.empty).run(s.graph, Statement(clauses))
+      s.graph = g
+      rows
+    }
+    val n = NodePattern(Some("n"), Some("Wk"), Map.empty)
+    val matchN = Clause.Match(Seq(PathPattern(Seq(n), Nil)), optional = false)
+    def ret(e: Expr, order: Seq[OrderKey] = Nil) =
+      Clause.Return(Seq(e), distinct = false, order, None, None)
+    val byP = Seq(OrderKey(Expr.Prop("n", "p"), ascending = true))
+    assert(run(matchN, Clause.With(Seq(Expr.Var("n")), false, Nil, None, None),
+      ret(Expr.Prop("n", "p"), byP)).map(_.info) == Seq("a", "b"))
+    assert(run(matchN, Clause.With(Seq(Expr.Var("n")), false,
+        Seq(OrderKey(Expr.Prop("n", "q"), ascending = false)), None, Some(1)),
+      ret(Expr.Var("n"))).map(_.properties("p")) == Seq("b"))
+    assert(run(matchN, Clause.With(Seq(Expr.Var("n")), false, Nil, None, None),
+      Clause.Where(Seq(Cond.PropCmp("n", "q", "=", PropValue.Lit("2")))),
+      ret(Expr.Prop("n", "p"))).map(_.info) == Seq("b"))
+    // a variable WITH drops is no longer readable
+    val m = NodePattern(Some("m"), Some("Wk"), Map("p" -> PropValue.Lit("b")))
+    assert(run(Clause.Match(Seq(PathPattern(Seq(n), Nil), PathPattern(Seq(m), Nil)), false),
+      Clause.With(Seq(Expr.Var("n")), false, Nil, None, None),
+      ret(Expr.Prop("m", "p"))).isEmpty)
+    // RETURN after DELETE looks the deleted nodes up and finds nothing
+    assert(run(matchN, Clause.SetProp("n", "p", PropValue.Lit("z")),
+      ret(Expr.Prop("n", "p"))).map(_.info) == Seq("z", "z"))
+    assert(run(matchN, Clause.Delete(Seq("n"), detach = true), ret(Expr.Var("n"))).isEmpty)
+    assert(run(matchN, ret(Expr.Var("n"))).isEmpty)
+  }
+
+  // an unconstrained endpoint binds from the edge alone, so an edge
+  // whose endpoint node is gone binds an id that names no node: the
+  // endpoint yields nothing, the rest of the row still returns
+  test("cypher_dangling_edge_endpoint_yields_no_node") {
+    import graft.core.{IdGen, PropertyGraph}
+    val s = newSession()
+    s.execute("CREATE (:Dg {k: 'a'})")
+    val a = s.execute("MATCH (n:Dg) RETURN n").rows.head.id
+    val rid = IdGen.next()
+    s.graph = PropertyGraph(s.graph.nodes, s.graph.edges.unionByName(
+      PropertyGraph.edgesDf(spark, Seq((rid, a, IdGen.next(), "DG", Map.empty[String, String])))))
+    val ab = s.execute("MATCH (a:Dg)-[r:DG]->(b) RETURN a, b").rows
+    assert(ab.map(r => (r.kind, r.id)) == Seq(("node", a)))
+    assert(s.execute("MATCH (a:Dg)-[r:DG]->(b) RETURN b").rows.isEmpty)
+    assert(s.execute("MATCH (a:Dg)-[r:DG]->(b) RETURN b.k").rows.isEmpty)
+    assert(s.execute("MATCH (a:Dg)-[r:DG]->(b) RETURN id(b)").rows.size == 1)
+    assert(s.execute("MATCH (a:Dg)-[r:DG]->(b)").rows.map(r => (r.kind, r.id)).sorted ==
+      Seq(("node", a), ("relationship", rid)))
+    // `<-` parses as undirected: each orientation yields the one real node
+    assert(s.execute("MATCH (b)<-[r:DG]-(a) RETURN a, b").rows.map(_.id) == Seq(a, a))
+    assert(s.execute("MATCH (a:Dg)-[r:DG]->(b:Dg) RETURN a, b").rows.isEmpty)
+  }
 }
 
 /** One shared local SparkSession for the whole test run. */

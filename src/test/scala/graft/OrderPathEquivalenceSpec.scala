@@ -197,4 +197,21 @@ class OrderPathEquivalenceSpec extends AnyFunSuite {
       "1e309", "", "~", "zz", "2e3"),
       asc = true)
   }
+
+  // RETURN ... ORDER BY observes the cycle flag inside its result job
+  // instead of probing first. The flag must still see every row below
+  // the sort: here the only cycle-capable key ("1001?", digit-led but
+  // not numeric) sorts LAST on the bucketed path, past the LIMIT, yet
+  // the pairwise comparator puts it second.
+  test("a cycle-capable key past the LIMIT still routes RETURN to the exact path") {
+    val s = new graft.engine.GraphSession(spark)
+    s.execute("CREATE (:OkCut {k: '1'}), (:OkCut {k: '2'}), (:OkCut {k: '3'}), (:OkCut {k: '1001?'})")
+    def ret(q: String) = s.execute(q).rows.map(_.info)
+    assert(ret("MATCH (n:OkCut) RETURN n.k ORDER BY n.k LIMIT 2") == Seq("1", "1001?"))
+    assert(ret("MATCH (n:OkCut) RETURN n.k ORDER BY n.k SKIP 1 LIMIT 1") == Seq("1001?"))
+    assert(ret("MATCH (n:OkCut) RETURN n.k ORDER BY n.k DESC LIMIT 2") == Seq("3", "2"))
+    // without it the bucketed path answers
+    assert(ret("MATCH (n:OkCut) WHERE n.k < 10 RETURN n.k ORDER BY n.k DESC LIMIT 2") ==
+      Seq("3", "2"))
+  }
 }

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.engine.GraphSession
 
 /** Physical-plan shape pins for the scale-critical properties the
   * operators were designed around. These are the checks a plan review
@@ -385,5 +389,80 @@ class PlanShapeSpec extends AnyFunSuite {
       "top-k must be TakeOrdered, not a global sort")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "candidates must come from the per-part equi-join, never all-pairs")
+  }
+
+  // ---- Cypher read path: the plan of each read's result job, captured
+  // through a QueryExecutionListener
+
+  /** The QueryExecutions of the collects `body` runs whose plans name
+    * `marker`, in run order. Listener events arrive asynchronously, so
+    * a trailing marker query shows when every earlier one is in. */
+  private def collects(marker: String)(body: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("__plan_marker_end").collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def done = seen.toArray(Array.empty[QueryExecution])
+        .exists(_.analyzed.output.exists(_.name == "__plan_marker_end"))
+      while (!done && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(done, "listener events never arrived")
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[QueryExecution]).toSeq
+      .filter(_.optimizedPlan.toString.contains(marker))
+  }
+
+  private def graph(label: String): GraphSession = {
+    val s = new GraphSession(spark)
+    s.execute(s"CREATE (:${label}C {name: 'c1', bal: '10'}), (:${label}C {name: 'c2', bal: '20'})")
+    s.execute(s"CREATE (:${label}N {name: 'n1'}), (:${label}N {name: 'n2'})")
+    s.execute(s"MATCH (c:${label}C {name: 'c1'}), (n:${label}N {name: 'n1'}) CREATE (c)-[:IN]->(n)")
+    s.execute(s"MATCH (c:${label}C {name: 'c2'}), (n:${label}N {name: 'n2'}) CREATE (c)-[:IN]->(n)")
+    s
+  }
+
+  test("cypher point read scans the node table once, with no join") {
+    val s = graph("PsPt")
+    val qes = collects("PsPtC") {
+      val out = s.executeWithParams("MATCH (c:PsPtC {name: $name}) RETURN c.bal",
+        Map("name" -> "c2"))
+      assert(out.rows.map(_.info) == Seq("20"))
+    }
+    assert(qes.size == 1, s"one result job expected, saw ${qes.size}")
+    val p = qes.head.executedPlan.toString
+    // RETURN reads the properties the MATCH scan carried: no lookup
+    // join back onto the node table, no seed cross join
+    assert(!p.contains("Join"), s"no join expected:\n$p")
+    assert("Scan ExistingRDD".r.findAllIn(p).size == 1,
+      s"the node table must be scanned exactly once:\n$p")
+  }
+
+  test("cypher 1-hop read joins the bound frontier before the right-endpoint filter") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val s = graph("PsHop")
+    val qes = collects("PsHopC") {
+      val out = s.execute("MATCH (c:PsHopC {name: 'c1'})-[:IN]->(n:PsHopN) RETURN n.name")
+      assert(out.rows.map(_.info) == Seq("n1"))
+    }
+    assert(qes.size == 1, s"one result job expected, saw ${qes.size}")
+    val plan = qes.head.optimizedPlan
+    // pre-order: the outer join first
+    val joins = plan.collect { case j: Join => j }
+    assert(joins.size == 2,
+      s"frontier join + right-endpoint join expected, and no RETURN lookup join:\n$plan")
+    val (outer, inner) = (joins.head, joins(1))
+    assert(outer.left.find(_ eq inner).nonEmpty, s"joins must nest:\n$plan")
+    assert(inner.left.toString.contains("PsHopC") && inner.left.toString.contains("c1"),
+      s"the bound frontier must drive the edge join:\n$plan")
+    assert(inner.right.toString.contains("= IN") && !inner.toString.contains("PsHopN"),
+      s"the inner join must see the edges only, before any right-endpoint filter:\n$plan")
+    assert(outer.right.toString.contains("PsHopN"),
+      s"the right-endpoint filter must join above the frontier join:\n$plan")
   }
 }

@@ -17,7 +17,7 @@ cd "$(dirname "$0")/.."
 OUT="${1:-/tmp/graft_cluster_smoke}"
 SF001="${SPARK_GRAFT_SF001:-/root/testdata/sf0.01}"
 SF01="${SPARK_GRAFT_SF01:-/root/testdata/sf0.1}"
-CLASSES="/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes"
+CLASSES="$PWD/target/scala-2.13/classes:$PWD/target/scala-2.13/test-classes"
 mkdir -p "$OUT"
 
 ADDOPENS=""
