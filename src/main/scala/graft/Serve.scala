@@ -3,15 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicBoolean
 
-import graft.api.{EngineBroker, GrpcApi, HttpApi, WsRepl}
+import graft.api.{ApiServer, EngineBroker, GrpcApi}
 import graft.engine.GraphSession
 import graft.io.GraphStore
 
 /** Headless daemon — parity with the reference's `--background` mode
-  * (src/main.rs:214-289): load the active snapshot if one exists, start
-  * the HTTP API and the WebSocket REPL on ONE shared engine broker,
-  * then run the dirty-flag autosave loop (save when a mutation has
-  * happened AND >5 s since the last save, main.rs:250-265).
+  * (src/main.rs:214-289): load the active snapshot if one exists, serve
+  * the HTTP API and the WebSocket REPL on one port over ONE shared
+  * engine broker, then run the dirty-flag autosave loop (save when a
+  * mutation has happened AND >5 s since the last save,
+  * main.rs:250-265).
   *
   * This is also the durable commit policy for cluster deployments: the
   * in-session `localCheckpoint` commit (PropertyGraph.materialized)
@@ -19,7 +20,7 @@ import graft.io.GraphStore
   * the graph through GraphStore's atomic versioned snapshots and can
   * reload from the active snapshot on restart.
   *
-  * Usage: graft.Serve --data DIR [--port 8786] [--ws-port 8787]
+  * Usage: graft.Serve --data DIR [--port 8787] (alias --ws-port)
   *        [--grpc-port 50051] [--bind 127.0.0.1] [--api-key K]
   *        [--log-dir D] [--autosave-secs 5]
   */
@@ -27,7 +28,7 @@ object Serve {
 
   /** Wires broker + servers + autosave; returns a handle for tests. */
   final class Daemon(session: GraphSession, dataDir: String,
-      port: Int = 0, wsPort: Int = 0, apiKey: Option[String] = None,
+      port: Int = 0, apiKey: Option[String] = None,
       logDir: Option[String] = None, autosaveSecs: Long = 5,
       pollMs: Long = 100, bindAddr: String = "127.0.0.1",
       grpcPort: Option[Int] = None) {
@@ -36,8 +37,7 @@ object Serve {
       session.graph = GraphStore.load(session.spark, dataDir)
 
     val broker = new EngineBroker(session, logDir)
-    val http = new HttpApi(broker, port, apiKey, bindAddr)
-    val ws = new WsRepl(broker, wsPort, apiKey, bindAddr = bindAddr)
+    val api = new ApiServer(broker, port, apiKey, bindAddr)
     val grpc: Option[GrpcApi] =
       grpcPort.map(p => new GrpcApi(broker, p, apiKey, bindAddr))
 
@@ -74,23 +74,22 @@ object Serve {
     }, "graft-autosave")
     autosaveThread.setDaemon(true)
 
-    def start(): (Int, Int, Option[Int]) = {
+    /** Returns the bound API port (HTTP and WS) and gRPC port. */
+    def start(): (Int, Option[Int]) = {
       running = true
-      val hp = http.start()
-      val wp = ws.start()
+      val ap = api.start()
       // keep the BOUND port (start() returns it): with --grpc-port 0 the
       // configured value is useless for reaching the server
       val gp = grpc.map(_.start())
       autosaveThread.start()
-      (hp, wp, gp)
+      (ap, gp)
     }
 
     def stop(): Unit = {
       running = false
       autosaveThread.interrupt()
       grpc.foreach(_.stop())
-      ws.stop()
-      http.stop()
+      api.stop()
       broker.stop()
       // release every per-(session, dataset) materialized artifact the
       // daemon accumulated (graphs, LPA/PR assignments, pair tables) so
@@ -101,14 +100,13 @@ object Serve {
 
   def main(args: Array[String]): Unit = {
     // settings file first (persistence/settings.rs parity: the daemon
-    // reads the persisted config), CLI flags override. The reference
-    // serves HTTP and WS on ONE actix port (api_port, default 8787,
-    // glsh's default); with separate servers the WS REPL takes
-    // api_port and HTTP sits just below it.
+    // reads the persisted config), CLI flags override. Like the
+    // reference's one actix server, HTTP and WS share one port
+    // (api_port, default 8787, glsh's default); --ws-port is kept as
+    // an alias of --port.
     val settings = graft.io.AppSettings.load()
     var dataDir = settings.autosaveOverride.getOrElse("graft-data")
-    var wsPort = settings.apiPort
-    var port = settings.apiPort - 1
+    var port = settings.apiPort
     var apiKey: Option[String] = settings.apiKey
     var logDir: Option[String] = settings.apiLogOverride
     var autosaveSecs = 5L
@@ -128,8 +126,7 @@ object Serve {
       case "--import-ron" :: p :: t => importRonPath = Some(p); t
       case "--export-ron" :: p :: t => exportRonPath = Some(p); t
       case "--data" :: d :: t => dataDir = d; t
-      case "--port" :: p :: t => port = p.toInt; t
-      case "--ws-port" :: p :: t => wsPort = p.toInt; t
+      case ("--port" | "--ws-port") :: p :: t => port = p.toInt; t
       case "--grpc-port" :: p :: t => grpcPort = Some(p.toInt); t
       case "--bind" :: a :: t => bindAddr = a; t
       case "--api-key" :: k :: t => apiKey = Some(k); t
@@ -164,10 +161,10 @@ object Serve {
       spark.stop()
       sys.exit(0)
     }
-    val daemon = new Daemon(new GraphSession(spark), dataDir, port, wsPort,
-      apiKey, logDir, autosaveSecs, bindAddr = bindAddr, grpcPort = grpcPort)
-    val (hp, wp, gp) = daemon.start()
-    System.err.println(s"[graft] daemon up: http=$hp ws=$wp" +
+    val daemon = new Daemon(new GraphSession(spark), dataDir, port, apiKey,
+      logDir, autosaveSecs, bindAddr = bindAddr, grpcPort = grpcPort)
+    val (ap, gp) = daemon.start()
+    System.err.println(s"[graft] daemon up: http+ws=$ap" +
       gp.map(p => s" grpc=$p").getOrElse("") +
       s" data=$dataDir autosave=${autosaveSecs}s (Ctrl+C to stop)")
     Thread.currentThread().join() // serve until killed

@@ -1,8 +1,7 @@
 package graft.api
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{CompletableFuture, LinkedBlockingQueue, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicLong
-import scala.util.control.NonFatal
 
 import graft.engine.{GraphSession, QueryOutcome}
 import graft.io.QueryLog
@@ -21,9 +20,8 @@ class EngineBroker(session: GraphSession, logDir: Option[String] = None) {
     * the no-params engine path, like the reference's
     * `execute_and_log`; Some (even empty) = with-params path
     * (frontend.rs:1208-1209, main.rs:270-273). */
-  private case class Req(rid: String, query: String,
-      params: Option[Map[String, String]],
-      respond: Either[String, QueryOutcome] => Unit)
+  private case class Req(query: String, params: Option[Map[String, String]],
+      reply: CompletableFuture[Either[String, QueryOutcome]])
 
   private val queue = new LinkedBlockingQueue[Req]()
   private val ridCounter = new AtomicLong(0)
@@ -84,10 +82,9 @@ class EngineBroker(session: GraphSession, logDir: Option[String] = None) {
                     mutated = false, error = Some(e.getMessage)))
                 Left(Option(e.getMessage).getOrElse(e.toString))
             }
-          // a throwing transport callback (client gone, closed socket)
-          // must not take the shared drainer down with it
-          try req.respond(result)
-          catch { case NonFatal(_) => () }
+          // never throws: a dependent stage's failure stays in its own
+          // future, so a broken transport cannot take the drainer down
+          req.reply.complete(result)
         } catch { case _: InterruptedException => Thread.currentThread().interrupt() }
       }
     }, "graft-engine")
@@ -95,18 +92,28 @@ class EngineBroker(session: GraphSession, logDir: Option[String] = None) {
     t
   }
 
+  /** The request id a transport mints for its api-log lines. */
   def nextRid(): String = s"${System.nanoTime()}-${ridCounter.getAndIncrement()}"
 
-  /** Enqueue and block up to `timeoutSec`; None = timeout (the request
-    * still completes on the engine thread, matching the reference's
-    * recv_timeout semantics). */
-  def execute(query: String, params: Option[Map[String, String]],
-      timeoutSec: Long): Option[Either[String, QueryOutcome]] = {
+  /** Enqueue; the future completes on the engine thread with the
+    * outcome or the error text. Callers bound the wait themselves (the
+    * request still completes on the engine thread, matching the
+    * reference's recv_timeout semantics) and finish their reply on
+    * their own executor, not on the engine thread. */
+  def submit(query: String, params: Option[Map[String, String]])
+      : CompletableFuture[Either[String, QueryOutcome]] = {
     ensureAlive()
-    val resultQ = new LinkedBlockingQueue[Either[String, QueryOutcome]](1)
-    queue.put(Req(nextRid(), query, params, r => resultQ.put(r)))
-    Option(resultQ.poll(timeoutSec, TimeUnit.SECONDS))
+    val reply = new CompletableFuture[Either[String, QueryOutcome]]()
+    queue.put(Req(query, params, reply))
+    reply
   }
+
+  /** [[submit]], blocking up to `timeoutSec`, for callers that own a
+    * thread (gRPC's unary handler); None = timeout. */
+  def execute(query: String, params: Option[Map[String, String]],
+      timeoutSec: Long): Option[Either[String, QueryOutcome]] =
+    try Some(submit(query, params).get(timeoutSec, TimeUnit.SECONDS))
+    catch { case _: TimeoutException => None }
 
   /** Self-heal an UNEXPECTEDLY dead drainer (a Throwable the loop
     * guards can't contain, e.g. a LinkageError inside the logging

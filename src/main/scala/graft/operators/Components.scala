@@ -42,11 +42,12 @@ object Components {
     * aggregation as the materializing action) paid an extra final-agg
     * stage per sweep, a measured −12% on the non-converging q44; the
     * observed form runs the q44 loop ~15% faster than even the r12
-    * checksum-free eager sweeps (ObsProbe, same-JVM A/B, identical
-    * sums). A NULL checksum over a NONEMPTY frame can only be a
-    * decimal overflow (non-ANSI mode returns NULL), so it is never
-    * accepted as a fixpoint — the observed row's count disambiguates
-    * the legitimate empty-input NULL. */
+    * checksum-free eager sweeps (same-JVM A/B, identical sums;
+    * recorded in OPTIMIZATION_r14.md §2). A NULL checksum over a
+    * NONEMPTY frame can only be a decimal overflow (non-ANSI mode
+    * returns NULL), so it is never accepted as a fixpoint — the
+    * observed row's count disambiguates the legitimate empty-input
+    * NULL. */
   def minLabelClusters(ids: DataFrame, pairs: DataFrame, sweeps: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val und = pairs.select(col("a").as("u"), col("b").as("v"))
@@ -68,9 +69,9 @@ object Components {
           count(lit(1)).as("n"))
         .graftCheckpoint() // the one job per sweep; delivers obs too
       // bounded wait + fallback: the listener that publishes observed
-      // metrics fires right after the checkpoint's job (verified by
-      // ObsProbe); if it ever failed to, recompute directly rather
-      // than hang or mis-converge
+      // metrics fires right after the checkpoint's job (verified in
+      // OPTIMIZATION_r14.md §2); if it ever failed to, recompute
+      // directly rather than hang or mis-converge
       val row = awaitObserved(obs, 60000L).getOrElse {
         val r = next.agg(
           sum(col("lbl").cast(DecimalType(38, 0))).as("s"),

@@ -81,10 +81,10 @@ object CooccurrenceOps {
     * same exchange on both sides (ReuseExchange; the window's sort
     * already satisfies the merge join's ordering) — so the membership
     * stream is shuffled ONCE, with no eager checkpoint and no
-    * size-filter join. Probed three ways at 1×/10× (PairProbe): the
-    * previous shape (degree groupBy + cap join + checkpoint +
-    * self-join) ran 1.1 s / 6.8 s warm; a collect_list basket build +
-    * pair explode ran 0.8 s / 14.9 s (ObjectHashAggregate leaves
+    * size-filter join. Probed three ways at 1×/10× (recorded in
+    * OPTIMIZATION_r13.md §1): the previous shape (degree groupBy + cap
+    * join + checkpoint + self-join) ran 1.1 s / 6.8 s warm; a
+    * collect_list basket build + pair explode ran 0.8 s / 14.9 s (ObjectHashAggregate leaves
     * whole-stage codegen and collapses at scale); this window shape
     * runs 1.5 s / 2.3 s — the only variant that stays flat at 10×.
     * The per-basket quadratic stays capped by `maxBasket` over
@@ -136,9 +136,9 @@ object CooccurrenceOps {
     // membership stream shuffles once, with no degree groupBy, no cap
     // join, and no eager checkpoint (was 4 exchanges + a persisted pass
     // per call, 3.2-5.0 s warm at sf0.1; now ~1.7 s, and flat at 10×
-    // where a collect_list basket build collapses — see PairProbe
-    // numbers in cappedPairCounts). Per-part pair volume stays capped
-    // by maxDf exactly as before.
+    // where a collect_list basket build collapses — see the
+    // OPTIMIZATION_r13.md §1 numbers in cappedPairCounts). Per-part
+    // pair volume stays capped by maxDf exactly as before.
     import org.apache.spark.sql.expressions.Window
     val kept = sp
       .withColumn("pdeg", count(lit(1)).over(Window.partitionBy("pk")))

@@ -104,26 +104,4 @@ class EnginePropertySpec extends AnyFunSuite {
       assert(ids.distinct.length == ids.length, "duplicate edge ids")
     }
   }
-
-  // WS frame codec round-trip across the 7-bit / 16-bit / 64-bit
-  // payload-length encodings, masked and unmasked
-  test("ws_frame_codec_roundtrip_all_length_encodings") {
-    import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-    import graft.api.WsFrames
-    for {
-      size <- Seq(0, 1, 125, 126, 127, 65535, 65536, 70000)
-      masked <- Seq(false, true)
-    } {
-      val payload = Array.tabulate[Byte](size)(i => (i * 31 + size).toByte)
-      val bos = new ByteArrayOutputStream()
-      val mask = if (masked) Some(Array[Byte](1, -2, 3, -4)) else None
-      WsFrames.writeFrame(new DataOutputStream(bos), WsFrames.OpText, payload, mask)
-      val back = WsFrames.readFrame(
-        new DataInputStream(new ByteArrayInputStream(bos.toByteArray)))
-      assert(back.isDefined, s"size=$size masked=$masked")
-      val (op, p) = back.get
-      assert(op == WsFrames.OpText)
-      assert(java.util.Arrays.equals(p, payload), s"payload size=$size masked=$masked")
-    }
-  }
 }

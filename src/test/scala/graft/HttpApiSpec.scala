@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.{EngineBroker, HttpApi}
+import graft.api.{ApiServer, EngineBroker}
 import graft.engine.GraphSession
 
 /** Drives the reference's POST /api/query contract over a real socket
@@ -23,7 +23,7 @@ class HttpApiSpec extends AnyFunSuite {
   test("http_query_roundtrip_and_errors") {
     val logDir = java.nio.file.Files.createTempDirectory("graft_api_logs").toString
     val broker = new EngineBroker(new GraphSession(spark), Some(logDir))
-    val api = new HttpApi(broker)
+    val api = new ApiServer(broker)
     val port = api.start()
     try {
       val c1 = post(port, """{"query": "CREATE NODE Person {name:\"Ada\"};"}""")
@@ -57,7 +57,7 @@ class HttpApiSpec extends AnyFunSuite {
     // afterwards. A hang or connection reset here is a parser hole a
     // public endpoint would be hammered with.
     val broker = new EngineBroker(new GraphSession(spark))
-    val api = new HttpApi(broker)
+    val api = new ApiServer(broker)
     val port = api.start()
     try {
       val rnd = new scala.util.Random(7L)
@@ -99,7 +99,7 @@ class HttpApiSpec extends AnyFunSuite {
   test("http_body_parse_is_top_level_and_escape_aware") {
     val session = new GraphSession(spark)
     val broker = new EngineBroker(session)
-    val api = new HttpApi(broker)
+    val api = new ApiServer(broker)
     val port = api.start()
     try {
       session.execute("""CREATE (:Person {name: 'O"Brien'})""")
@@ -141,7 +141,7 @@ class HttpApiSpec extends AnyFunSuite {
 
   test("http_api_key_enforced") {
     val broker = new EngineBroker(new GraphSession(spark))
-    val api = new HttpApi(broker, apiKey = Some("sekret"))
+    val api = new ApiServer(broker, apiKey = Some("sekret"))
     val port = api.start()
     try {
       assert(post(port, """{"query": "MATCH NODE Person;"}""").statusCode() == 401)
