@@ -1,22 +1,27 @@
 package graft.algo
 
+import scala.reflect.ClassTag
+
 import graft.core.Materialize.GraftMaterializeOps
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.PropertyGraph
 
 /** Graph analytics matching the reference GUI's compute layer
   * (SURVEY §2.8): undirected degree (GA3, frontend.rs:597-600),
   * weighted label-propagation community detection (GA2,
-  * frontend.rs:509-588), community density (GA4, frontend.rs:602-616).
+  * frontend.rs:509-588), community density (GA4, frontend.rs:602-616);
+  * and beyond it PageRank, personalized PageRank, BFS hop distance,
+  * weighted shortest path and k-core.
   *
-  * All DataFrame-iterative (aggregateMessages-style): each LPA sweep is
-  * one shuffle on the neighbor join + one groupBy — the plan a
-  * 1000-executor cluster runs unchanged. localCheckpoint per sweep cuts
-  * the iterative lineage.
+  * LPA, both PageRanks and BFS/SSSP are one vertex program each, run by
+  * the one superstep driver [[superstep]]; k-core is a DataFrame delta
+  * peel (see [[kCore]]).
   */
 object GraphAlgos {
 
@@ -25,9 +30,122 @@ object GraphAlgos {
     * (and tie-break order), chosen over xxhash64 because the identical
     * value is computable in DuckDB — `('0x' || substring(md5(id), 1,
     * 15))::BIGINT` — which makes the whole LPA chain oracle-checkable
-    * (see GraphOps.lpaOracleSql). */
+    * (see GraphOps.lpaOracleSql). Deterministic and shuffle-free; swap
+    * for zipWithIndex at billions-of-nodes scale, where ~60-bit hash
+    * collisions become material. */
   private[graft] def vidExpr(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
+
+  /** Hashes tuple keys by their FIRST element and scalar keys as-is, so
+    * a `((dst, comm), w)` reduceByKey lands every row for `dst` in the
+    * partition a plain `(dst, …)` RDD would use. Inherits
+    * HashPartitioner.equals (numPartitions only), so RDDs keyed by dst
+    * and RDDs keyed by (dst, comm) co-partition and join narrowly. */
+  private class FirstElemHashPartitioner(n: Int) extends HashPartitioner(n) {
+    override def getPartition(key: Any): Int = key match {
+      case (a, _) => super.getPartition(a)
+      case _      => super.getPartition(key)
+    }
+  }
+
+  /** The superstep driver: Pregel's vertex program run as Pregelix's
+    * dataflow (PAPERS.md, VLDB 2014), one join plus one group-by per
+    * sweep. An algorithm brings
+    * - `edges`: its edge payload keyed by SENDER vid (it may use the
+    *   driver's partitioner to pre-partition);
+    * - `init`: its initial state keyed by vid, one row per node;
+    * - `gather`: sender-joined edges → messages keyed by receiver,
+    *   partitioned by the partitioner it is given;
+    * - `update(old, Option[msg])`, which must be deterministic;
+    * - `sendUnchanged`: whether a vertex the previous sweep left
+    *   unchanged still sends. Only an idempotent min-combiner may pass
+    *   false (BFS/SSSP): such a vertex would resend a bound its
+    *   receivers already folded in, and update(old, None) = old;
+    * - `value` and `finish`: the result's one long per vertex, and the
+    *   frame built from (id, vid, value) and the (id, vid) map.
+    *
+    * The driver owns the rest. One partitioner keys edges, state and
+    * messages, so the sender join and the state update are narrow and
+    * a sweep's only shuffle is the gather's map-side-combined
+    * reduceByKey. The edge RDD is partitioned and persisted once; the
+    * (id, vid) map is a lazy projection of the nodes, joined only into
+    * the result, so it holds no blocks. Each
+    * sweep is exactly ONE job — the count that materializes the new
+    * state — and a LongAccumulator in that job counts the vertices it
+    * changed. It halts after `sweeps` sweeps, or after a sweep that
+    * changes nothing: the update is deterministic, so that state is a
+    * fixpoint and every later sweep an identity — the result equals the
+    * fixed-sweep oracles either way. Every block it persisted is
+    * dropped before it returns (blocking, so the cleanup lands inside
+    * the analytic's own wall-clock, not in the next query's), and also
+    * when a sweep fails.
+    *
+    * Why RDDs, measured at sf0.1:
+    * - a DataFrame loop re-shuffles the full edge list every sweep
+    *   (localCheckpoint erases the partitioning, so Catalyst plans 3
+    *   exchanges per sweep): PageRank took 13.3 s;
+    * - GraphX paid uncopartitioned vertex joins plus a full triplets
+    *   shuffle and a convergence join per sweep: LPA took 1113 s;
+    * - an `aggregateByKey` gather with a per-destination HashMap
+    *   round-tripped a boxed map per node through the serializer every
+    *   sweep: LPA took 90 s (Java) / 153 s (Kryo) for 8 sweeps, and
+    *   511 s under bench memory pressure. The gathers here reduce flat
+    *   primitive tuples, so their cost does not depend on the
+    *   configured serializer.
+    *
+    * Why rebuild the edge RDD per call: r13 cached it per (session,
+    * graph) so q53 could reuse q101's (~5 s saved in an isolated
+    * probe), but the full-bench A/B at r14 measured the pinned
+    * deserialized blocks as a large net loss — q31 LPA cold read
+    * 99-135 s (3 JVMs, two hosts) vs ≤17 s before, q42 cold 29 s vs
+    * 6 s, q53 itself 71 s vs 18 s rebuilding fresh, cold_total 449 s →
+    * 233 s with the cache removed. */
+  private def superstep[E: ClassTag, S: ClassTag, M: ClassTag](
+      g: PropertyGraph, sweeps: Int,
+      edges: Partitioner => RDD[(Long, E)],
+      init: RDD[(Long, S)],
+      gather: (RDD[(Long, (E, S))], Partitioner) => RDD[(Long, M)],
+      update: (S, Option[M]) => S,
+      sendUnchanged: Boolean,
+      value: S => Long,
+      finish: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val spark = g.nodes.sparkSession
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val idMap = g.nodes.select(col("id"), vidExpr(col("id")).as("vid"))
+    val part = new FirstElemHashPartitioner(math.max(sc.defaultParallelism, 16))
+    val e = edges(part).partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    // (state, changed by the last sweep); every vertex starts as a sender
+    var state: RDD[(Long, (S, Boolean))] = init.partitionBy(part)
+      .mapValues(s => (s, true)).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val changed = sc.longAccumulator("superstepChanged")
+      var sweep = 0
+      var live = true
+      while (sweep < sweeps && live) {
+        sweep += 1
+        changed.reset()
+        val senders = if (sendUnchanged) state else state.filter(_._2._2)
+        val msgs = gather(e.join(senders.mapValues(_._1), part), part) // narrow join
+        val next = state.leftOuterJoin(msgs, part) // narrow
+          .mapValues { case ((old, _), m) =>
+            val s = update(old, m)
+            val moved = s != old
+            if (moved) changed.add(1L)
+            (s, moved)
+          }
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try next.count() // the sweep's one job
+        finally { state.unpersist(blocking = false); state = next }
+        live = changed.value > 0L
+      }
+      finish(state.map { case (v, (s, _)) => (v, value(s)) }.toDF("vid", "value")
+        .join(idMap, "vid"), idMap).graftCheckpoint()
+    } finally {
+      e.unpersist(blocking = true)
+      state.unpersist(blocking = true)
+    }
+  }
 
   /** Integer fixed-point PageRank over the DIRECTED multigraph, run for
     * a fixed `sweeps` count: pr₀ = scale; pr_{k+1}(v) = (scale·15) div
@@ -43,15 +161,10 @@ object GraphAlgos {
     * M ← 0.15·n·scale + 0.85·M), and on a hub-heavy graph a single
     * node's in_sum can approach that whole mass, so the worst-case
     * guard is 17·n·scale < 2⁶³ — with scale=10¹⁰ that holds to
-    * ~5·10⁷ nodes (asserted below); larger graphs lower `scale`.
-    *
-    * Scale shape: one groupBy-sum shuffle per sweep with map-side
-    * partial aggregation; edges and out-degrees are checkpointed once
-    * and reused; superseded rank snapshots are unpersisted (the same
-    * loop hygiene as Components/LPA). */
+    * ~5·10⁷ nodes (asserted below); larger graphs lower `scale`. */
   def pageRankInt(g: PropertyGraph, sweeps: Int = 8,
       scale: Long = 10000000000L): DataFrame =
-    pageRankLoop(g, None, sweeps, scale)
+    pageRankLoop(g, lit(true), sweeps, scale)
 
   /** PERSONALIZED integer PageRank: identical exact-integer loop, but
     * both the initial mass and the per-sweep restart term go ONLY to
@@ -61,95 +174,41 @@ object GraphAlgos {
     * bound (seed mass ≤ full mass), same oracle-checkable arithmetic. */
   def personalizedPageRankInt(g: PropertyGraph, seedLabel: String,
       sweeps: Int = 8, scale: Long = 10000000000L): DataFrame =
-    pageRankLoop(g, Some(seedLabel), sweeps, scale)
+    pageRankLoop(g, col("label") === seedLabel, sweeps, scale)
 
-  private def pageRankLoop(g: PropertyGraph, seedLabel: Option[String],
+  /** State (base, pr): `base` is the restart term, nonzero exactly at
+    * the seeds, which also hold the initial mass. Edge payload (dst,
+    * outdeg of the sender). */
+  private def pageRankLoop(g: PropertyGraph, seed: Column,
       sweeps: Int, scale: Long): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     val base = scale * 15 / 100
-    // Same co-partitioned RDD loop as weightedLabelPropagation: a
-    // DataFrame loop re-shuffles the full edge list every sweep
-    // (localCheckpoint erases partitioning metadata, so Catalyst plans
-    // 3 exchanges/sweep — measured 13.3 s at sf0.1); here the
-    // (src→(dst,deg)) RDD is hash-partitioned once, the per-sweep rank
-    // lookup and the rank update are narrow joins, and the only shuffle
-    // is the flat-tuple (dst, share) reduceByKey.
-    // Loop-LOCAL derived artifacts, dropped at exit. r13 cached these
-    // per (session, graph) so q53 could reuse q101's edge RDD (~5 s
-    // rebuild saved in an isolated probe) — but the full-bench A/B at
-    // r14 measured the pinned deserialized blocks as a large NET LOSS:
-    // with the cache, q31 LPA cold read 99-135 s (3 independent JVMs,
-    // two hosts) vs ≤17 s history, q42 cold 29 s vs 6 s, and even q53
-    // itself ran 71 s reusing the 40-queries-old pinned blocks vs 18 s
-    // rebuilding them fresh (session-long pinning of 2.8M boxed tuples
-    // degrades every later heavy loop; cold_total 449 s → 233 s with
-    // the cache removed). Rebuild-per-call is the scale-safe shape.
-    val idMap = g.nodes.select(col("id"), vidExpr(col("id")).as("vid"))
-      .graftCheckpoint()
-    val part = new HashPartitioner(math.max(sc.defaultParallelism, 16))
-    val eBySrc: RDD[(Long, Long)] = g.edges
-      .select(vidExpr(col("src")).as("s"), vidExpr(col("dst")).as("d"))
-      .as[(Long, Long)].rdd
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    val outdeg = eBySrc.mapValues(_ => 1L).reduceByKey(part, _ + _)
-    val eDeg: RDD[(Long, (Long, Long))] = eBySrc.join(outdeg) // narrow
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    eDeg.count()
-    eBySrc.unpersist(blocking = false)
+    // both guards run before anything is persisted, so a failed one
+    // leaves no blocks behind
+    require(base > 0, s"pageRankInt needs scale ≥ 7 so the restart term is nonzero (scale=$scale)")
     // hub-heavy worst case: one node can receive ~all the total mass
     // n·scale, and the update multiplies by 17 before dividing
-    require(BigInt(17) * idMap.count() * scale < BigInt(Long.MaxValue),
+    require(BigInt(17) * g.nodes.count() * scale < BigInt(Long.MaxValue),
       s"pageRankInt overflow guard: 17*n*scale must stay < 2^63; lower scale=$scale")
-    // per-node restart term: `base` at seeds, 0 elsewhere (uniform run
-    // = every node a seed); co-partitioned once, narrow-joined per sweep
-    val seedCol = seedLabel
-      .map(l => col("label") === l).getOrElse(lit(true))
-    // ONE node-side pass: seedBase is the only DataFrame → RDD
-    // conversion (scan + vid hash + partitionBy shuffle); pr₀ derives
-    // from it with a narrow mapValues (b > 0 ⟺ seed, guarded below), so
-    // the second full node scan + hash + shuffle + persist the old
-    // shape paid per rank call is gone.
-    require(base > 0, s"pageRankInt needs scale ≥ 7 so the restart term is nonzero (scale=$scale)")
-    val seedBase: RDD[(Long, Long)] = g.nodes
-      .select(vidExpr(col("id")).as("vid"),
-        when(seedCol, base).otherwise(0L).as("b"))
-      .as[(Long, Long)].rdd.partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    seedBase.count()
-    var pr: RDD[(Long, Long)] = seedBase
-      .mapValues(b => if (b > 0L) scale else 0L)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pr.count()
-    val verbose = spark.conf.getOption("spark.graft.pr.verbose").contains("true")
-    for (sweep <- 1 to sweeps) {
-      val tSweep = System.nanoTime()
-      val contrib = eDeg.join(pr) // narrow
-        .map { case (_, ((dst, deg), p)) => (dst, p / deg) }
-        .reduceByKey(part, _ + _) // the sweep's one shuffle
-      val prev = pr
-      pr = seedBase.leftOuterJoin(contrib, part) // narrow
-        .mapValues { case (b, in) => b + 17 * in.getOrElse(0L) / 20 }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pr.count()
-      prev.unpersist(blocking = false)
-      if (verbose) println(f"[pr] sweep $sweep: ${(System.nanoTime() - tSweep) / 1e9}%.1f s")
-    }
-    val out = pr.toDF("vid", "pr").join(idMap, "vid")
-      .select("id", "pr").graftCheckpoint()
-    // blocking: drop ALL the loop's blocks before returning, so the
-    // cleanup storm lands inside this analytic's own wall-clock instead
-    // of disturbing whatever query runs next in the session (and nothing
-    // stays pinned — see the artifact note above).
-    seedBase.unpersist(blocking = true)
-    pr.unpersist(blocking = true)
-    eDeg.unpersist(blocking = true)
-    graft.core.BoundedCache.releaseDf(idMap.toDF())
-    out
+    superstep[(Long, Long), (Long, Long), Long](g, sweeps,
+      edges = part => {
+        val bySrc = g.edges
+          .select(vidExpr(col("src")).as("s"), vidExpr(col("dst")).as("d"))
+          .as[(Long, Long)].rdd.partitionBy(part)
+        bySrc.join(bySrc.mapValues(_ => 1L).reduceByKey(part, _ + _), part) // narrow
+      },
+      init = g.nodes
+        .select(vidExpr(col("id")), when(seed, base).otherwise(0L))
+        .as[(Long, Long)].rdd
+        .mapValues(b => (b, if (b > 0L) scale else 0L)),
+      gather = (sent, part) => sent
+        .map { case (_, ((dst, deg), (_, p))) => (dst, p / deg) }
+        .reduceByKey(part, _ + _),
+      update = { case ((b, _), in) => (b, b + 17 * in.getOrElse(0L) / 20) },
+      sendUnchanged = true,
+      value = _._2,
+      finish = (ranked, _) => ranked.select(col("id"), col("value").as("pr")))
   }
 
   /** Multi-source BFS hop distance over the UNDIRECTED graph: nodes
@@ -169,11 +228,6 @@ object GraphAlgos {
     * from sweeps·|E| to |E| — and when the frontier empties (the
     * fixpoint the fixed-sweep oracle also reaches) the loop exits
     * early.
-    *
-    * Scale shape: adjacency hash-partitioned once; each sweep's only
-    * shuffle is the frontier's (neighbor, candidate) min-reduceByKey
-    * (map-side combined); the settled-distance RDD only ever receives
-    * narrow co-partitioned joins.
     *
     * Implemented as [[ssspFrom]] with unit weights — BFS is the
     * weighted relaxation's special case. */
@@ -195,25 +249,12 @@ object GraphAlgos {
     * are redundant re-sends of an already-incorporated bound). Unlike
     * BFS, a node can improve — and hence re-enter the frontier —
     * multiple times; the loop still exits early only when the frontier
-    * empties, which is the true Bellman–Ford fixpoint.
-    *
-    * Scale shape mirrors [[hopDistanceFrom]]: weighted adjacency
-    * hash-partitioned once; each sweep's only shuffle is the frontier's
-    * (neighbor, candidate) min-reduceByKey (map-side combined); the
-    * settled-distance RDD only ever receives narrow co-partitioned
-    * joins. */
+    * empties, which is the true Bellman–Ford fixpoint. */
   def ssspFrom(g: PropertyGraph, sourceLabel: String,
       typeWeights: Map[String, Long], sweeps: Int = 8): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     val INF = Long.MaxValue
-    val idMap = g.nodes.select(col("id"), vidExpr(col("id")).as("vid"))
-      .graftCheckpoint()
-    val part = new HashPartitioner(math.max(sc.defaultParallelism, 16))
     // empty map = unit weights: hopDistanceFrom's BFS is this loop's
     // special case (a settled node then never re-improves)
     // unknown edge labels default to unit weight: a bare element_at
@@ -224,59 +265,25 @@ object GraphAlgos {
     val wExpr =
       if (typeWeights.isEmpty) lit(1L)
       else coalesce(element_at(typedLit(typeWeights), col("label")), lit(1L))
-    val und: RDD[(Long, (Long, Long))] = g.edges
-      .select(vidExpr(col("src")).as("s"), vidExpr(col("dst")).as("d"),
-        wExpr.cast("long").as("w"))
-      .as[(Long, Long, Long)].rdd
-      .flatMap { case (s0, d0, w) => Seq((s0, (d0, w)), (d0, (s0, w))) }
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
-    var dist: RDD[(Long, Long)] = g.nodes
-      .select(vidExpr(col("id")).as("vid"),
-        when(col("label") === sourceLabel, lit(0L)).otherwise(lit(INF)).as("d"))
-      .as[(Long, Long)].rdd
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    // sweep-0 frontier: the seed nodes
-    var frontier: RDD[(Long, Long)] = dist.filter(_._2 == 0L)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var frontierSize = frontier.count()
-    val verbose = spark.conf.getOption("spark.graft.bfs.verbose").contains("true")
-    var sweep = 0
-    while (sweep < sweeps && frontierSize > 0) {
-      sweep += 1
-      val tSweep = System.nanoTime()
-      val msg = und.join(frontier) // narrow (co-partitioned)
-        .map { case (_, ((u, w), dv)) => (u, dv + w) }
-        .reduceByKey(part, math.min(_, _)) // the sweep's one shuffle
-      // newly-improved nodes: candidate strictly improves current dist.
-      // Keys pass through unchanged, so partitioning is preserved — the
-      // frontier stays co-partitioned with `und`/`dist` shuffle-free.
-      val improved = msg.join(dist) // narrow (both on `part`)
-        .mapPartitions(
-          _.collect { case (u, (nd, d)) if nd < d => (u, nd) },
-          preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val prevDist = dist
-      val prevFrontier = frontier
-      dist = prevDist.leftOuterJoin(improved, part) // narrow
-        .mapValues { case (d, nd) => nd.getOrElse(d) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      frontierSize = improved.count() // materializes dist's parents too
-      dist.count()
-      frontier = improved
-      prevDist.unpersist(blocking = false)
-      prevFrontier.unpersist(blocking = false)
-      if (verbose) println(f"[sssp] sweep $sweep: ${(System.nanoTime() - tSweep) / 1e9}%.1f s, frontier=$frontierSize")
-    }
-    val out = dist.toDF("vid", "d").join(idMap, "vid")
-      .select(col("id"),
-        when(col("d") === INF, lit(null).cast("bigint"))
-          .otherwise(col("d")).as("dist"))
-      .graftCheckpoint()
-    und.unpersist(blocking = true)
-    frontier.unpersist(blocking = true)
-    dist.unpersist(blocking = true)
-    out
+    superstep[(Long, Long), Long, Long](g, sweeps,
+      edges = _ => g.edges
+        .select(vidExpr(col("src")), vidExpr(col("dst")), wExpr.cast("long"))
+        .as[(Long, Long, Long)].rdd
+        .flatMap { case (s, d, w) => Seq((s, (d, w)), (d, (s, w))) },
+      init = g.nodes
+        .select(vidExpr(col("id")),
+          when(col("label") === sourceLabel, lit(0L)).otherwise(lit(INF)))
+        .as[(Long, Long)].rdd,
+      // sweep 1 sends from every vertex; the unreached ones stay silent
+      gather = (sent, part) => sent
+        .collect { case (_, ((u, w), d)) if d != INF => (u, d + w) }
+        .reduceByKey(part, math.min(_, _)),
+      update = (d, m) => m.fold(d)(math.min(d, _)),
+      sendUnchanged = false,
+      value = identity,
+      finish = (dists, _) => dists.select(col("id"),
+        when(col("value") === INF, lit(null).cast("bigint"))
+          .otherwise(col("value")).as("dist")))
   }
 
   /** Undirected adjacency (GA1): both edge directions. */
@@ -334,54 +341,14 @@ object GraphAlgos {
     * when no assignment changes. Returns (id, community) with community
     * named by its seed node's id.
     *
-    * Implementation: a co-partitioned RDD loop. The edge list is
-    * hash-partitioned ONCE by message source and cached; the community
-    * RDD uses the same partitioner, so the per-sweep `edges.join(comm)`
-    * and the final `comm.leftOuterJoin(best)` are both narrow (zero
-    * shuffle). The only shuffle per sweep is the message aggregation —
-    * `reduceByKey` over flat `((dst, comm), weight)` tuples (map-side
-    * combined; primitives only, so cost is independent of the
-    * configured serializer), partitioned by `dst` alone so the
-    * per-destination argmax runs partition-locally and the result stays
-    * co-partitioned with the community RDD. Convergence is counted by a
-    * LongAccumulator inside the update pass — no separate diff join.
-    * (Two prior formulations were measured and rejected: GraphX paid
-    * uncopartitioned vertex joins plus a full triplets shuffle and a
-    * convergence join per sweep — 1113 s at sf0.1; an `aggregateByKey`
-    * with a per-destination mutable.HashMap round-tripped a boxed map
-    * per node through the serializer every sweep — 90 s Java / 153 s
-    * Kryo for 8 sweeps at sf0.1, and 511 s under bench memory
-    * pressure.)
-    */
+    * Gather: messages flow v → u (u adopts from neighbors v), summed per
+    * flat `((u, comm), weight)` tuple. The driver's partitioner hashes
+    * that key by `u` alone, so the per-destination argmax runs
+    * partition-locally and its result stays co-partitioned with the
+    * state. */
   def weightedLabelPropagation(g: PropertyGraph, maxSweeps: Int = 8): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-    import scala.collection.mutable
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-
-    // integer-encode node ids (deterministic, shuffle-free; swap for
-    // zipWithIndex at billions-of-nodes scale where ~60-bit hash
-    // collisions become material)
-    val idMap = g.nodes.select(col("id"), vidExpr(col("id")).as("vid"))
-      .graftCheckpoint()
-    // Hashes tuple keys by their FIRST element and scalar keys as-is, so
-    // a `((dst, comm), w)` reduceByKey lands every row for `dst` in the
-    // partition a plain `(dst, …)` RDD would use. Inherits
-    // HashPartitioner.equals (numPartitions only), so RDDs keyed by dst
-    // and RDDs keyed by (dst, comm) co-partition and join narrowly.
-    class FirstElemHashPartitioner(n: Int) extends HashPartitioner(n) {
-      override def getPartition(key: Any): Int = key match {
-        case (a, _) => super.getPartition(a)
-        case _      => super.getPartition(key)
-      }
-    }
-    val part = new FirstElemHashPartitioner(math.max(sc.defaultParallelism, 16))
-
-    // messages flow v -> u (u adopts from neighbors v); key by v so the
-    // per-sweep community lookup is a narrow co-partitioned join.
     // Weights ride as FIXED-POINT longs (the pageRankInt trick): the
     // per-sweep reduceByKey gives no accumulation-order guarantee, and
     // IEEE double addition is non-associative — with any non-unit
@@ -392,38 +359,21 @@ object GraphAlgos {
     // are exact integers. 2^20 scale × max weight 2.25 ≈ 2.4e6 per
     // edge; overflow would need a destination degree above ~3.9e12.
     val wScale = 1L << 20
-    val edges: RDD[(Long, (Long, Long))] = weightedNeighborPairs(g)
-      .select(col("v_vid").as("v"), col("u_vid").as("u"),
-        floor(col("weight") * wScale + lit(0.5)).as("w"))
-      .as[(Long, Long, Long)].rdd
-      .map { case (v, u, w) => (v, (u, w)) }
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var comm: RDD[(Long, Long)] = idMap.select(col("vid")).as[Long].rdd
-      .map(v => (v, v)).partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    comm.count()
-
-    val verbose = spark.conf.getOption("spark.graft.lpa.verbose").contains("true")
-    var sweep = 0
-    var changed = true
-    while (sweep < maxSweeps && changed) {
-      sweep += 1
-      val tSweep = System.nanoTime()
-      val changedAcc = sc.longAccumulator(s"lpaChanged$sweep")
-      // sum weight per (destination, candidate community) as flat
-      // primitive tuples — map-side combined, serializer-independent —
-      // then argmax per destination with ties to the smallest community
-      // id (the deterministic Jacobi stand-in for the reference's
-      // sequential id-sorted sweep). `part` hashes (dst, comm) by dst
-      // only, so the argmax is partition-local and `best` stays
-      // co-partitioned with `comm` for a narrow join below.
-      val best: RDD[(Long, Long)] = edges.join(comm) // narrow
-        .map { case (_, ((u, w), cv)) => ((u, cv), w) }
-        .reduceByKey(part, _ + _) // the sweep's one shuffle; exact BIGINT sums
+    superstep[(Long, Long), Long, Long](g, maxSweeps,
+      edges = _ => weightedNeighborPairs(g)
+        .select(col("v_vid"), col("u_vid"),
+          floor(col("weight") * wScale + lit(0.5)))
+        .as[(Long, Long, Long)].rdd
+        .map { case (v, u, w) => (v, (u, w)) },
+      init = g.nodes.select(vidExpr(col("id"))).as[Long].rdd.map(v => (v, v)),
+      // argmax per destination, ties to the smallest community id (the
+      // deterministic Jacobi stand-in for the reference's sequential
+      // id-sorted sweep)
+      gather = (sent, part) => sent
+        .map { case (_, ((u, w), c)) => ((u, c), w) }
+        .reduceByKey(part, _ + _) // exact BIGINT sums
         .mapPartitions({ it =>
-          val bestOf = mutable.HashMap.empty[Long, (Long, Long)]
+          val bestOf = scala.collection.mutable.HashMap.empty[Long, (Long, Long)]
           it.foreach { case ((u, c), w) =>
             bestOf.get(u) match {
               case Some((bc, bw)) if w > bw || (w == bw && c < bc) =>
@@ -433,31 +383,13 @@ object GraphAlgos {
             }
           }
           bestOf.iterator.map { case (u, (c, _)) => (u, c) }
-        }, preservesPartitioning = true)
-      val prev = comm
-      comm = prev.leftOuterJoin(best, part) // narrow (shared partitioner)
-        .mapValues { case (old, upd) =>
-          val next = upd.getOrElse(old)
-          if (next != old) changedAcc.add(1L)
-          next
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      comm.count() // materialize → accumulator is final
-      prev.unpersist(blocking = false)
-      changed = changedAcc.value > 0L
-      if (verbose) println(f"[lpa] sweep $sweep: ${(System.nanoTime() - tSweep) / 1e9}%.1f s, changed=${changedAcc.value}")
-    }
-    val assignment = comm.toDF("vid", "comm_vid")
-    // map vids back to node-id strings for both member and community
-    val out = assignment
-      .join(idMap, "vid")
-      .join(idMap.select(col("vid").as("comm_vid"), col("id").as("community")),
-        Seq("comm_vid"))
-      .select("id", "community")
-      .graftCheckpoint()
-    edges.unpersist(blocking = false)
-    comm.unpersist(blocking = false)
-    out
+        }, preservesPartitioning = true),
+      update = (old, best) => best.getOrElse(old),
+      sendUnchanged = true,
+      value = identity,
+      finish = (members, ids) => members
+        .join(ids.select(col("vid").as("value"), col("id").as("community")), "value")
+        .select("id", "community"))
   }
 
   /** k-CORE PEELING: repeatedly remove nodes with undirected degree

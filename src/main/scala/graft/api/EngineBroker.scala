@@ -108,8 +108,9 @@ class EngineBroker(session: GraphSession, logDir: Option[String] = None) {
     reply
   }
 
-  /** [[submit]], blocking up to `timeoutSec`, for callers that own a
-    * thread (gRPC's unary handler); None = timeout. */
+  /** [[submit]], blocking up to `timeoutSec`, for in-process callers
+    * that own a thread; None = timeout. The transports finish from
+    * [[submit]]'s future instead. */
   def execute(query: String, params: Option[Map[String, String]],
       timeoutSec: Long): Option[Either[String, QueryOutcome]] =
     try Some(submit(query, params).get(timeoutSec, TimeUnit.SECONDS))

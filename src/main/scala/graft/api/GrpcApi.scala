@@ -2,6 +2,7 @@ package graft.api
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.net.InetSocketAddress
+import java.util.concurrent.{TimeUnit, TimeoutException}
 import scala.collection.mutable
 
 import org.sparkproject.connect.grpc.{CallOptions, Channel, ClientCall, ClientInterceptor, ForwardingClientCall, Metadata, MethodDescriptor, Server, ServerCall, ServerCallHandler, ServerInterceptor, ServerInterceptors, ServerServiceDefinition, Status}
@@ -9,7 +10,7 @@ import org.sparkproject.connect.grpc.netty.{NettyChannelBuilder, NettyServerBuil
 import org.sparkproject.connect.grpc.stub.{ClientCalls, ServerCalls, StreamObserver}
 import org.sparkproject.connect.protobuf.{CodedInputStream, CodedOutputStream}
 
-import graft.engine.ResultRow
+import graft.engine.{QueryOutcome, ResultRow}
 
 /** gRPC `graph_loom.GraphQuery/Execute` — parity with the reference's
   * tonic service (src/api/grpc.rs:20-98, proto/graph_loom.proto:1-43):
@@ -247,24 +248,34 @@ class GrpcApi(broker: EngineBroker, port: Int = 0,
         val rid = broker.nextRid()
         broker.apiLog.foreach(_.append(s"rid=$rid gRPC query qlen=${req.query.length}"))
         val t0 = System.nanoTime()
+        def log(status: Int): Unit =
+          broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, status))
         // the reference gRPC bridge wraps the proto map in Some(...)
         // unconditionally (grpc.rs:44) — ALWAYS the with-params path,
-        // even when the map is empty
-        broker.execute(req.query, Some(req.params), timeoutSec) match {
-          case Some(Right(out)) =>
-            broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, 200))
-            obs.onNext(PbResponse(out.rows.map(toItem), out.affectedNodes,
-              out.affectedRels, out.mutated))
-            obs.onCompleted()
-          case Some(Left(err)) => // engine errors travel IN-BAND (grpc.rs:90-96)
-            broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, 400))
-            obs.onNext(PbResponse(error = err))
-            obs.onCompleted()
-          case None =>
-            broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, 504))
-            obs.onError(Status.DEADLINE_EXCEEDED
-              .withDescription("query timeout").asRuntimeException())
-        }
+        // even when the map is empty. The reply is finished from the
+        // broker's future: no gRPC thread waits on the engine thread.
+        broker.submit(req.query, Some(req.params))
+          .orTimeout(timeoutSec, TimeUnit.SECONDS)
+          .handleAsync[Unit]((result: Either[String, QueryOutcome], err: Throwable) =>
+            (result, err) match {
+              case (Right(out), _) =>
+                log(200)
+                obs.onNext(PbResponse(out.rows.map(toItem), out.affectedNodes,
+                  out.affectedRels, out.mutated))
+                obs.onCompleted()
+              case (Left(msg), _) => // engine errors travel IN-BAND (grpc.rs:90-96)
+                log(400)
+                obs.onNext(PbResponse(error = msg))
+                obs.onCompleted()
+              case (_, _: TimeoutException) =>
+                log(504)
+                obs.onError(Status.DEADLINE_EXCEEDED
+                  .withDescription("query timeout").asRuntimeException())
+              case (_, e) =>
+                log(500)
+                obs.onError(Status.INTERNAL.withCause(e)
+                  .withDescription(String.valueOf(e.getMessage)).asRuntimeException())
+            })
       }
     })
 

@@ -184,8 +184,6 @@ object SimilarityOps {
         Seq("table_idx", "band_key"))
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id").distinct()
-    if (s.conf.getOption("spark.graft.lsh.verbose").contains("true"))
-      println(s"[lsh] cosineNearDup b=$b candidates=${cand.count()}")
     val ea = emb.select(col("vec_id").as("a_id"), col("embedding").as("a_e"),
       norm(col("embedding")).as("a_n"))
     val eb = emb.select(col("vec_id").as("b_id"), col("embedding").as("b_e"),

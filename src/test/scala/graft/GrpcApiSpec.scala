@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{EngineBroker, GrpcApi, GrpcClient, GraphLoomProto}
-import graft.engine.GraphSession
+import graft.engine.{GraphSession, QueryOutcome}
 
 /** Drives the reference's gRPC GraphQuery/Execute contract
   * (src/api/grpc.rs:20-98, proto/graph_loom.proto) over a real socket:
@@ -91,6 +91,37 @@ class GrpcApiSpec extends AnyFunSuite {
       assert(e2.getMessage.contains("UNAUTHENTICATED"))
       assert(goodKey.execute("MATCH NODE Person;").error.isEmpty)
     } finally { noKey.close(); wrongKey.close(); goodKey.close(); api.stop() }
+  }
+
+  test("grpc_timeout_is_deadline_exceeded_and_the_next_call_succeeds") {
+    // a stub session whose "block" query holds the engine thread until
+    // released; every other query answers at once
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val session = new GraphSession(spark) {
+      override def executeWithParams(query: String,
+          params: Map[String, String]): QueryOutcome = {
+        if (query == "block") release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        QueryOutcome(Nil, 0L, 0L, mutated = false)
+      }
+    }
+    val logDir = java.nio.file.Files.createTempDirectory("graft_grpc_logs")
+    val broker = new EngineBroker(session, logDir = Some(logDir.toString))
+    val api = new GrpcApi(broker, timeoutSec = 1)
+    val port = api.start()
+    val client = new GrpcClient("127.0.0.1", port)
+    try {
+      val e = intercept[Exception](client.execute("block"))
+      assert(e.getMessage.contains("DEADLINE_EXCEEDED"), e.getMessage)
+      release.countDown()
+      val next = client.execute("ok")
+      assert(next.error.isEmpty && next.rows.isEmpty)
+      val apiLines = java.nio.file.Files.list(logDir).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("api_"))
+        .flatMap(p => java.nio.file.Files.readAllLines(p).toArray.toSeq.map(_.toString))
+      assert(apiLines.exists(_.endsWith("status=504")), apiLines.mkString("\n"))
+      assert(apiLines.exists(_.endsWith("status=200")), apiLines.mkString("\n"))
+    } finally { release.countDown(); client.close(); api.stop(); broker.stop() }
   }
 
   test("grpc_proto_codec_roundtrips") {

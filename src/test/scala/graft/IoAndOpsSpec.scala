@@ -414,27 +414,56 @@ class IoAndOpsSpec extends AnyFunSuite {
   test("pagerank_matches_inmemory_reference") {
     // recompute the 8-sweep integer PageRank in plain Scala over the
     // full sf0.001 FK graph and require exact agreement — integer
-    // arithmetic makes this deterministic regardless of sum order
+    // arithmetic makes this deterministic regardless of sum order.
+    // Uniform, and personalized to the Supplier seeds: there the
+    // restart term and the initial mass go to seeds only.
     val g = graft.core.GraphBuilder.fromTables(spark, sf)
     val edges = g.edges.select("src", "dst").collect()
       .map(r => (r.getString(0), r.getString(1)))
-    val nodes = g.nodes.select("id").collect().map(_.getString(0))
+    val nodes = g.nodes.select("id", "label").collect()
+      .map(r => (r.getString(0), r.getString(1)))
     val scale = 10000000000L
     val base = scale * 15 / 100
     val outdeg = edges.groupBy(_._1).view.mapValues(_.length.toLong).toMap
-    var pr = nodes.map(_ -> scale).toMap
-    for (_ <- 1 to 8) {
-      val in = collection.mutable.Map.empty[String, Long]
-      for ((s0, d0) <- edges)
-        in(d0) = in.getOrElse(d0, 0L) + pr(s0) / outdeg(s0)
-      pr = nodes.map(id => id -> (base + 17 * in.getOrElse(id, 0L) / 20)).toMap
+    def reference(seed: String => Boolean): Map[String, Long] = {
+      val b = nodes.map { case (id, label) => id -> (if (seed(label)) base else 0L) }.toMap
+      var pr = nodes.map { case (id, label) => id -> (if (seed(label)) scale else 0L) }.toMap
+      for (_ <- 1 to 8) {
+        val in = collection.mutable.Map.empty[String, Long]
+        for ((s0, d0) <- edges)
+          in(d0) = in.getOrElse(d0, 0L) + pr(s0) / outdeg(s0)
+        pr = nodes.map { case (id, _) => id -> (b(id) + 17 * in.getOrElse(id, 0L) / 20) }.toMap
+      }
+      pr
     }
-    val got = graft.operators.GraphOps.pageRank(spark, sf).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == pr, "full PageRank vector must match the in-memory reference")
+    def ranks(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = ranks(graft.operators.GraphOps.pageRank(spark, sf))
+    assert(got == reference(_ => true), "full PageRank vector must match the in-memory reference")
     assert(got.size == nodes.length)
     // ranks are at least the base teleport mass
     assert(got.values.forall(_ >= base))
+    val ppr = ranks(graft.operators.GraphOps.personalizedPageRank(spark, sf))
+    assert(nodes.exists(_._2 == "Supplier") && nodes.exists(_._2 != "Supplier"))
+    assert(ppr == reference(_ == "Supplier"),
+      "full personalized PageRank vector must match the in-memory reference")
+  }
+
+  test("pagerank_guards_fail_before_anything_is_persisted") {
+    val g = graft.core.GraphBuilder.fromTables(spark, sf)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // 17·n·1e16 passes 2^63 once n > 54; sf0.001 has thousands of nodes
+    val overflow = intercept[IllegalArgumentException](
+      graft.algo.GraphAlgos.pageRankInt(g, scale = 10000000000000000L))
+    assert(overflow.getMessage.contains("overflow guard"))
+    // scale < 7 leaves no restart term
+    val noRestart = intercept[IllegalArgumentException](
+      graft.algo.GraphAlgos.pageRankInt(g, scale = 6L))
+    assert(noRestart.getMessage.contains("restart term"))
+    // no NEW persisted RDD (the context cleaner may still drop older
+    // ones from earlier tests meanwhile)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "a failed guard must leave no persisted blocks behind")
   }
 
   test("hop_distance_matches_inmemory_bfs") {

@@ -465,4 +465,54 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(outer.right.toString.contains("PsHopN"),
       s"the right-endpoint filter must join above the frontier join:\n$plan")
   }
+
+  // ---- iterative graph algorithms: one Spark job per superstep
+
+  /** The Spark jobs `body` starts, counted by a listener between two
+    * marker jobs: listener events arrive asynchronously but in order,
+    * so the end marker shows when every job of `body` is in. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"__jobs_marker_${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val state = new java.util.concurrent.atomic.AtomicInteger(0) // 0 before, 1 counting, 2 done
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
+          case d if d == s"$tag-start" => state.set(1)
+          case d if d == s"$tag-end"   => state.set(2)
+          case _ => if (state.get == 1) jobs.incrementAndGet()
+        }
+    }
+    def marker(which: String): Unit = {
+      sc.setJobDescription(s"$tag-$which")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (state.get != 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(state.get == 2, "listener events never arrived")
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("PageRank, BFS, SSSP and LPA run exactly one Spark job per sweep") {
+    import graft.algo.GraphAlgos
+    // each of the four still changes some vertex in sweep 2 on this
+    // graph, so sweeps = 3 runs exactly one sweep more than sweeps = 2
+    val g = graft.core.GraphBuilder.fromTables(spark, sf).materialized
+    def perSweep(run: Int => Unit): Int = jobsOf(run(3)) - jobsOf(run(2))
+    assert(perSweep(n => GraphAlgos.pageRankInt(g, sweeps = n)) == 1, "pageRankInt")
+    assert(perSweep(n => GraphAlgos.hopDistanceFrom(g, "Region", sweeps = n)) == 1,
+      "hopDistanceFrom")
+    assert(perSweep(n => GraphAlgos.ssspFrom(g, "Region",
+      graft.operators.GraphOps.ssspTypeWeights, sweeps = n)) == 1, "ssspFrom")
+    assert(perSweep(n => GraphAlgos.weightedLabelPropagation(g, maxSweeps = n)) == 1,
+      "weightedLabelPropagation")
+  }
 }
