@@ -314,7 +314,6 @@ object GraphAlgos {
       transform(map_entries(col("properties")),
         e => concat(e.getField("key"), lit("="), e.getField("value"))).as("kv"),
       greatest(size(col("properties")).cast("double"), lit(1.0)).as("nprops"))
-      .graftCheckpoint()
     val n1 = prepped.select(col("id").as("u"), col("label").as("u_label"),
       col("vid").as("u_vid"), col("kv").as("u_kv"), col("nprops").as("u_nprops"))
     val n2 = prepped.select(col("id").as("v"), col("label").as("v_label"),

@@ -1,6 +1,6 @@
 package graft.api
 
-import java.util.concurrent.{CompletableFuture, LinkedBlockingQueue, TimeUnit, TimeoutException}
+import java.util.concurrent.{CompletableFuture, LinkedBlockingQueue}
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.engine.{GraphSession, QueryOutcome}
@@ -96,7 +96,8 @@ class EngineBroker(session: GraphSession, logDir: Option[String] = None) {
   def nextRid(): String = s"${System.nanoTime()}-${ridCounter.getAndIncrement()}"
 
   /** Enqueue; the future completes on the engine thread with the
-    * outcome or the error text. Callers bound the wait themselves (the
+    * outcome or the error text. It is the one way in, for transports and
+    * in-process callers alike. Callers bound the wait themselves (the
     * request still completes on the engine thread, matching the
     * reference's recv_timeout semantics) and finish their reply on
     * their own executor, not on the engine thread. */
@@ -107,14 +108,6 @@ class EngineBroker(session: GraphSession, logDir: Option[String] = None) {
     queue.put(Req(query, params, reply))
     reply
   }
-
-  /** [[submit]], blocking up to `timeoutSec`, for in-process callers
-    * that own a thread; None = timeout. The transports finish from
-    * [[submit]]'s future instead. */
-  def execute(query: String, params: Option[Map[String, String]],
-      timeoutSec: Long): Option[Either[String, QueryOutcome]] =
-    try Some(submit(query, params).get(timeoutSec, TimeUnit.SECONDS))
-    catch { case _: TimeoutException => None }
 
   /** Self-heal an UNEXPECTEDLY dead drainer (a Throwable the loop
     * guards can't contain, e.g. a LinkageError inside the logging

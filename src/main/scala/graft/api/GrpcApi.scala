@@ -1,14 +1,18 @@
 package graft.api
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.net.InetSocketAddress
 import java.util.concurrent.{TimeUnit, TimeoutException}
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.sparkproject.connect.grpc.{CallOptions, Channel, ClientCall, ClientInterceptor, ForwardingClientCall, Metadata, MethodDescriptor, Server, ServerCall, ServerCallHandler, ServerInterceptor, ServerInterceptors, ServerServiceDefinition, Status}
-import org.sparkproject.connect.grpc.netty.{NettyChannelBuilder, NettyServerBuilder}
-import org.sparkproject.connect.grpc.stub.{ClientCalls, ServerCalls, StreamObserver}
-import org.sparkproject.connect.protobuf.{CodedInputStream, CodedOutputStream}
+import org.sparkproject.connect.grpc.{Metadata, MethodDescriptor, Server, ServerCall, ServerCallHandler, ServerInterceptor, ServerInterceptors, ServerServiceDefinition, Status}
+import org.sparkproject.connect.grpc.netty.NettyServerBuilder
+import org.sparkproject.connect.grpc.protobuf.ProtoUtils
+import org.sparkproject.connect.grpc.stub.{ServerCalls, StreamObserver}
+import org.sparkproject.connect.protobuf.DescriptorProtos._
+import org.sparkproject.connect.protobuf.DescriptorProtos.FieldDescriptorProto.Label.{LABEL_OPTIONAL, LABEL_REPEATED}
+import org.sparkproject.connect.protobuf.DescriptorProtos.FieldDescriptorProto.Type.{TYPE_BOOL, TYPE_MESSAGE, TYPE_STRING, TYPE_UINT64}
+import org.sparkproject.connect.protobuf.Descriptors.{Descriptor, FileDescriptor}
+import org.sparkproject.connect.protobuf.DynamicMessage
 
 import graft.engine.{QueryOutcome, ResultRow}
 
@@ -20,206 +24,123 @@ import graft.engine.{QueryOutcome, ResultRow}
   * broker timeout. Execution shares the single-engine-thread
   * [[EngineBroker]] with HTTP and the WS REPL.
   *
-  * No grpc-java artifact resolves in the offline sandbox, but Spark
-  * Connect ships a complete shaded gRPC+protobuf runtime
-  * (`org.sparkproject.connect.{grpc,protobuf}`) on the provided Spark
-  * classpath — public Spark distribution content. The three proto
-  * messages are tiny, so their proto3 wire format is hand-rolled with
-  * CodedInput/OutputStream ([[GraphLoomProto]]) instead of generating
-  * stubs with protoc (also unavailable offline). Wire-compatible with
-  * any stock protobuf client generated from graph_loom.proto.
+  * No grpc-java artifact resolves offline and protoc is unavailable, but
+  * Spark Connect ships the stock gRPC and protobuf-java runtimes, shaded
+  * as `org.sparkproject.connect.{grpc,protobuf}`, on the Spark classpath.
+  * [[GraphLoomProto]] holds graph_loom.proto as descriptors — what
+  * protoc would embed in generated stubs — and the stock `DynamicMessage`
+  * encodes and parses every message, so the wire format is the one any
+  * stub generated from graph_loom.proto speaks.
   */
 object GraphLoomProto {
 
-  final case class PbNode(id: String, label: String,
-      metadata: Seq[(String, String)])
-  final case class PbRel(id: String, fromId: String, toId: String,
-      label: String, metadata: Seq[(String, String)])
-  sealed trait PbItem
-  final case class ItemNode(n: PbNode) extends PbItem
-  final case class ItemRel(r: PbRel) extends PbItem
-  final case class ItemInfo(s: String) extends PbItem
-  final case class PbRequest(query: String = "",
-      params: Map[String, String] = Map.empty, log: Boolean = false)
-  final case class PbResponse(rows: Seq[PbItem] = Nil,
-      affectedNodes: Long = 0L, affectedRels: Long = 0L,
-      mutated: Boolean = false, error: String = "")
-
-  // ---------------------------------------------------------------- encode
-
-  private def msgBytes(f: CodedOutputStream => Unit): Array[Byte] = {
-    val baos = new ByteArrayOutputStream()
-    val cos = CodedOutputStream.newInstance(baos)
-    f(cos)
-    cos.flush()
-    baos.toByteArray
+  private def field(name: String, n: Int, t: FieldDescriptorProto.Type,
+      typeName: String = "", repeated: Boolean = false,
+      oneof: Boolean = false): FieldDescriptorProto = {
+    val b = FieldDescriptorProto.newBuilder().setName(name).setNumber(n).setType(t)
+      .setLabel(if (repeated) LABEL_REPEATED else LABEL_OPTIONAL)
+    if (typeName.nonEmpty) b.setTypeName(s".graph_loom.$typeName")
+    if (oneof) b.setOneofIndex(0)
+    b.build()
   }
 
-  /** proto3 map<string,string> entry: key=1, value=2. Canonical
-    * implementations (protobuf-java MapEntry, C++, prost) serialize
-    * BOTH fields unconditionally, even at default values — matching
-    * that keeps these frames byte-identical to generated-stub output
-    * (pinned against the stock runtime in GrpcWireCompatSpec). */
-  private def writeMapEntries(out: CodedOutputStream, field: Int,
-      entries: Seq[(String, String)]): Unit =
-    entries.foreach { case (k, v) =>
-      out.writeByteArray(field, msgBytes { e =>
-        e.writeString(1, k)
-        e.writeString(2, v)
-      })
+  private def str(name: String, n: Int) = field(name, n, TYPE_STRING)
+
+  private def message(name: String, fields: FieldDescriptorProto*): DescriptorProto.Builder =
+    DescriptorProto.newBuilder().setName(name).addAllField(fields.asJava)
+
+  /** Adds `map<string, string> name = n;` to `m`: a repeated field of
+    * its nested `<Name>Entry` type, as protoc declares a map. */
+  private def withMap(m: DescriptorProto.Builder, name: String, n: Int) = {
+    val entry = s"${name.capitalize}Entry"
+    m.addField(field(name, n, TYPE_MESSAGE, s"${m.getName}.$entry", repeated = true))
+      .addNestedType(message(entry, str("key", 1), str("value", 2))
+        .setOptions(MessageOptions.newBuilder().setMapEntry(true)))
+  }
+
+  private val file: FileDescriptor = FileDescriptor.buildFrom(
+    FileDescriptorProto.newBuilder()
+      .setName("graph_loom.proto").setPackage("graph_loom").setSyntax("proto3")
+      .addMessageType(withMap(message("QueryRequest", str("query", 1),
+        field("log", 3, TYPE_BOOL)), "params", 2))
+      .addMessageType(message("QueryResponse",
+        field("rows", 1, TYPE_MESSAGE, "QueryRow", repeated = true),
+        field("affected_nodes", 2, TYPE_UINT64),
+        field("affected_relationships", 3, TYPE_UINT64),
+        field("mutated", 4, TYPE_BOOL), str("error", 5)))
+      .addMessageType(message("QueryRow",
+          field("node", 1, TYPE_MESSAGE, "Node", oneof = true),
+          field("relationship", 2, TYPE_MESSAGE, "Relationship", oneof = true),
+          field("info", 3, TYPE_STRING, oneof = true))
+        .addOneofDecl(OneofDescriptorProto.newBuilder().setName("item")))
+      .addMessageType(withMap(message("Node", str("id", 1), str("label", 2)),
+        "metadata", 3))
+      .addMessageType(withMap(message("Relationship", str("id", 1), str("from_id", 2),
+        str("to_id", 3), str("label", 4)), "metadata", 5))
+      .build(),
+    Array.empty[FileDescriptor])
+
+  val QueryRequest: Descriptor = file.findMessageTypeByName("QueryRequest")
+  val QueryResponse: Descriptor = file.findMessageTypeByName("QueryResponse")
+  val QueryRow: Descriptor = file.findMessageTypeByName("QueryRow")
+  val Node: Descriptor = file.findMessageTypeByName("Node")
+  val Relationship: Descriptor = file.findMessageTypeByName("Relationship")
+
+  /** A `d` message from (field name, value) pairs; a Seq fills a
+    * repeated field and a null is left unset. Setting a proto3 scalar to
+    * its default leaves it unset too (the runtime clears it), so only
+    * oneof members and map entries carry default values on the wire —
+    * as every generated proto3 serializer writes them. */
+  private def msg(d: Descriptor, fields: (String, Any)*): DynamicMessage = {
+    val b = DynamicMessage.newBuilder(d)
+    for ((name, v) <- fields if v != null; f = d.findFieldByName(name)) v match {
+      case vs: Seq[_] => vs.foreach(x => b.addRepeatedField(f, x.asInstanceOf[AnyRef]))
+      case _ => b.setField(f, v.asInstanceOf[AnyRef])
     }
-
-  private def nodeBytes(n: PbNode): Array[Byte] = msgBytes { out =>
-    if (n.id.nonEmpty) out.writeString(1, n.id)
-    if (n.label.nonEmpty) out.writeString(2, n.label)
-    writeMapEntries(out, 3, n.metadata)
+    b.build()
   }
 
-  private def relBytes(r: PbRel): Array[Byte] = msgBytes { out =>
-    if (r.id.nonEmpty) out.writeString(1, r.id)
-    if (r.fromId.nonEmpty) out.writeString(2, r.fromId)
-    if (r.toId.nonEmpty) out.writeString(3, r.toId)
-    if (r.label.nonEmpty) out.writeString(4, r.label)
-    writeMapEntries(out, 5, r.metadata)
+  /** Metadata entries in key order, so a reply's bytes are deterministic. */
+  private def entries(owner: Descriptor, kv: Map[String, String]): Seq[DynamicMessage] = {
+    val d = owner.findFieldByName("metadata").getMessageType
+    kv.toSeq.sortBy(_._1).map { case (k, v) => msg(d, "key" -> k, "value" -> v) }
   }
 
-  private def rowBytes(item: PbItem): Array[Byte] = msgBytes { out =>
-    item match {
-      // oneof fields are written even at default values (presence!)
-      case ItemNode(n) => out.writeByteArray(1, nodeBytes(n))
-      case ItemRel(r)  => out.writeByteArray(2, relBytes(r))
-      case ItemInfo(s) => out.writeString(3, s)
-    }
+  private def row(r: ResultRow): DynamicMessage = msg(QueryRow, r.kind match {
+    case "node" => "node" -> msg(Node, "id" -> r.id, "label" -> r.label,
+      "metadata" -> entries(Node, r.properties))
+    case "relationship" => "relationship" -> msg(Relationship, "id" -> r.id,
+      "from_id" -> r.src, "to_id" -> r.dst, "label" -> r.label,
+      "metadata" -> entries(Relationship, r.properties))
+    case _ => "info" -> r.info
+  })
+
+  /** The QueryResponse for an outcome, or for an engine error, which
+    * fills only `error` (grpc.rs:90-96). */
+  def response(result: Either[String, QueryOutcome]): DynamicMessage = result match {
+    case Right(out) => msg(QueryResponse, "rows" -> out.rows.map(row),
+      "affected_nodes" -> out.affectedNodes,
+      "affected_relationships" -> out.affectedRels, "mutated" -> out.mutated)
+    case Left(error) => msg(QueryResponse, "error" -> error)
   }
 
-  def requestBytes(r: PbRequest): Array[Byte] = msgBytes { out =>
-    if (r.query.nonEmpty) out.writeString(1, r.query)
-    writeMapEntries(out, 2, r.params.toSeq)
-    if (r.log) out.writeBool(3, true)
-  }
+  private def valueOf(m: DynamicMessage, name: String): AnyRef =
+    m.getField(m.getDescriptorForType.findFieldByName(name))
 
-  def responseBytes(r: PbResponse): Array[Byte] = msgBytes { out =>
-    r.rows.foreach(item => out.writeByteArray(1, rowBytes(item)))
-    if (r.affectedNodes != 0L) out.writeUInt64(2, r.affectedNodes)
-    if (r.affectedRels != 0L) out.writeUInt64(3, r.affectedRels)
-    if (r.mutated) out.writeBool(4, true)
-    if (r.error.nonEmpty) out.writeString(5, r.error)
-  }
+  def query(req: DynamicMessage): String = valueOf(req, "query").toString
 
-  // ---------------------------------------------------------------- decode
-
-  private def tagOf(field: Int, wire: Int): Int = (field << 3) | wire
-
-  private def parseMapEntry(in: CodedInputStream): (String, String) = {
-    var k = ""; var v = ""
-    var done = false
-    while (!done) in.readTag() match {
-      case 0 => done = true
-      case t if t == tagOf(1, 2) => k = in.readString()
-      case t if t == tagOf(2, 2) => v = in.readString()
-      case t => in.skipField(t)
-    }
-    (k, v)
-  }
-
-  private def parseDelimited[T](in: CodedInputStream)(f: CodedInputStream => T): T = {
-    val len = in.readRawVarint32()
-    val limit = in.pushLimit(len)
-    val r = f(in)
-    in.popLimit(limit)
-    r
-  }
-
-  def parseRequest(in: CodedInputStream): PbRequest = {
-    var query = ""; var log = false
-    val params = mutable.LinkedHashMap.empty[String, String]
-    var done = false
-    while (!done) in.readTag() match {
-      case 0 => done = true
-      case t if t == tagOf(1, 2) => query = in.readString()
-      case t if t == tagOf(2, 2) => params += parseDelimited(in)(parseMapEntry)
-      case t if t == tagOf(3, 0) => log = in.readBool()
-      case t => in.skipField(t)
-    }
-    PbRequest(query, params.toMap, log)
-  }
-
-  private def parseNode(in: CodedInputStream): PbNode = {
-    var id = ""; var label = ""
-    val md = mutable.ArrayBuffer.empty[(String, String)]
-    var done = false
-    while (!done) in.readTag() match {
-      case 0 => done = true
-      case t if t == tagOf(1, 2) => id = in.readString()
-      case t if t == tagOf(2, 2) => label = in.readString()
-      case t if t == tagOf(3, 2) => md += parseDelimited(in)(parseMapEntry)
-      case t => in.skipField(t)
-    }
-    PbNode(id, label, md.toSeq)
-  }
-
-  private def parseRel(in: CodedInputStream): PbRel = {
-    var id = ""; var from = ""; var to = ""; var label = ""
-    val md = mutable.ArrayBuffer.empty[(String, String)]
-    var done = false
-    while (!done) in.readTag() match {
-      case 0 => done = true
-      case t if t == tagOf(1, 2) => id = in.readString()
-      case t if t == tagOf(2, 2) => from = in.readString()
-      case t if t == tagOf(3, 2) => to = in.readString()
-      case t if t == tagOf(4, 2) => label = in.readString()
-      case t if t == tagOf(5, 2) => md += parseDelimited(in)(parseMapEntry)
-      case t => in.skipField(t)
-    }
-    PbRel(id, from, to, label, md.toSeq)
-  }
-
-  private def parseRow(in: CodedInputStream): PbItem = {
-    var item: PbItem = ItemInfo("")
-    var done = false
-    while (!done) in.readTag() match {
-      case 0 => done = true
-      case t if t == tagOf(1, 2) => item = ItemNode(parseDelimited(in)(parseNode))
-      case t if t == tagOf(2, 2) => item = ItemRel(parseDelimited(in)(parseRel))
-      case t if t == tagOf(3, 2) => item = ItemInfo(in.readString())
-      case t => in.skipField(t)
-    }
-    item
-  }
-
-  def parseResponse(in: CodedInputStream): PbResponse = {
-    val rows = mutable.ArrayBuffer.empty[PbItem]
-    var an = 0L; var ar = 0L; var mutated = false; var error = ""
-    var done = false
-    while (!done) in.readTag() match {
-      case 0 => done = true
-      case t if t == tagOf(1, 2) => rows += parseDelimited(in)(parseRow)
-      case t if t == tagOf(2, 0) => an = in.readUInt64()
-      case t if t == tagOf(3, 0) => ar = in.readUInt64()
-      case t if t == tagOf(4, 0) => mutated = in.readBool()
-      case t if t == tagOf(5, 2) => error = in.readString()
-      case t => in.skipField(t)
-    }
-    PbResponse(rows.toSeq, an, ar, mutated, error)
-  }
-
-  // ------------------------------------------------------------ marshallers
-
-  private def marshaller[T](enc: T => Array[Byte],
-      dec: CodedInputStream => T): MethodDescriptor.Marshaller[T] =
-    new MethodDescriptor.Marshaller[T] {
-      override def stream(value: T): InputStream =
-        new ByteArrayInputStream(enc(value))
-      override def parse(stream: InputStream): T =
-        dec(CodedInputStream.newInstance(stream))
-    }
+  /** The request's `params` map; a repeated key keeps its last value, as
+    * proto3 map parsing specifies. */
+  def params(req: DynamicMessage): Map[String, String] =
+    valueOf(req, "params").asInstanceOf[java.util.List[DynamicMessage]].asScala
+      .map(e => valueOf(e, "key").toString -> valueOf(e, "value").toString).toMap
 
   /** `graph_loom.GraphQuery/Execute` — full method name matches what
     * any stub generated from graph_loom.proto dials. */
-  val executeMethod: MethodDescriptor[PbRequest, PbResponse] =
+  val executeMethod: MethodDescriptor[DynamicMessage, DynamicMessage] =
     MethodDescriptor.newBuilder(
-        marshaller[PbRequest](requestBytes, parseRequest),
-        marshaller[PbResponse](responseBytes, parseResponse))
+        ProtoUtils.marshaller(DynamicMessage.getDefaultInstance(QueryRequest)),
+        ProtoUtils.marshaller(DynamicMessage.getDefaultInstance(QueryResponse)))
       .setType(MethodDescriptor.MethodType.UNARY)
       .setFullMethodName(
         MethodDescriptor.generateFullMethodName("graph_loom.GraphQuery", "Execute"))
@@ -235,18 +156,12 @@ class GrpcApi(broker: EngineBroker, port: Int = 0,
     timeoutSec: Long = 30) {
   import GraphLoomProto._
 
-  private def toItem(r: ResultRow): PbItem = r.kind match {
-    case "node" => ItemNode(PbNode(r.id, r.label, r.properties.toSeq.sortBy(_._1)))
-    case "relationship" =>
-      ItemRel(PbRel(r.id, r.src, r.dst, r.label, r.properties.toSeq.sortBy(_._1)))
-    case _ => ItemInfo(r.info)
-  }
-
   private val handler = ServerCalls.asyncUnaryCall(
-    new ServerCalls.UnaryMethod[PbRequest, PbResponse] {
-      override def invoke(req: PbRequest, obs: StreamObserver[PbResponse]): Unit = {
+    new ServerCalls.UnaryMethod[DynamicMessage, DynamicMessage] {
+      override def invoke(req: DynamicMessage, obs: StreamObserver[DynamicMessage]): Unit = {
+        val q = query(req)
         val rid = broker.nextRid()
-        broker.apiLog.foreach(_.append(s"rid=$rid gRPC query qlen=${req.query.length}"))
+        broker.apiLog.foreach(_.append(s"rid=$rid gRPC query qlen=${q.length}"))
         val t0 = System.nanoTime()
         def log(status: Int): Unit =
           broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, status))
@@ -254,24 +169,19 @@ class GrpcApi(broker: EngineBroker, port: Int = 0,
         // unconditionally (grpc.rs:44) — ALWAYS the with-params path,
         // even when the map is empty. The reply is finished from the
         // broker's future: no gRPC thread waits on the engine thread.
-        broker.submit(req.query, Some(req.params))
+        broker.submit(q, Some(params(req)))
           .orTimeout(timeoutSec, TimeUnit.SECONDS)
           .handleAsync[Unit]((result: Either[String, QueryOutcome], err: Throwable) =>
-            (result, err) match {
-              case (Right(out), _) =>
-                log(200)
-                obs.onNext(PbResponse(out.rows.map(toItem), out.affectedNodes,
-                  out.affectedRels, out.mutated))
+            err match {
+              case null => // engine errors travel IN-BAND (grpc.rs:90-96)
+                log(if (result.isRight) 200 else 400)
+                obs.onNext(response(result))
                 obs.onCompleted()
-              case (Left(msg), _) => // engine errors travel IN-BAND (grpc.rs:90-96)
-                log(400)
-                obs.onNext(PbResponse(error = msg))
-                obs.onCompleted()
-              case (_, _: TimeoutException) =>
+              case _: TimeoutException =>
                 log(504)
                 obs.onError(Status.DEADLINE_EXCEEDED
                   .withDescription("query timeout").asRuntimeException())
-              case (_, e) =>
+              case e =>
                 log(500)
                 obs.onError(Status.INTERNAL.withCause(e)
                   .withDescription(String.valueOf(e.getMessage)).asRuntimeException())
@@ -314,40 +224,4 @@ class GrpcApi(broker: EngineBroker, port: Int = 0,
   def stop(): Unit = synchronized {
     if (server != null) { server.shutdownNow(); server = null }
   }
-}
-
-/** Minimal blocking client — the counterpart of the reference's
-  * examples/python_client/client.py, used by the spec and `graft.Shell
-  * --grpc`-style tooling. */
-class GrpcClient(host: String, port: Int, apiKey: Option[String] = None) {
-  import GraphLoomProto._
-
-  private val channel = {
-    val b = NettyChannelBuilder.forAddress(host, port).usePlaintext()
-    b.build()
-  }
-
-  private def callOptionsChannel: Channel = apiKey match {
-    case None => channel
-    case Some(k) =>
-      org.sparkproject.connect.grpc.ClientInterceptors.intercept(channel,
-        new ClientInterceptor {
-          override def interceptCall[A, B](m: MethodDescriptor[A, B],
-              o: CallOptions, ch: Channel): ClientCall[A, B] =
-            new ForwardingClientCall.SimpleForwardingClientCall[A, B](
-              ch.newCall(m, o)) {
-              override def start(l: ClientCall.Listener[B], h: Metadata): Unit = {
-                h.put(apiKeyHeader, k)
-                super.start(l, h)
-              }
-            }
-        })
-  }
-
-  def execute(query: String, params: Map[String, String] = Map.empty,
-      log: Boolean = false): PbResponse =
-    ClientCalls.blockingUnaryCall(callOptionsChannel, executeMethod,
-      CallOptions.DEFAULT, PbRequest(query, params, log))
-
-  def close(): Unit = channel.shutdownNow()
 }

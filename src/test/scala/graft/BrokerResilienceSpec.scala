@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{TimeUnit, TimeoutException}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.EngineBroker
@@ -16,6 +18,12 @@ import graft.engine.{GraphSession, QueryOutcome}
   * deliberate stop() still stops. */
 class BrokerResilienceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+
+  /** Submits and waits up to `timeoutSec`; None = timeout. */
+  private def submit(broker: EngineBroker, query: String,
+      timeoutSec: Long): Option[Either[String, QueryOutcome]] =
+    try Some(broker.submit(query, None).get(timeoutSec, TimeUnit.SECONDS))
+    catch { case _: TimeoutException => None }
 
   /** Stub session: magic query strings raise synthetic fatal errors
     * (nothing is actually exhausted); anything else answers canned. */
@@ -35,17 +43,17 @@ class BrokerResilienceSpec extends AnyFunSuite {
     val broker = new EngineBroker(stubSession())
     broker.start()
     try {
-      assert(broker.execute("ok", None, 10).contains(Right(
+      assert(submit(broker, "ok", 10).contains(Right(
         QueryOutcome(Nil, 0L, 0L, mutated = false))))
       // each fatal flavor answers the CLIENT (no timeout) with Left...
-      assert(broker.execute("boom_soe", None, 10)
+      assert(submit(broker, "boom_soe", 10)
         .exists(_.swap.exists(_.contains("synthetic overflow"))))
-      assert(broker.execute("boom_oom", None, 10)
+      assert(submit(broker, "boom_oom", 10)
         .exists(_.swap.exists(_.contains("synthetic oom"))))
-      assert(broker.execute("boom_npe", None, 10)
+      assert(submit(broker, "boom_npe", 10)
         .exists(_.swap.exists(_.contains("plain nonfatal"))))
       // ...and the SAME drainer still answers healthy traffic after
-      assert(broker.execute("ok", None, 10).exists(_.isRight))
+      assert(submit(broker, "ok", 10).exists(_.isRight))
     } finally broker.stop()
   }
 
@@ -58,7 +66,7 @@ class BrokerResilienceSpec extends AnyFunSuite {
     new graft.io.QueryLog(badDir, "queries").append("must not throw")
     val broker = new EngineBroker(stubSession(), logDir = Some(badDir))
     broker.start()
-    try assert(broker.execute("ok", None, 10).exists(_.isRight))
+    try assert(submit(broker, "ok", 10).exists(_.isRight))
     finally broker.stop()
   }
 
@@ -81,7 +89,7 @@ class BrokerResilienceSpec extends AnyFunSuite {
             val q =
               if (i % 5 == 4) s"MATCH (n:Stress) RETURN n LIMIT 1"
               else s"CREATE (:Stress {tag: 't${t}_$i'})"
-            broker.execute(q, None, 120) match {
+            submit(broker, q, 120) match {
               case None          => missed.incrementAndGet()
               case Some(Left(_)) => errs.incrementAndGet()
               case Some(Right(_)) => ()
@@ -101,9 +109,9 @@ class BrokerResilienceSpec extends AnyFunSuite {
   test("deliberate stop() is final — no self-heal past it") {
     val broker = new EngineBroker(stubSession())
     broker.start()
-    assert(broker.execute("ok", None, 10).exists(_.isRight))
+    assert(submit(broker, "ok", 10).exists(_.isRight))
     broker.stop()
     // post-stop the request must time out (thread gone, not restarted)
-    assert(broker.execute("ok", None, 1).isEmpty)
+    assert(submit(broker, "ok", 1).isEmpty)
   }
 }

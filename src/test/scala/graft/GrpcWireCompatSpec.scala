@@ -1,256 +1,70 @@
 package graft
 
 import java.io.ByteArrayInputStream
+import java.util.HexFormat
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.sparkproject.connect.grpc.{CallOptions, Channel, ClientCall, ClientInterceptor, ClientInterceptors, ForwardingClientCall, Metadata, MethodDescriptor, StatusRuntimeException}
+import org.sparkproject.connect.grpc.{CallOptions, Channel, ClientCall, ClientInterceptor, ClientInterceptors, ForwardingClientCall, ManagedChannel, Metadata, MethodDescriptor, StatusRuntimeException}
 import org.sparkproject.connect.grpc.netty.NettyChannelBuilder
 import org.sparkproject.connect.grpc.stub.ClientCalls
-import org.sparkproject.connect.protobuf.{CodedInputStream, DynamicMessage}
-import org.sparkproject.connect.protobuf.DescriptorProtos._
-import org.sparkproject.connect.protobuf.Descriptors.{Descriptor, FileDescriptor}
+import org.sparkproject.connect.protobuf.DynamicMessage
 
 import graft.api.{EngineBroker, GraphLoomProto, GrpcApi}
-import graft.engine.GraphSession
+import graft.engine.{GraphSession, QueryOutcome, ResultRow}
 
-/** Cross-validates the hand-rolled [[GraphLoomProto]] codec against the
-  * STOCK protobuf runtime (the shaded Google implementation Spark
-  * Connect ships) acting as a foreign party that shares no codec code
-  * with the engine:
-  *
-  *   1. the real `proto/graph_loom.proto:1-43` schema is rebuilt as
-  *      descriptors (the same structures `protoc` emits), and
-  *      `DynamicMessage` — the stock serializer/parser — plays the role
-  *      of a generated stub;
-  *   2. byte-level parity: hand-rolled encode == stock encode for
-  *      representative messages (oneof-at-default, empty map values,
-  *      all-defaults);
-  *   3. cross-parse both directions: each side decodes the other's
-  *      frames to the same logical values;
-  *   4. a port of the reference's `examples/python_client/client.py`
-  *      flow (CREATE + log, $params, in-band error, x-api-key
-  *      metadata) dials the live server with ONLY DynamicMessage
-  *      marshalling on the client side.
-  */
-class GrpcWireCompatSpec extends AnyFunSuite {
+/** The gRPC specs' one client: what a protoc-generated stub degrades to
+  * with the codegen stripped away. It builds requests and reads replies
+  * by field name from graph_loom.proto's descriptors and dials
+  * [[GraphLoomProto.executeMethod]]. */
+object GraphQueryClient {
   import GraphLoomProto._
 
-  lazy val spark = SparkTestSession.spark
+  def channel(port: Int): ManagedChannel =
+    NettyChannelBuilder.forAddress("127.0.0.1", port).usePlaintext().build()
 
-  // ------------------------------------------------- graph_loom.proto, rebuilt
+  /** A field's value by name, as a generated getter returns it. */
+  def get[T](m: DynamicMessage, name: String): T =
+    m.getField(m.getDescriptorForType.findFieldByName(name)).asInstanceOf[T]
 
-  private def strField(name: String, n: Int): FieldDescriptorProto =
-    FieldDescriptorProto.newBuilder().setName(name).setNumber(n)
-      .setType(FieldDescriptorProto.Type.TYPE_STRING)
-      .setLabel(FieldDescriptorProto.Label.LABEL_OPTIONAL).build()
+  def list(m: DynamicMessage, name: String): Seq[DynamicMessage] =
+    get[java.util.List[DynamicMessage]](m, name).asScala.toSeq
 
-  private def mapField(name: String, n: Int, entry: String): FieldDescriptorProto =
-    FieldDescriptorProto.newBuilder().setName(name).setNumber(n)
-      .setType(FieldDescriptorProto.Type.TYPE_MESSAGE)
-      .setTypeName(entry)
-      .setLabel(FieldDescriptorProto.Label.LABEL_REPEATED).build()
+  /** A map field's entries in wire order. */
+  def entries(m: DynamicMessage, name: String): Seq[(String, String)] =
+    list(m, name).map(e => get[String](e, "key") -> get[String](e, "value"))
 
-  private def mapEntryType(name: String): DescriptorProto =
-    DescriptorProto.newBuilder().setName(name)
-      .setOptions(MessageOptions.newBuilder().setMapEntry(true))
-      .addField(strField("key", 1)).addField(strField("value", 2)).build()
-
-  private val fileDescriptor: FileDescriptor = {
-    val queryRequest = DescriptorProto.newBuilder().setName("QueryRequest")
-      .addField(strField("query", 1))
-      .addField(mapField("params", 2, ".graph_loom.QueryRequest.ParamsEntry"))
-      .addField(FieldDescriptorProto.newBuilder().setName("log").setNumber(3)
-        .setType(FieldDescriptorProto.Type.TYPE_BOOL)
-        .setLabel(FieldDescriptorProto.Label.LABEL_OPTIONAL))
-      .addNestedType(mapEntryType("ParamsEntry"))
-      .build()
-    val node = DescriptorProto.newBuilder().setName("Node")
-      .addField(strField("id", 1)).addField(strField("label", 2))
-      .addField(mapField("metadata", 3, ".graph_loom.Node.MetadataEntry"))
-      .addNestedType(mapEntryType("MetadataEntry"))
-      .build()
-    val relationship = DescriptorProto.newBuilder().setName("Relationship")
-      .addField(strField("id", 1)).addField(strField("from_id", 2))
-      .addField(strField("to_id", 3)).addField(strField("label", 4))
-      .addField(mapField("metadata", 5, ".graph_loom.Relationship.MetadataEntry"))
-      .addNestedType(mapEntryType("MetadataEntry"))
-      .build()
-    def oneofMember(name: String, n: Int, typeName: Option[String]): FieldDescriptorProto = {
-      val b = FieldDescriptorProto.newBuilder().setName(name).setNumber(n)
-        .setLabel(FieldDescriptorProto.Label.LABEL_OPTIONAL).setOneofIndex(0)
-      typeName match {
-        case Some(t) => b.setType(FieldDescriptorProto.Type.TYPE_MESSAGE).setTypeName(t)
-        case None    => b.setType(FieldDescriptorProto.Type.TYPE_STRING)
-      }
-      b.build()
-    }
-    val queryRow = DescriptorProto.newBuilder().setName("QueryRow")
-      .addOneofDecl(OneofDescriptorProto.newBuilder().setName("item"))
-      .addField(oneofMember("node", 1, Some(".graph_loom.Node")))
-      .addField(oneofMember("relationship", 2, Some(".graph_loom.Relationship")))
-      .addField(oneofMember("info", 3, None))
-      .build()
-    val queryResponse = DescriptorProto.newBuilder().setName("QueryResponse")
-      .addField(FieldDescriptorProto.newBuilder().setName("rows").setNumber(1)
-        .setType(FieldDescriptorProto.Type.TYPE_MESSAGE)
-        .setTypeName(".graph_loom.QueryRow")
-        .setLabel(FieldDescriptorProto.Label.LABEL_REPEATED))
-      .addField(FieldDescriptorProto.newBuilder().setName("affected_nodes").setNumber(2)
-        .setType(FieldDescriptorProto.Type.TYPE_UINT64)
-        .setLabel(FieldDescriptorProto.Label.LABEL_OPTIONAL))
-      .addField(FieldDescriptorProto.newBuilder().setName("affected_relationships").setNumber(3)
-        .setType(FieldDescriptorProto.Type.TYPE_UINT64)
-        .setLabel(FieldDescriptorProto.Label.LABEL_OPTIONAL))
-      .addField(FieldDescriptorProto.newBuilder().setName("mutated").setNumber(4)
-        .setType(FieldDescriptorProto.Type.TYPE_BOOL)
-        .setLabel(FieldDescriptorProto.Label.LABEL_OPTIONAL))
-      .addField(strField("error", 5))
-      .build()
-    val file = FileDescriptorProto.newBuilder()
-      .setName("graph_loom.proto").setPackage("graph_loom").setSyntax("proto3")
-      .addMessageType(queryRequest).addMessageType(queryResponse)
-      .addMessageType(queryRow).addMessageType(node).addMessageType(relationship)
-      .addService(ServiceDescriptorProto.newBuilder().setName("GraphQuery")
-        .addMethod(MethodDescriptorProto.newBuilder().setName("Execute")
-          .setInputType(".graph_loom.QueryRequest")
-          .setOutputType(".graph_loom.QueryResponse")))
-      .build()
-    FileDescriptor.buildFrom(file, Array.empty[FileDescriptor])
+  /** The member a QueryRow's `item` oneof holds: its name and value. */
+  def item(row: DynamicMessage): (String, AnyRef) = {
+    val f = row.getOneofFieldDescriptor(QueryRow.getOneofs.get(0))
+    (f.getName, row.getField(f))
   }
 
-  private val reqD: Descriptor = fileDescriptor.findMessageTypeByName("QueryRequest")
-  private val respD: Descriptor = fileDescriptor.findMessageTypeByName("QueryResponse")
-  private val rowD: Descriptor = fileDescriptor.findMessageTypeByName("QueryRow")
-  private val nodeD: Descriptor = fileDescriptor.findMessageTypeByName("Node")
-  private val relD: Descriptor = fileDescriptor.findMessageTypeByName("Relationship")
-
-  // -------------------------------------- stock-side builders (generated-stub
-  // semantics: default-valued singular fields are simply never set, which is
-  // exactly what generated proto3 serializers omit from the wire)
-
-  private def stockMapEntries(d: Descriptor, field: String,
-      entries: Seq[(String, String)]): Seq[DynamicMessage] = {
-    val entryD = d.findFieldByName(field).getMessageType
-    entries.map { case (k, v) =>
-      val b = DynamicMessage.newBuilder(entryD)
-      if (k.nonEmpty) b.setField(entryD.findFieldByName("key"), k)
-      if (v.nonEmpty) b.setField(entryD.findFieldByName("value"), v)
-      b.build()
-    }
-  }
-
-  private def stockRequest(r: PbRequest): DynamicMessage = {
-    val b = DynamicMessage.newBuilder(reqD)
-    if (r.query.nonEmpty) b.setField(reqD.findFieldByName("query"), r.query)
-    stockMapEntries(reqD, "params", r.params.toSeq)
-      .foreach(b.addRepeatedField(reqD.findFieldByName("params"), _))
-    if (r.log) b.setField(reqD.findFieldByName("log"), java.lang.Boolean.TRUE)
-    b.build()
-  }
-
-  private def stockNode(n: PbNode): DynamicMessage = {
-    val b = DynamicMessage.newBuilder(nodeD)
-    if (n.id.nonEmpty) b.setField(nodeD.findFieldByName("id"), n.id)
-    if (n.label.nonEmpty) b.setField(nodeD.findFieldByName("label"), n.label)
-    stockMapEntries(nodeD, "metadata", n.metadata)
-      .foreach(b.addRepeatedField(nodeD.findFieldByName("metadata"), _))
-    b.build()
-  }
-
-  private def stockRel(r: PbRel): DynamicMessage = {
-    val b = DynamicMessage.newBuilder(relD)
-    if (r.id.nonEmpty) b.setField(relD.findFieldByName("id"), r.id)
-    if (r.fromId.nonEmpty) b.setField(relD.findFieldByName("from_id"), r.fromId)
-    if (r.toId.nonEmpty) b.setField(relD.findFieldByName("to_id"), r.toId)
-    if (r.label.nonEmpty) b.setField(relD.findFieldByName("label"), r.label)
-    stockMapEntries(relD, "metadata", r.metadata)
-      .foreach(b.addRepeatedField(relD.findFieldByName("metadata"), _))
-    b.build()
-  }
-
-  private def stockRow(item: PbItem): DynamicMessage = {
-    val b = DynamicMessage.newBuilder(rowD)
-    item match { // oneof members carry presence: set even at default value
-      case ItemNode(n) => b.setField(rowD.findFieldByName("node"), stockNode(n))
-      case ItemRel(r)  => b.setField(rowD.findFieldByName("relationship"), stockRel(r))
-      case ItemInfo(s) => b.setField(rowD.findFieldByName("info"), s)
+  /** QueryRequest(query, params, log); params go on the wire in order. */
+  def request(query: String, params: Seq[(String, String)] = Nil,
+      log: Boolean = false): DynamicMessage = {
+    val paramsF = QueryRequest.findFieldByName("params")
+    val entryD = paramsF.getMessageType
+    val b = DynamicMessage.newBuilder(QueryRequest)
+      .setField(QueryRequest.findFieldByName("query"), query)
+      .setField(QueryRequest.findFieldByName("log"), java.lang.Boolean.valueOf(log))
+    params.foreach { case (k, v) =>
+      b.addRepeatedField(paramsF, DynamicMessage.newBuilder(entryD)
+        .setField(entryD.findFieldByName("key"), k)
+        .setField(entryD.findFieldByName("value"), v).build())
     }
     b.build()
   }
 
-  private def stockResponse(r: PbResponse): DynamicMessage = {
-    val b = DynamicMessage.newBuilder(respD)
-    r.rows.foreach(it => b.addRepeatedField(respD.findFieldByName("rows"), stockRow(it)))
-    if (r.affectedNodes != 0L)
-      b.setField(respD.findFieldByName("affected_nodes"), java.lang.Long.valueOf(r.affectedNodes))
-    if (r.affectedRels != 0L)
-      b.setField(respD.findFieldByName("affected_relationships"), java.lang.Long.valueOf(r.affectedRels))
-    if (r.mutated) b.setField(respD.findFieldByName("mutated"), java.lang.Boolean.TRUE)
-    if (r.error.nonEmpty) b.setField(respD.findFieldByName("error"), r.error)
-    b.build()
-  }
+  /** The client.py call path: QueryRequest(query, params, log) → Execute. */
+  def executeQuery(ch: Channel, query: String, params: Map[String, String] = Map.empty,
+      log: Boolean = false): DynamicMessage =
+    ClientCalls.blockingUnaryCall(ch, executeMethod, CallOptions.DEFAULT,
+      request(query, params.toSeq, log))
 
-  // fixtures exercising every field, oneof-at-default, and empty map values
-  private val reqFixture = PbRequest("MATCH (p:Person {name: $who}) RETURN p",
-    Map("who" -> "Bob", "blank" -> ""), log = true)
-  private val respFixture = PbResponse(
-    rows = Seq(
-      ItemNode(PbNode("n1", "Person", Seq("name" -> "Ada", "note" -> ""))),
-      ItemRel(PbRel("r1", "n1", "n2", "KNOWS", Seq("w" -> "2"))),
-      ItemInfo("count: 2"),
-      ItemInfo("")), // oneof set to its default value must stay on the wire
-    affectedNodes = 3, affectedRels = 1, mutated = true, error = "boom")
-
-  test("handrolled_encode_matches_stock_protobuf_bytes") {
-    assert(requestBytes(reqFixture).toSeq == stockRequest(reqFixture).toByteArray.toSeq)
-    assert(responseBytes(respFixture).toSeq == stockResponse(respFixture).toByteArray.toSeq)
-    assert(requestBytes(PbRequest()).toSeq == stockRequest(PbRequest()).toByteArray.toSeq)
-    assert(responseBytes(PbResponse()).toSeq == stockResponse(PbResponse()).toByteArray.toSeq)
-  }
-
-  test("each_side_parses_the_others_frames") {
-    // stock bytes -> hand-rolled decoder
-    assert(parseRequest(CodedInputStream.newInstance(
-      stockRequest(reqFixture).toByteArray)) == reqFixture)
-    assert(parseResponse(CodedInputStream.newInstance(
-      stockResponse(respFixture).toByteArray)) == respFixture)
-    // hand-rolled bytes -> stock parser (DynamicMessage equality covers
-    // every field, including the oneof case)
-    assert(DynamicMessage.parseFrom(reqD, requestBytes(reqFixture)) ==
-      stockRequest(reqFixture))
-    assert(DynamicMessage.parseFrom(respD, responseBytes(respFixture)) ==
-      stockResponse(respFixture))
-  }
-
-  // ------------------------------------------------- the foreign client
-
-  /** DynamicMessage-marshalled `graph_loom.GraphQuery/Execute` — what a
-    * protoc-generated stub degrades to with the codegen stripped away;
-    * shares only the grpc transport with the server, none of
-    * [[GraphLoomProto]]. */
-  private val foreignMethod: MethodDescriptor[DynamicMessage, DynamicMessage] = {
-    def m(d: Descriptor) = new MethodDescriptor.Marshaller[DynamicMessage] {
-      override def stream(v: DynamicMessage) = new ByteArrayInputStream(v.toByteArray)
-      override def parse(s: java.io.InputStream) = DynamicMessage.parseFrom(d, s)
-    }
-    MethodDescriptor.newBuilder(m(reqD), m(respD))
-      .setType(MethodDescriptor.MethodType.UNARY)
-      .setFullMethodName(
-        MethodDescriptor.generateFullMethodName("graph_loom.GraphQuery", "Execute"))
-      .build()
-  }
-
-  /** The client.py call path: build QueryRequest(query, params, log),
-    * Execute, read response fields — via descriptors only. */
-  private def foreignExecute(ch: Channel, query: String,
-      params: Map[String, String] = Map.empty, log: Boolean = false): DynamicMessage =
-    ClientCalls.blockingUnaryCall(ch, foreignMethod, CallOptions.DEFAULT,
-      stockRequest(PbRequest(query, params, log)))
-
-  private def withApiKey(ch: Channel, key: String): Channel =
+  def withApiKey(ch: Channel, key: String): Channel =
     ClientInterceptors.intercept(ch, new ClientInterceptor {
       override def interceptCall[A, B](m: MethodDescriptor[A, B],
           o: CallOptions, c: Channel): ClientCall[A, B] =
@@ -261,52 +75,129 @@ class GrpcWireCompatSpec extends AnyFunSuite {
           }
         }
     })
+}
+
+/** Pins the wire contract of `graph_loom.GraphQuery/Execute`:
+  *
+  *   1. golden bytes: the exact frames of the fixtures below as the
+  *      earlier hand-rolled proto3 codec wrote them — byte-identical to
+  *      what the stock runtime (and so any generated stub) writes. The
+  *      server's response mapping and a DynamicMessage request must
+  *      encode to them, and parsing them must give the fields back;
+  *   2. a port of the reference's `examples/python_client/client.py`
+  *      flow (CREATE + log, $params, in-band error, x-api-key metadata)
+  *      against the live server.
+  */
+class GrpcWireCompatSpec extends AnyFunSuite {
+  import GraphLoomProto._
+  import GraphQueryClient._
+
+  lazy val spark = SparkTestSession.spark
+
+  private val hex = HexFormat.of()
+
+  // the fixtures cover every field, a oneof member at its default value
+  // and an empty map value
+  private val reqFixture = request("MATCH (p:Person {name: $who}) RETURN p",
+    Seq("who" -> "Bob", "blank" -> ""), log = true)
+  private val reqGolden =
+    "0a264d415443482028703a506572736f6e207b6e616d653a202477686f7d2920524554" +
+    "55524e2070120a0a0377686f1203426f6212090a05626c616e6b12001801"
+  private val outcomeFixture = QueryOutcome(Seq(
+      ResultRow.node("n1", "Person", Map("note" -> "", "name" -> "Ada")),
+      ResultRow.rel("r1", "n1", "n2", "KNOWS", Map("w" -> "2")),
+      ResultRow.info("count: 2"),
+      ResultRow.info("")), // a oneof member at its default stays on the wire
+    affectedNodes = 3, affectedRels = 1, mutated = true)
+  // rows, counters and mutated, then error = "boom"
+  private val respGolden =
+    "0a250a230a026e311206506572736f6e1a0b0a046e616d6512034164611a080a046e6f" +
+    "746512000a1d121b0a02723112026e311a026e3222054b4e4f57532a060a0177120132" +
+    "0a0a1a08636f756e743a20320a021a00100318012001" + "2a04626f6f6d"
+
+  test("encodes_to_the_golden_bytes") {
+    assert(hex.formatHex(reqFixture.toByteArray) == reqGolden)
+    assert(request("").toByteArray.isEmpty)
+    // an engine error fills `error` alone, so the fixture's rows-and-error
+    // frame is the outcome's frame followed by the error's (proto3
+    // concatenation is a merge)
+    assert(hex.formatHex(response(Right(outcomeFixture)).toByteArray ++
+      response(Left("boom")).toByteArray) == respGolden)
+    assert(response(Right(QueryOutcome(Nil, 0L, 0L, mutated = false))).toByteArray.isEmpty)
+  }
+
+  test("golden_bytes_parse_back_to_the_same_fields") {
+    // through the server's own marshallers
+    val req = executeMethod.parseRequest(new ByteArrayInputStream(hex.parseHex(reqGolden)))
+    assert(query(req) == "MATCH (p:Person {name: $who}) RETURN p")
+    assert(params(req) == Map("who" -> "Bob", "blank" -> ""))
+    assert(get[Boolean](req, "log"))
+    assert(executeMethod.parseRequest(new ByteArrayInputStream(Array.empty)) ==
+      request(""))
+
+    val resp = executeMethod.parseResponse(new ByteArrayInputStream(hex.parseHex(respGolden)))
+    assert(resp == response(Right(outcomeFixture)).toBuilder
+      .mergeFrom(response(Left("boom"))).build())
+    val Seq(node, rel, info, blank) = list(resp, "rows").map(item)
+    assert(node._1 == "node" && rel._1 == "relationship")
+    val n = node._2.asInstanceOf[DynamicMessage]
+    assert(get[String](n, "id") == "n1" && get[String](n, "label") == "Person")
+    assert(entries(n, "metadata") == Seq("name" -> "Ada", "note" -> ""))
+    val r = rel._2.asInstanceOf[DynamicMessage]
+    assert(Seq("id", "from_id", "to_id", "label").map(get[String](r, _)) ==
+      Seq("r1", "n1", "n2", "KNOWS"))
+    assert(entries(r, "metadata") == Seq("w" -> "2"))
+    assert(info == ("info" -> "count: 2") && blank == ("info" -> ""))
+    assert(get[Long](resp, "affected_nodes") == 3L)
+    assert(get[Long](resp, "affected_relationships") == 1L)
+    assert(get[Boolean](resp, "mutated") && get[String](resp, "error") == "boom")
+  }
 
   test("python_client_flow_over_live_socket_with_dynamic_stub") {
     val broker = new EngineBroker(new GraphSession(spark))
     val api = new GrpcApi(broker, apiKey = Some("sekret"))
     val port = api.start()
-    val channel = NettyChannelBuilder.forAddress("127.0.0.1", port).usePlaintext().build()
+    val channel = GraphQueryClient.channel(port)
     try {
-      val rowsF = respD.findFieldByName("rows")
-      val itemOneof = rowD.getOneofs.asScala.head
+      val rowsF = QueryResponse.findFieldByName("rows")
+      val itemOneof = QueryRow.getOneofs.asScala.head
 
       // no metadata -> UNAUTHENTICATED, as client.py's comment documents
       val denied = intercept[StatusRuntimeException](
-        foreignExecute(channel, "MATCH NODE Person;"))
+        executeQuery(channel, "MATCH NODE Person;"))
       assert(denied.getStatus.getCode.toString == "UNAUTHENTICATED")
 
       val ch = withApiKey(channel, "sekret")
       // client.py's query, verbatim
-      val created = foreignExecute(ch,
+      val created = executeQuery(ch,
         "CREATE (TEST:Note:URL {name: 'github'});", log = true)
-      assert(created.getField(respD.findFieldByName("error")) == "")
+      assert(created.getField(QueryResponse.findFieldByName("error")) == "")
       // the reference's Cypher path reports (rows, 0, 0, mutated) —
       // affected counters stay 0 for parenthesized CREATE
       // (query_interface.rs:185: `Ok((rows, 0, 0, mutated))`); client.py
       // prints "Affected Nodes: 0" against the real server too
-      assert(created.getField(respD.findFieldByName("affected_nodes")) == 0L)
-      assert(created.getField(respD.findFieldByName("mutated")) == true)
+      assert(created.getField(QueryResponse.findFieldByName("affected_nodes")) == 0L)
+      assert(created.getField(QueryResponse.findFieldByName("mutated")) == true)
       val createdRows = created.getField(rowsF)
         .asInstanceOf[java.util.List[DynamicMessage]].asScala
       assert(createdRows.exists { row =>
         row.getOneofFieldDescriptor(itemOneof).getName == "node" && {
-          val n = row.getField(rowD.findFieldByName("node")).asInstanceOf[DynamicMessage]
-          n.getField(nodeD.findFieldByName("label")).toString.contains("Note")
+          val n = row.getField(QueryRow.findFieldByName("node")).asInstanceOf[DynamicMessage]
+          n.getField(Node.findFieldByName("label")).toString.contains("Note")
         }
       })
 
       // $params travel through the stock-encoded map field
       // the engine mirrors the reference's label semantics: (:Note:URL)
       // stores the literal label "Note:URL" (first-':'-split only)
-      val byParam = foreignExecute(ch, "MATCH (p:Note:URL {name: $who}) RETURN p",
+      val byParam = executeQuery(ch, "MATCH (p:Note:URL {name: $who}) RETURN p",
         params = Map("who" -> "github"))
       assert(byParam.getField(rowsF)
         .asInstanceOf[java.util.List[DynamicMessage]].size == 1)
 
       // engine errors arrive IN-BAND (grpc.rs:90-96), not as a status
-      val bad = foreignExecute(ch, "UPDATE NODE x SET y=1")
-      assert(bad.getField(respD.findFieldByName("error")).toString
+      val bad = executeQuery(ch, "UPDATE NODE x SET y=1")
+      assert(bad.getField(QueryResponse.findFieldByName("error")).toString
         .contains("unrecognized statement"))
     } finally { channel.shutdownNow(); api.stop() }
   }

@@ -466,6 +466,17 @@ class IoAndOpsSpec extends AnyFunSuite {
       "a failed guard must leave no persisted blocks behind")
   }
 
+  test("lpa_leaves_only_its_result_persisted") {
+    val g = graft.core.GraphBuilder.fromTables(spark, sf)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val communities = graft.algo.GraphAlgos.weightedLabelPropagation(g)
+    // the result's own checkpoint at most; the context cleaner may still
+    // drop older ones from earlier tests meanwhile
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.size <= 1, s"persisted RDDs left behind: $left")
+    assert(communities.count() == g.nodes.count())
+  }
+
   test("hop_distance_matches_inmemory_bfs") {
     // plain-Scala BFS from the Region nodes over the undirected
     // sf0.001 FK graph; 8 sweeps must equal true shortest hops
