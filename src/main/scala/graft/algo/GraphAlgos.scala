@@ -1,12 +1,13 @@
 package graft.algo
 
 import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.core.Materialize.GraftMaterializeOps
 
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -17,11 +18,11 @@ import graft.core.PropertyGraph
   * weighted label-propagation community detection (GA2,
   * frontend.rs:509-588), community density (GA4, frontend.rs:602-616);
   * and beyond it PageRank, personalized PageRank, BFS hop distance,
-  * weighted shortest path and k-core.
+  * weighted shortest path, k-core and min-label connected components.
   *
-  * LPA, both PageRanks and BFS/SSSP are one vertex program each, run by
-  * the one superstep driver [[superstep]]; k-core is a DataFrame delta
-  * peel (see [[kCore]]).
+  * LPA, both PageRanks, BFS/SSSP, k-core and connected components are
+  * one vertex program each, run by the one superstep driver
+  * [[superstep]].
   */
 object GraphAlgos {
 
@@ -51,25 +52,33 @@ object GraphAlgos {
   /** The superstep driver: Pregel's vertex program run as Pregelix's
     * dataflow (PAPERS.md, VLDB 2014), one join plus one group-by per
     * sweep. An algorithm brings
-    * - `edges`: its edge payload keyed by SENDER vid (it may use the
+    * - `K`: its vertex key (the vid, or for k-core the node id itself);
+    * - `edges`: its edge payload keyed by SENDER (it may use the
     *   driver's partitioner to pre-partition);
-    * - `init`: its initial state keyed by vid, one row per node;
-    * - `gather`: sender-joined edges → messages keyed by receiver,
-    *   partitioned by the partitioner it is given;
+    * - `init`: its initial state, one row per vertex;
+    * - `gather`: sender-joined edges → at most one message per
+    *   receiver, partitioned by the partitioner it is given;
     * - `update(old, Option[msg])`, which must be deterministic;
     * - `sendUnchanged`: whether a vertex the previous sweep left
-    *   unchanged still sends. Only an idempotent min-combiner may pass
-    *   false (BFS/SSSP): such a vertex would resend a bound its
-    *   receivers already folded in, and update(old, None) = old;
+    *   unchanged still sends. False means only the vertices the last
+    *   sweep changed send (every vertex in sweep 1). That is valid for
+    *   an idempotent min-combiner (BFS/SSSP, components), where an
+    *   unchanged vertex would resend a bound its receivers already
+    *   folded in, and for a program that sends the delta of a change
+    *   exactly once (k-core); either way update(old, None) = old;
     * - `value` and `finish`: the result's one long per vertex, and the
-    *   frame built from (id, vid, value) and the (id, vid) map.
+    *   frame built from (vid, value), where vid holds the key.
     *
     * The driver owns the rest. One partitioner keys edges, state and
     * messages, so the sender join and the state update are narrow and
     * a sweep's only shuffle is the gather's map-side-combined
-    * reduceByKey. The edge RDD is partitioned and persisted once; the
-    * (id, vid) map is a lazy projection of the nodes, joined only into
-    * the result, so it holds no blocks. Each
+    * reduceByKey. Both joins are per-partition hash joins over the
+    * co-partitioned RDDs: they hash the senders or the messages and
+    * stream the edges or the state, where an RDD join would cogroup
+    * every edge into a per-key buffer each sweep (measured on q65 at
+    * sf0.01: 300-400 ms → about 100 ms a sweep). The edge RDD is
+    * partitioned and persisted once. Messages to a key outside the
+    * state are dropped. Each
     * sweep is exactly ONE job — the count that materializes the new
     * state — and a LongAccumulator in that job counts the vertices it
     * changed. It halts after `sweeps` sweeps, or after a sweep that
@@ -100,23 +109,21 @@ object GraphAlgos {
     * 99-135 s (3 JVMs, two hosts) vs ≤17 s before, q42 cold 29 s vs
     * 6 s, q53 itself 71 s vs 18 s rebuilding fresh, cold_total 449 s →
     * 233 s with the cache removed. */
-  private def superstep[E: ClassTag, S: ClassTag, M: ClassTag](
-      g: PropertyGraph, sweeps: Int,
-      edges: Partitioner => RDD[(Long, E)],
-      init: RDD[(Long, S)],
-      gather: (RDD[(Long, (E, S))], Partitioner) => RDD[(Long, M)],
+  private def superstep[K: ClassTag: TypeTag, E: ClassTag, S: ClassTag, M: ClassTag](
+      spark: SparkSession, sweeps: Int,
+      edges: Partitioner => RDD[(K, E)],
+      init: RDD[(K, S)],
+      gather: (RDD[(K, (E, S))], Partitioner) => RDD[(K, M)],
       update: (S, Option[M]) => S,
       sendUnchanged: Boolean,
       value: S => Long,
-      finish: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val spark = g.nodes.sparkSession
+      finish: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
     val sc = spark.sparkContext
-    val idMap = g.nodes.select(col("id"), vidExpr(col("id")).as("vid"))
     val part = new FirstElemHashPartitioner(math.max(sc.defaultParallelism, 16))
     val e = edges(part).partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
     // (state, changed by the last sweep); every vertex starts as a sender
-    var state: RDD[(Long, (S, Boolean))] = init.partitionBy(part)
+    var state: RDD[(K, (S, Boolean))] = init.partitionBy(part)
       .mapValues(s => (s, true)).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val changed = sc.longAccumulator("superstepChanged")
@@ -126,26 +133,36 @@ object GraphAlgos {
         sweep += 1
         changed.reset()
         val senders = if (sendUnchanged) state else state.filter(_._2._2)
-        val msgs = gather(e.join(senders.mapValues(_._1), part), part) // narrow join
-        val next = state.leftOuterJoin(msgs, part) // narrow
-          .mapValues { case ((old, _), m) =>
-            val s = update(old, m)
+        val sent = e.zipPartitions(senders, preservesPartitioning = true) { (es, ss) =>
+          val from = ss.map { case (v, (s, _)) => v -> s }.toMap
+          es.flatMap { case (v, x) => from.get(v).map(s => (v, (x, s))) }
+        }
+        val msgs = gather(sent, part)
+        val next = state.zipPartitions(msgs, preservesPartitioning = true) { (ss, ms) =>
+          val in = ms.toMap
+          ss.map { case (v, (old, _)) =>
+            val s = update(old, in.get(v))
             val moved = s != old
             if (moved) changed.add(1L)
-            (s, moved)
+            (v, (s, moved))
           }
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        }.persist(StorageLevel.MEMORY_AND_DISK)
         try next.count() // the sweep's one job
         finally { state.unpersist(blocking = false); state = next }
         live = changed.value > 0L
       }
-      finish(state.map { case (v, (s, _)) => (v, value(s)) }.toDF("vid", "value")
-        .join(idMap, "vid"), idMap).graftCheckpoint()
+      finish(state.map { case (v, (s, _)) => (v, value(s)) }.toDF("vid", "value"))
+        .graftCheckpoint()
     } finally {
       e.unpersist(blocking = true)
       state.unpersist(blocking = true)
     }
   }
+
+  /** (id, vid) of every node: a lazy projection of the nodes, joined
+    * only into a program's result, so it holds no blocks. */
+  private def idMap(g: PropertyGraph): DataFrame =
+    g.nodes.select(col("id"), vidExpr(col("id")).as("vid"))
 
   /** Integer fixed-point PageRank over the DIRECTED multigraph, run for
     * a fixed `sweeps` count: pr₀ = scale; pr_{k+1}(v) = (scale·15) div
@@ -191,7 +208,7 @@ object GraphAlgos {
     // n·scale, and the update multiplies by 17 before dividing
     require(BigInt(17) * g.nodes.count() * scale < BigInt(Long.MaxValue),
       s"pageRankInt overflow guard: 17*n*scale must stay < 2^63; lower scale=$scale")
-    superstep[(Long, Long), (Long, Long), Long](g, sweeps,
+    superstep[Long, (Long, Long), (Long, Long), Long](spark, sweeps,
       edges = part => {
         val bySrc = g.edges
           .select(vidExpr(col("src")).as("s"), vidExpr(col("dst")).as("d"))
@@ -208,7 +225,7 @@ object GraphAlgos {
       update = { case ((b, _), in) => (b, b + 17 * in.getOrElse(0L) / 20) },
       sendUnchanged = true,
       value = _._2,
-      finish = (ranked, _) => ranked.select(col("id"), col("value").as("pr")))
+      finish = _.join(idMap(g), "vid").select(col("id"), col("value").as("pr")))
   }
 
   /** Multi-source BFS hop distance over the UNDIRECTED graph: nodes
@@ -265,7 +282,7 @@ object GraphAlgos {
     val wExpr =
       if (typeWeights.isEmpty) lit(1L)
       else coalesce(element_at(typedLit(typeWeights), col("label")), lit(1L))
-    superstep[(Long, Long), Long, Long](g, sweeps,
+    superstep[Long, (Long, Long), Long, Long](spark, sweeps,
       edges = _ => g.edges
         .select(vidExpr(col("src")), vidExpr(col("dst")), wExpr.cast("long"))
         .as[(Long, Long, Long)].rdd
@@ -281,7 +298,7 @@ object GraphAlgos {
       update = (d, m) => m.fold(d)(math.min(d, _)),
       sendUnchanged = false,
       value = identity,
-      finish = (dists, _) => dists.select(col("id"),
+      finish = _.join(idMap(g), "vid").select(col("id"),
         when(col("value") === INF, lit(null).cast("bigint"))
           .otherwise(col("value")).as("dist")))
   }
@@ -358,7 +375,8 @@ object GraphAlgos {
     // are exact integers. 2^20 scale × max weight 2.25 ≈ 2.4e6 per
     // edge; overflow would need a destination degree above ~3.9e12.
     val wScale = 1L << 20
-    superstep[(Long, Long), Long, Long](g, maxSweeps,
+    val ids = idMap(g)
+    superstep[Long, (Long, Long), Long, Long](spark, maxSweeps,
       edges = _ => weightedNeighborPairs(g)
         .select(col("v_vid"), col("u_vid"),
           floor(col("weight") * wScale + lit(0.5)))
@@ -386,7 +404,7 @@ object GraphAlgos {
       update = (old, best) => best.getOrElse(old),
       sendUnchanged = true,
       value = identity,
-      finish = (members, ids) => members
+      finish = _.join(ids, "vid")
         .join(ids.select(col("vid").as("value"), col("id").as("community")), "value")
         .select("id", "community"))
   }
@@ -399,63 +417,74 @@ object GraphAlgos {
     * degree inside the final subgraph. With sweeps ≥ the peeling depth
     * this is the exact k-core.
     *
-    * DELTA form of the peel (the frontier trick applied to removal):
-    * with alive_i = alive_{i-1} \ removed_{i-1}, the sweep's degrees
-    * satisfy deg_i(u) = deg_{i-1}(u) − |{u→v : v ∈ removed_{i-1}}| for
-    * every surviving u — so after the first full degree count, each
-    * sweep only has to aggregate the edges INTO the just-removed set
-    * (a few per removed node, by definition < k each) and subtract,
-    * instead of re-semi-joining and re-counting the entire surviving
-    * edge list. Measured at sf0.1, the peel removes 13,787 nodes in
-    * sweep 1 and then 11 + 3 + 0 — the old shape paid three more full
-    * 2.7M-row passes for those 14 removals. Removal monotonicity makes
-    * the recurrence exact (a removed node never returns), and an empty
-    * removed set IS the fixpoint, so the early exit no longer needs a
-    * confirming full sweep. With sweeps ≥ peel depth the final frame is
-    * the oracle's l_sweeps bit-for-bit (same survivors, same degrees).
-    *
-    * Scale shape: one full map-side-combined groupBy over the edge
-    * list (sweep 1, exactly the old shape's first sweep), then per
-    * sweep one edge-list scan filtered by the removed set plus one
-    * alive-side update join; both joins are unhinted — AQE broadcasts
-    * the removed/delta side while it is small (the common case:
-    * peeling converges in a handful of sweeps) and degrades to a
-    * shuffle join rather than collecting an unbounded set to the
-    * driver when a first peel removes billions of nodes. No
-    * driver-side iteration state beyond the loop counter and the
-    * early-exit count. */
+    * DELTA form of the peel as a vertex program. Peel sweep 1 is the
+    * full degree count over edges with both endpoints among the nodes
+    * (`init`); a vertex whose degree is then < k is removed. With
+    * alive_i = alive_{i-1} \ removed_{i-1}, the later sweeps satisfy
+    * deg_i(u) = deg_{i-1}(u) − |{u→v : v ∈ removed_{i-1}}| for every
+    * surviving u, so each removed vertex sends 1 along each of its
+    * edges exactly once — in the sweep after its degree first fell
+    * below k, the only sweep in which it is both changed and below k —
+    * and a removed vertex is frozen (it ignores what it receives, so it
+    * never changes or sends again). Peel sweeps 2..`sweeps` are the
+    * driver's sweeps. Measured at sf0.1, the peel removes 13,787 nodes
+    * in sweep 1 and then 11 + 3 + 0, so the later sweeps send only a
+    * few messages each. Removal monotonicity makes the recurrence exact
+    * (a removed node never returns); a sweep that removes nothing
+    * leaves the next one nothing to send, which is the driver's
+    * fixpoint. Nodes with no edge among the nodes are absent from the
+    * degree count, as from the oracle's inner joins. Vertices are keyed
+    * by the node id itself, so no edge endpoint is hashed and `finish`
+    * joins nothing. */
   def kCore(g: PropertyGraph, k: Int = 3, sweeps: Int = 8): DataFrame = {
     require(sweeps >= 1, "kCore needs at least one peel sweep")
-    val und = undirectedEdges(g).graftCheckpoint()
-    // sweep 1: full degree within the whole node set (= the oracle's
-    // l1 over l0); keep the UNFILTERED aggregate so both partitions —
-    // survivors and removed — read from one checkpoint
-    var cur = und
-      .join(g.nodes.select(col("id").as("u")), Seq("u"), "left_semi")
-      .join(g.nodes.select(col("id").as("v")), Seq("v"), "left_semi")
-      .groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-      .graftCheckpoint()
-    var alive = cur.filter(col("deg") >= k)
-    var removed = cur.filter(col("deg") < k)
-    // nodes with zero surviving edges vanish from the aggregate rather
-    // than appearing as removed rows — harmless to the delta join (no
-    // edges to subtract) and identical to the oracle's inner joins
-    var removedCount = removed.count()
-    var sweep = 1
-    while (sweep < sweeps && removedCount > 0) {
-      sweep += 1
-      val delta = und
-        .join(removed.select(col("id").as("v")), Seq("v"), "left_semi")
-        .groupBy(col("u").as("id")).agg(count(lit(1)).as("d"))
-      val next = alive.join(delta, Seq("id"), "left")
-        .select(col("id"),
-          (col("deg") - coalesce(col("d"), lit(0L))).as("deg"))
-        .graftCheckpoint()
-      alive = next.filter(col("deg") >= k)
-      removed = next.filter(col("deg") < k)
-      removedCount = removed.count()
-    }
-    alive // (id, deg): survivors of the last peel, degree at that peel
+    val spark = g.nodes.sparkSession
+    import spark.implicits._
+    superstep[String, String, Long, Long](spark, sweeps - 1,
+      edges = _ => g.edges.select(col("src"), col("dst"))
+        .as[(String, String)].rdd
+        .flatMap { case (s, d) => Seq((s, d), (d, s)) },
+      init = undirectedEdges(g)
+        .join(g.nodes.select(col("id").as("u")), Seq("u"), "left_semi")
+        .join(g.nodes.select(col("id").as("v")), Seq("v"), "left_semi")
+        .groupBy(col("u")).agg(count(lit(1)))
+        .as[(String, Long)].rdd,
+      gather = (sent, part) => sent
+        .collect { case (_, (v, deg)) if deg < k => (v, 1L) }
+        .reduceByKey(part, _ + _),
+      update = (deg, m) => if (deg < k) deg else deg - m.getOrElse(0L),
+      sendUnchanged = false,
+      value = identity,
+      finish = _.filter(col("value") >= k)
+        .select(col("vid").as("id"), col("value").as("deg")))
+  }
+
+  /** Connected components by min-label propagation over an undirected
+    * pair set, shared by the dedup-clustering operators (text q43,
+    * embeddings q44). `ids`: one long column `id`, unique; `pairs`: long
+    * columns `a`, `b` (undirected edges), both drawn from `ids` — a pair
+    * naming an id outside `ids` is dropped, not added as a new element.
+    * Returns (id, cluster, keep) with cluster = smallest id reached
+    * within `sweeps` hops and keep marking the canonical member.
+    *
+    * SSSP with weight 0: state is the label, the gather a min, and only
+    * the vertices the last sweep changed send. Up to `sweeps` sweeps,
+    * halting at the fixpoint, so the result equals the fixed-sweep
+    * unroll the paired DuckDB oracles run (OracleSql.minLabelSweeps),
+    * whether or not the labels converge. */
+  def minLabelClusters(ids: DataFrame, pairs: DataFrame, sweeps: Int): DataFrame = {
+    val spark = ids.sparkSession
+    import spark.implicits._
+    superstep[Long, Long, Long, Long](spark, sweeps,
+      edges = _ => pairs.select(col("a"), col("b")).as[(Long, Long)].rdd
+        .flatMap { case (a, b) => Seq((a, b), (b, a)) },
+      init = ids.select(col("id")).as[Long].rdd.map(v => (v, v)),
+      gather = (sent, part) => sent.values.reduceByKey(part, math.min(_, _)),
+      update = (lbl, m) => m.fold(lbl)(math.min(lbl, _)),
+      sendUnchanged = false,
+      value = identity,
+      finish = _.select(col("vid").as("id"), col("value").as("cluster"),
+        (col("value") === col("vid")).as("keep")))
   }
 
   /** Community density (GA4): internal undirected edge count over

@@ -89,12 +89,7 @@ object Materialize extends Logging {
     }
   }
 
-  /** `.graftCheckpoint()` — call-site sugar for [[Materialize.frame]].
-    * (An r13 lazy variant existed for Components' fold-the-checksum-
-    * into-the-materializer trick; r14 moved that checksum to an
-    * observed metric riding the eager checkpoint job, which removed the
-    * lazy variant's only call site — and with it the easy-to-misuse
-    * "caller must run a full-partition action first" contract.) */
+  /** `.graftCheckpoint()` — call-site sugar for [[Materialize.frame]]. */
   implicit final class GraftMaterializeOps[T](private val ds: Dataset[T])
       extends AnyVal {
     def graftCheckpoint(): Dataset[T] = Materialize.frame(ds)

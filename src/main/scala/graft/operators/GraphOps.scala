@@ -1,7 +1,5 @@
 package graft.operators
 
-import graft.core.Materialize.GraftMaterializeOps
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -347,7 +345,7 @@ object GraphOps {
 
   def kCore(s: SparkSession, d: String): DataFrame =
     kcoreCache.getOrElseUpdate((s.sparkContext.applicationId, d))(
-      GraphAlgos.kCore(builtGraph(s, d)).graftCheckpoint()).orderBy("id")
+      GraphAlgos.kCore(builtGraph(s, d))).orderBy("id")
 
   /** DuckDB rendering of [[kCore]]: the FK edge list + 8 unrolled
     * peel sweeps (degree within the previous survivor set, HAVING >= k). */

@@ -91,7 +91,7 @@ object OracleSql {
 
   /** Unrolled fixed-sweep min-label propagation ladder `l1..l<sweeps>`
     * over CTEs `und(u, v)` and seed `l0(<idCol>, lbl)` — the SQL twin
-    * of `Components.minLabelClusters`. */
+    * of `GraphAlgos.minLabelClusters`. */
   def minLabelSweeps(idCol: String, sweeps: Int): Seq[String] =
     (1 to sweeps).map { k =>
       s"""l$k AS MATERIALIZED (SELECT $idCol, MIN(lbl) AS lbl FROM (

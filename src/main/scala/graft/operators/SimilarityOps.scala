@@ -5,6 +5,7 @@ import graft.core.Materialize.GraftMaterializeOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.algo.GraphAlgos
 
 /** Embedding similarity search + hash-based near-dup families
   * (MinHash+LSH, SimHash) over `embeddings` / `documents`.
@@ -365,10 +366,12 @@ object SimilarityOps {
 
   /** Embedding-side dedup clustering — q43's step over vectors:
     * connected components (fixed-sweep min-label propagation, see
-    * [[Components.minLabelClusters]]) over the [[cosineNearDupPairs]]
-    * near-dup graph, one canonical keeper per cluster. */
+    * [[GraphAlgos.minLabelClusters]]) over the [[cosineNearDupPairs]]
+    * near-dup graph, one canonical keeper per cluster. The pairs come
+    * from the embeddings table itself, so every pair names two vec_ids
+    * (its precondition). */
   def cosineDedupClusters(s: SparkSession, d: String, sweeps: Int = 8): DataFrame =
-    Components.minLabelClusters(
+    GraphAlgos.minLabelClusters(
         Tables.embeddings(s, d).select(col("vec_id").as("id")),
         cosineNearDupPairs(s, d)
           .select(col("a_id").as("a"), col("b_id").as("b")),

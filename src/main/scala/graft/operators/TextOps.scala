@@ -5,6 +5,7 @@ import graft.core.Materialize.GraftMaterializeOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.algo.GraphAlgos
 
 /** Training-data text pipeline operators over the `documents` table:
   * exact dedup, token counting, quality scoring, language ID,
@@ -185,17 +186,17 @@ object TextOps {
     * canonical representative per cluster ("drop near-duplicates, keep
     * one").
     *
-    * Components via min-label propagation run for a FIXED `sweeps`
-    * count on BOTH the engine and the oracle: near-dup clusters have
-    * tiny diameters (the semantics test checks agreement with true
-    * connected components), and fixing the sweep count makes the two
-    * sides agree bit-for-bit even on an adversarial chain longer than
-    * `sweeps` hops. Each sweep is one shuffle (neighbor join + min
-    * groupBy, map-side combined) over the df-capped pair set — at
-    * 100 TB the adjacency stays near-linear in the corpus and the loop
-    * is the standard large/small-star iteration shape. */
+    * Components by [[GraphAlgos.minLabelClusters]], min-label
+    * propagation run for a FIXED `sweeps` count on BOTH the engine and
+    * the oracle: near-dup clusters have tiny diameters (the semantics
+    * test checks agreement with true connected components), and fixing
+    * the sweep count makes the two sides agree bit-for-bit even on an
+    * adversarial chain longer than `sweeps` hops. Each sweep is one
+    * Spark job with one map-side-combined min shuffle over the
+    * df-capped pair set. The pairs come from the documents' own
+    * shingles, so every pair names two doc_ids (its precondition). */
   def dedupClusters(s: SparkSession, d: String, sweeps: Int = 8): DataFrame =
-    Components.minLabelClusters(
+    GraphAlgos.minLabelClusters(
         Tables.documents(s, d).select(col("doc_id").as("id")),
         ngramJaccardPairs(s, d)
           .select(col("a_id").as("a"), col("b_id").as("b")),

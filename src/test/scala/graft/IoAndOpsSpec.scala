@@ -467,14 +467,25 @@ class IoAndOpsSpec extends AnyFunSuite {
   }
 
   test("lpa_leaves_only_its_result_persisted") {
+    import spark.implicits._
+    import graft.algo.GraphAlgos
     val g = graft.core.GraphBuilder.fromTables(spark, sf)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val communities = graft.algo.GraphAlgos.weightedLabelPropagation(g)
     // the result's own checkpoint at most; the context cleaner may still
     // drop older ones from earlier tests meanwhile
-    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(left.size <= 1, s"persisted RDDs left behind: $left")
+    def leavesOnlyItsResult(name: String)(run: => org.apache.spark.sql.DataFrame) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val result = run
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.size <= 1, s"$name: persisted RDDs left behind: $left")
+      result
+    }
+    val communities = leavesOnlyItsResult("weightedLabelPropagation")(
+      GraphAlgos.weightedLabelPropagation(g))
     assert(communities.count() == g.nodes.count())
+    assert(leavesOnlyItsResult("kCore")(GraphAlgos.kCore(g)).count() > 0)
+    val chain = (1L until 20L).map(i => (i, i + 1)).toDF("a", "b")
+    assert(leavesOnlyItsResult("minLabelClusters")(
+      GraphAlgos.minLabelClusters((1L to 20L).toDF("id"), chain, 8)).count() == 20)
   }
 
   test("hop_distance_matches_inmemory_bfs") {
@@ -642,8 +653,8 @@ class IoAndOpsSpec extends AnyFunSuite {
   }
 
   // the cluster-survivability path end-to-end: a full iterative chain
-  // (k-core — up to 8 peel sweeps, one graftCheckpoint per sweep, plus
-  // the graph-build materialization) must produce EXACTLY the
+  // (k-core — up to 8 peel sweeps on the superstep driver, its result
+  // checkpoint, plus the graph-build materialization) must produce EXACTLY the
   // local-checkpoint results when every materialization goes to
   // reliable checkpoint files, and the files must be a plain removable
   // directory tree once the results are collected (the ContextCleaner
@@ -691,11 +702,13 @@ class IoAndOpsSpec extends AnyFunSuite {
     assert(engine(path, 2, 16).isEmpty)
     // (b) clique core + pendant chains + multi-edges + isolated nodes:
     // cascaded removals, duplicate-edge degree counting, nodes absent
-    // from the edge list entirely
+    // from the edge list entirely, a self-loop on a pendant that gets
+    // peeled (n8 counts it twice) and an edge to n13, which is no node
     val clique = for (i <- 0 until 6; j <- i + 1 until 6) yield (i, j)
     val chains = Seq((0, 6), (6, 7), (7, 8), (1, 9), (9, 10)) // pendants
     val multi = Seq((2, 3), (2, 3)) // duplicate edges count twice
-    val g2 = mkGraph(13, clique ++ chains ++ multi) // n11, n12 isolated
+    val loose = Seq((8, 8), (10, 13)) // self-loop; dangling endpoint
+    val g2 = mkGraph(13, clique ++ chains ++ multi ++ loose) // n11, n12 isolated
     for (k <- 1 to 4)
       assert(engine(g2, k, 8) == naive(g2, k, 8), s"clique+pendants k=$k")
   }

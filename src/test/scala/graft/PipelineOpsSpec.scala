@@ -111,7 +111,7 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("min_label_early_exit_identical_to_fixed_sweeps") {
     import spark.implicits._
-    import graft.operators.Components
+    import graft.algo.GraphAlgos.minLabelClusters
     // reference: the pre-r13 fixed-sweep unroll, inline
     def fixedSweeps(ids: org.apache.spark.sql.DataFrame,
         pairs: org.apache.spark.sql.DataFrame, sweeps: Int) = {
@@ -130,18 +130,21 @@ class PipelineOpsSpec extends AnyFunSuite {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Boolean)].collect().toSet
     // (a) fast-converging clusters: the early exit FIRES (diameter 2,
-    // sweeps 8) and must not change the assignment
+    // sweeps 8) and must not change the assignment; with a self-pair
+    // (7, 7), a duplicated and a reversed pair (9, 10) twice plus
+    // (10, 9), and ids with no pairs at all (4, 8, 12)
     val ids = (1L to 12L).toDF("id")
-    val smallPairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 10L), (9L, 11L))
+    val smallPairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 10L), (9L, 11L),
+      (7L, 7L), (9L, 10L), (10L, 9L), (3L, 2L))
       .toDF("a", "b")
-    assert(asSet(Components.minLabelClusters(ids, smallPairs, 8)) ==
+    assert(asSet(minLabelClusters(ids, smallPairs, 8)) ==
       asSet(fixedSweeps(ids, smallPairs, 8)))
     // (b) a chain LONGER than the sweep budget: labels are still moving
     // at sweep 8 (no fixpoint), so the early exit must NOT fire and the
     // truncated assignment must equal the fixed-sweep unroll's exactly
     val chainIds = (1L to 20L).toDF("id")
     val chain = (1L until 20L).map(i => (i, i + 1)).toDF("a", "b")
-    val got = asSet(Components.minLabelClusters(chainIds, chain, 8))
+    val got = asSet(minLabelClusters(chainIds, chain, 8))
     assert(got == asSet(fixedSweeps(chainIds, chain, 8)))
     // sanity: the far end of the chain has NOT reached label 1 in 8 hops
     assert(got.exists { case (id, cluster, _) => id == 20L && cluster != 1L })

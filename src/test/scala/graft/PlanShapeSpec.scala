@@ -501,9 +501,10 @@ class PlanShapeSpec extends AnyFunSuite {
     jobs.get
   }
 
-  test("PageRank, BFS, SSSP and LPA run exactly one Spark job per sweep") {
+  test("PageRank, BFS, SSSP, LPA, k-core and components run exactly one Spark job per sweep") {
     import graft.algo.GraphAlgos
-    // each of the four still changes some vertex in sweep 2 on this
+    import spark.implicits._
+    // each of the six still changes some vertex in sweep 2 on its
     // graph, so sweeps = 3 runs exactly one sweep more than sweeps = 2
     val g = graft.core.GraphBuilder.fromTables(spark, sf).materialized
     def perSweep(run: Int => Unit): Int = jobsOf(run(3)) - jobsOf(run(2))
@@ -514,5 +515,17 @@ class PlanShapeSpec extends AnyFunSuite {
       graft.operators.GraphOps.ssspTypeWeights, sweeps = n)) == 1, "ssspFrom")
     assert(perSweep(n => GraphAlgos.weightedLabelPropagation(g, maxSweeps = n)) == 1,
       "weightedLabelPropagation")
+    // a 30-node path at k = 2 peels one node from each end per sweep
+    val path = graft.core.PropertyGraph(
+      graft.core.PropertyGraph.nodesDf(spark,
+        (0 until 30).map(i => (s"n$i", "N", Map.empty[String, String]))),
+      graft.core.PropertyGraph.edgesDf(spark, (0 until 29).map(i =>
+        (s"e$i", s"n$i", s"n${i + 1}", "E", Map.empty[String, String]))))
+    assert(perSweep(n => GraphAlgos.kCore(path, 2, sweeps = n)) == 1, "kCore")
+    // the far end of a 20-id chain takes 19 sweeps to reach label 1
+    val chainIds = (1L to 20L).toDF("id")
+    val chain = (1L until 20L).map(i => (i, i + 1)).toDF("a", "b")
+    assert(perSweep(n => GraphAlgos.minLabelClusters(chainIds, chain, n)) == 1,
+      "minLabelClusters")
   }
 }
