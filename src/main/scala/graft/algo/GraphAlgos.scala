@@ -1,7 +1,6 @@
 package graft.algo
 
 import scala.reflect.ClassTag
-import scala.reflect.runtime.universe.TypeTag
 
 import graft.core.Materialize.GraftMaterializeOps
 
@@ -52,12 +51,11 @@ object GraphAlgos {
   /** The superstep driver: Pregel's vertex program run as Pregelix's
     * dataflow (PAPERS.md, VLDB 2014), one join plus one group-by per
     * sweep. An algorithm brings
-    * - `K`: its vertex key (the vid, or for k-core the node id itself);
-    * - `edges`: its edge payload keyed by SENDER (it may use the
+    * - `edges`: its edge payload keyed by SENDER vid (it may use the
     *   driver's partitioner to pre-partition);
-    * - `init`: its initial state, one row per vertex;
-    * - `gather`: sender-joined edges → at most one message per
-    *   receiver, partitioned by the partitioner it is given;
+    * - `init`: its initial state keyed by vid, one row per vertex;
+    * - `gather`: sender-joined edges → messages keyed by receiver,
+    *   partitioned by the partitioner it is given;
     * - `update(old, Option[msg])`, which must be deterministic;
     * - `sendUnchanged`: whether a vertex the previous sweep left
     *   unchanged still sends. False means only the vertices the last
@@ -67,18 +65,13 @@ object GraphAlgos {
     *   folded in, and for a program that sends the delta of a change
     *   exactly once (k-core); either way update(old, None) = old;
     * - `value` and `finish`: the result's one long per vertex, and the
-    *   frame built from (vid, value), where vid holds the key.
+    *   frame built from (vid, value).
     *
     * The driver owns the rest. One partitioner keys edges, state and
     * messages, so the sender join and the state update are narrow and
     * a sweep's only shuffle is the gather's map-side-combined
-    * reduceByKey. Both joins are per-partition hash joins over the
-    * co-partitioned RDDs: they hash the senders or the messages and
-    * stream the edges or the state, where an RDD join would cogroup
-    * every edge into a per-key buffer each sweep (measured on q65 at
-    * sf0.01: 300-400 ms → about 100 ms a sweep). The edge RDD is
-    * partitioned and persisted once. Messages to a key outside the
-    * state are dropped. Each
+    * reduceByKey. The edge RDD is partitioned and persisted once.
+    * Messages to a vid outside the state are dropped. Each
     * sweep is exactly ONE job — the count that materializes the new
     * state — and a LongAccumulator in that job counts the vertices it
     * changed. It halts after `sweeps` sweeps, or after a sweep that
@@ -109,11 +102,11 @@ object GraphAlgos {
     * 99-135 s (3 JVMs, two hosts) vs ≤17 s before, q42 cold 29 s vs
     * 6 s, q53 itself 71 s vs 18 s rebuilding fresh, cold_total 449 s →
     * 233 s with the cache removed. */
-  private def superstep[K: ClassTag: TypeTag, E: ClassTag, S: ClassTag, M: ClassTag](
+  private def superstep[E: ClassTag, S: ClassTag, M: ClassTag](
       spark: SparkSession, sweeps: Int,
-      edges: Partitioner => RDD[(K, E)],
-      init: RDD[(K, S)],
-      gather: (RDD[(K, (E, S))], Partitioner) => RDD[(K, M)],
+      edges: Partitioner => RDD[(Long, E)],
+      init: RDD[(Long, S)],
+      gather: (RDD[(Long, (E, S))], Partitioner) => RDD[(Long, M)],
       update: (S, Option[M]) => S,
       sendUnchanged: Boolean,
       value: S => Long,
@@ -123,7 +116,7 @@ object GraphAlgos {
     val part = new FirstElemHashPartitioner(math.max(sc.defaultParallelism, 16))
     val e = edges(part).partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
     // (state, changed by the last sweep); every vertex starts as a sender
-    var state: RDD[(K, (S, Boolean))] = init.partitionBy(part)
+    var state: RDD[(Long, (S, Boolean))] = init.partitionBy(part)
       .mapValues(s => (s, true)).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val changed = sc.longAccumulator("superstepChanged")
@@ -133,20 +126,15 @@ object GraphAlgos {
         sweep += 1
         changed.reset()
         val senders = if (sendUnchanged) state else state.filter(_._2._2)
-        val sent = e.zipPartitions(senders, preservesPartitioning = true) { (es, ss) =>
-          val from = ss.map { case (v, (s, _)) => v -> s }.toMap
-          es.flatMap { case (v, x) => from.get(v).map(s => (v, (x, s))) }
-        }
-        val msgs = gather(sent, part)
-        val next = state.zipPartitions(msgs, preservesPartitioning = true) { (ss, ms) =>
-          val in = ms.toMap
-          ss.map { case (v, (old, _)) =>
-            val s = update(old, in.get(v))
+        val msgs = gather(e.join(senders.mapValues(_._1), part), part) // narrow join
+        val next = state.leftOuterJoin(msgs, part) // narrow
+          .mapValues { case ((old, _), m) =>
+            val s = update(old, m)
             val moved = s != old
             if (moved) changed.add(1L)
-            (v, (s, moved))
+            (s, moved)
           }
-        }.persist(StorageLevel.MEMORY_AND_DISK)
+          .persist(StorageLevel.MEMORY_AND_DISK)
         try next.count() // the sweep's one job
         finally { state.unpersist(blocking = false); state = next }
         live = changed.value > 0L
@@ -208,7 +196,7 @@ object GraphAlgos {
     // n·scale, and the update multiplies by 17 before dividing
     require(BigInt(17) * g.nodes.count() * scale < BigInt(Long.MaxValue),
       s"pageRankInt overflow guard: 17*n*scale must stay < 2^63; lower scale=$scale")
-    superstep[Long, (Long, Long), (Long, Long), Long](spark, sweeps,
+    superstep[(Long, Long), (Long, Long), Long](spark, sweeps,
       edges = part => {
         val bySrc = g.edges
           .select(vidExpr(col("src")).as("s"), vidExpr(col("dst")).as("d"))
@@ -282,7 +270,7 @@ object GraphAlgos {
     val wExpr =
       if (typeWeights.isEmpty) lit(1L)
       else coalesce(element_at(typedLit(typeWeights), col("label")), lit(1L))
-    superstep[Long, (Long, Long), Long, Long](spark, sweeps,
+    superstep[(Long, Long), Long, Long](spark, sweeps,
       edges = _ => g.edges
         .select(vidExpr(col("src")), vidExpr(col("dst")), wExpr.cast("long"))
         .as[(Long, Long, Long)].rdd
@@ -376,7 +364,7 @@ object GraphAlgos {
     // edge; overflow would need a destination degree above ~3.9e12.
     val wScale = 1L << 20
     val ids = idMap(g)
-    superstep[Long, (Long, Long), Long, Long](spark, maxSweeps,
+    superstep[(Long, Long), Long, Long](spark, maxSweeps,
       edges = _ => weightedNeighborPairs(g)
         .select(col("v_vid"), col("u_vid"),
           floor(col("weight") * wScale + lit(0.5)))
@@ -433,30 +421,29 @@ object GraphAlgos {
     * (a removed node never returns); a sweep that removes nothing
     * leaves the next one nothing to send, which is the driver's
     * fixpoint. Nodes with no edge among the nodes are absent from the
-    * degree count, as from the oracle's inner joins. Vertices are keyed
-    * by the node id itself, so no edge endpoint is hashed and `finish`
-    * joins nothing. */
+    * degree count, as from the oracle's inner joins. */
   def kCore(g: PropertyGraph, k: Int = 3, sweeps: Int = 8): DataFrame = {
     require(sweeps >= 1, "kCore needs at least one peel sweep")
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    superstep[String, String, Long, Long](spark, sweeps - 1,
-      edges = _ => g.edges.select(col("src"), col("dst"))
-        .as[(String, String)].rdd
+    superstep[Long, Long, Long](spark, sweeps - 1,
+      edges = _ => g.edges.select(vidExpr(col("src")), vidExpr(col("dst")))
+        .as[(Long, Long)].rdd
         .flatMap { case (s, d) => Seq((s, d), (d, s)) },
       init = undirectedEdges(g)
         .join(g.nodes.select(col("id").as("u")), Seq("u"), "left_semi")
         .join(g.nodes.select(col("id").as("v")), Seq("v"), "left_semi")
-        .groupBy(col("u")).agg(count(lit(1)))
-        .as[(String, Long)].rdd,
+        .groupBy(col("u")).agg(count(lit(1)).as("deg"))
+        .select(vidExpr(col("u")), col("deg"))
+        .as[(Long, Long)].rdd,
       gather = (sent, part) => sent
         .collect { case (_, (v, deg)) if deg < k => (v, 1L) }
         .reduceByKey(part, _ + _),
       update = (deg, m) => if (deg < k) deg else deg - m.getOrElse(0L),
       sendUnchanged = false,
       value = identity,
-      finish = _.filter(col("value") >= k)
-        .select(col("vid").as("id"), col("value").as("deg")))
+      finish = _.filter(col("value") >= k).join(idMap(g), "vid")
+        .select(col("id"), col("value").as("deg")))
   }
 
   /** Connected components by min-label propagation over an undirected
@@ -467,15 +454,15 @@ object GraphAlgos {
     * Returns (id, cluster, keep) with cluster = smallest id reached
     * within `sweeps` hops and keep marking the canonical member.
     *
-    * SSSP with weight 0: state is the label, the gather a min, and only
-    * the vertices the last sweep changed send. Up to `sweeps` sweeps,
+    * SSSP with weight 0, each id its own vid: state is the label, the
+    * gather a min, and only the vertices the last sweep changed send. Up to `sweeps` sweeps,
     * halting at the fixpoint, so the result equals the fixed-sweep
     * unroll the paired DuckDB oracles run (OracleSql.minLabelSweeps),
     * whether or not the labels converge. */
   def minLabelClusters(ids: DataFrame, pairs: DataFrame, sweeps: Int): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    superstep[Long, Long, Long, Long](spark, sweeps,
+    superstep[Long, Long, Long](spark, sweeps,
       edges = _ => pairs.select(col("a"), col("b")).as[(Long, Long)].rdd
         .flatMap { case (a, b) => Seq((a, b), (b, a)) },
       init = ids.select(col("id")).as[Long].rdd.map(v => (v, v)),
