@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables
   * (see TESTDATA.md). One parquet file per table under the sf dir.
@@ -9,10 +11,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate pushdown + column pruning into the scan for free; at
   * cluster scale the same call reads a partitioned directory tree and
   * prunes partitions.
+  *
+  * A table's schema is inferred once per session: without one, every
+  * `spark.read.parquet` runs a Spark job that reads parquet footers.
+  * The memo is keyed by the session (inference reads its conf, e.g.
+  * `nanosAsLong`) and the table's qualified path. It holds only the
+  * `StructType` and the path's `FileStatus` modification time and
+  * length; a table rewritten in place changes those and is inferred
+  * again. Spark still lists and scans the files on every read, so
+  * appended files and new rows are seen. So it is not a
+  * [[graft.core.BoundedCache]], and `invalidateAll` leaves it: those
+  * caches hold computed artifacts, which go stale; a schema that
+  * follows the files' status does not.
   */
 object Tables {
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private final case class Inferred(mtime: Long, length: Long, schema: StructType)
+
+  /** session -> qualified path -> schema; weak on the session so a
+    * stopped session's entries go with it. */
+  private val inferred =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[String, Inferred]]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred at most
+    * once per session while the path's status is unchanged. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status = fs.getFileStatus(p)
+    val key = fs.makeQualified(p).toString
+    val bySession = inferred.synchronized {
+      inferred.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+    }
+    Option(bySession.get(key))
+      .filter(e => e.mtime == status.getModificationTime && e.length == status.getLen)
+      .getOrElse {
+        // inferred outside any lock: a racing duplicate is harmless
+        val e = Inferred(status.getModificationTime, status.getLen,
+          spark.read.parquet(path).schema)
+        bySession.put(key, e)
+        e
+      }.schema
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")
@@ -37,7 +81,8 @@ object Tables {
     * read it enables (the DataFrame is lazy). Consequence: any LATER
     * nanos-timestamp parquet read in the session also comes back as
     * LongType instead of erroring — acceptable here because ts_ns is
-    * the engine-wide convention for nanos columns. */
+    * the engine-wide convention for nanos columns. It is set before the
+    * read, so the schema memo's entry is always inferred under it. */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     deriveTsNs(apply(s, d, "events"))

@@ -7,6 +7,9 @@ package graft.core
   * Why bounded: a long-lived daemon (graft.Serve) touching many
   * datasets/param combos would otherwise pin checkpointed blocks in the
   * block-manager indefinitely and never observe refreshed data on disk.
+  * (Table schemas are not cached here: [[graft.Tables]] keeps them
+  * keyed by each file's status, so they follow the files by
+  * themselves.)
   * Eviction (LRU, past `maxEntries`) and explicit invalidation run the
   * cache's `release` hook (best-effort unpersist) and drop the strong
   * reference; Spark's ContextCleaner then reclaims any remaining

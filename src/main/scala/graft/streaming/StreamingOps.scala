@@ -25,12 +25,12 @@ object StreamingOps {
     * layouts — which any flat symlink staging would silently break,
     * because partition-column values live in the directory names. (The
     * earlier listFiles-based staging also dropped nested dirs and NPE'd
-    * on IO errors instead of raising.) The schema probe is a batch read
-    * of the same path, so partition columns appear in the stream schema
-    * exactly as they do in batch. */
+    * on IO errors instead of raising.) The schema is the batch read's
+    * ([[graft.Tables.schemaOf]]), so partition columns appear in the
+    * stream schema exactly as they do in batch. */
   private def stagedFileStream(spark: SparkSession, parquetFile: String,
       prefix: String): DataFrame = {
-    val schema = spark.read.parquet(parquetFile).schema
+    val schema = graft.Tables.schemaOf(spark, parquetFile)
     val src = new java.io.File(parquetFile)
     if (src.isDirectory)
       spark.readStream.schema(schema).parquet(parquetFile)
@@ -54,7 +54,7 @@ object StreamingOps {
     * the SAME derivation as the batch reader (`Tables.deriveTsNs` —
     * NANOS-as-long, TIMESTAMP_NTZ, or TIMESTAMP all accepted), so
     * batch/stream parity is by construction. The `nanosAsLong` conf is
-    * set before the schema probe so a NANOS file both probes and
+    * set before the schema lookup so a NANOS file both infers and
     * streams as LongType; the file-source `.schema(...)` is the raw
     * batch-read schema and the derivation runs on top of the stream. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {

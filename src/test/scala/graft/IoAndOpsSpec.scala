@@ -150,6 +150,26 @@ class IoAndOpsSpec extends AnyFunSuite {
       "orc scan must receive the pushed filter")
   }
 
+  test("tables_schema_memo_follows_rewrites_and_sees_appended_files") {
+    import spark.implicits._
+    val dir = tmpDir("graft_tables")
+    val path = s"$dir/t.parquet"
+    Seq((1L, "a", 1)).toDF("k", "v", "p").write.partitionBy("p").parquet(path)
+    assert(Tables(spark, dir, "t").columns.toSeq == Seq("k", "v", "p"))
+    // rewritten in place with one more column: the schema is inferred again
+    Seq((2L, "b", 2.5, 1)).toDF("k", "v", "w", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(path)
+    val rewritten = Tables(spark, dir, "t")
+    assert(rewritten.columns.toSeq == Seq("k", "v", "w", "p"))
+    assert(rewritten.select("w").as[Double].collect().toSeq == Seq(2.5))
+    // a part file appended inside a partition leaves the table's own
+    // status as it was, so the memo answers; its rows are still read
+    val schema = Tables.schemaOf(spark, path)
+    Seq((3L, "c", 3.5)).toDF("k", "v", "w").write.mode("append").parquet(s"$path/p=1")
+    assert(Tables.schemaOf(spark, path) eq schema)
+    assert(Tables(spark, dir, "t").select("k").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+  }
+
   test("exporters_shapes") {
     val s = new GraphSession(spark)
     s.execute("CREATE (:Person {name: 'Ada'});")

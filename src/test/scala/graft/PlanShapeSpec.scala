@@ -535,4 +535,17 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(perSweep(n => GraphAlgos.minLabelClusters(chainIds, chain, n)) == 1,
       "minLabelClusters")
   }
+
+  // ---- table reads
+
+  test("a table's schema is inferred once a session: later reads and a graph build run no job") {
+    Tables(spark, sf, "lineitem")
+    graft.core.GraphBuilder.fromTables(spark, sf)
+    assert(jobsOf(Tables(spark, sf, "lineitem")) == 0, "second lineitem read")
+    assert(jobsOf {
+      val g = graft.core.GraphBuilder.fromTables(spark, sf)
+      g.nodes.queryExecution.executedPlan
+      g.edges.queryExecution.executedPlan
+    } == 0, "planned graph build")
+  }
 }
