@@ -25,8 +25,7 @@ import graft.plans.RewriteHofVectorFold
   *
   * Optimizer rule: [[graft.plans.RewriteHofVectorFold]] rewrites the
   * interpreted `aggregate(zip_with(...))` dot-product shape into
-  * `graft_dot` (exact-semantics guard included; disable with
-  * `spark.graft.rewriteHofDot=false`).
+  * `graft_dot` (exact-semantics guard included, so it is always on).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
 import graft.api.{ApiServer, EngineBroker, GrpcApi}
@@ -10,8 +11,9 @@ import graft.io.GraphStore
 /** Headless daemon — parity with the reference's `--background` mode
   * (src/main.rs:214-289): load the active snapshot if one exists, serve
   * the HTTP API and the WebSocket REPL on one port over ONE shared
-  * engine broker, then run the dirty-flag autosave loop (save when a
-  * mutation has happened AND >5 s since the last save,
+  * engine broker, then run the dirty-flag autosave check every 100 ms
+  * as a fixed-delay task on its own `graft-autosave` thread (save when
+  * a mutation has happened AND >5 s since the last save,
   * main.rs:250-265).
   *
   * This is also the durable commit policy for cluster deployments: the
@@ -30,7 +32,7 @@ object Serve {
   final class Daemon(session: GraphSession, dataDir: String,
       port: Int = 0, apiKey: Option[String] = None,
       logDir: Option[String] = None, autosaveSecs: Long = 5,
-      pollMs: Long = 100, bindAddr: String = "127.0.0.1",
+      bindAddr: String = "127.0.0.1",
       grpcPort: Option[Int] = None) {
 
     if (GraphStore.listVersions(dataDir).nonEmpty)
@@ -43,51 +45,42 @@ object Serve {
 
     private val dirty = new AtomicBoolean(false)
     @volatile private var lastSaveNs = System.nanoTime()
-    @volatile private var running = false
     broker.onMutation = () => dirty.set(true)
 
-    private val autosaveThread = new Thread(() => {
-      while (running) {
+    private val autosave =
+      Executors.newSingleThreadScheduledExecutor(EngineBroker.daemonThreads("graft-autosave"))
+
+    private def autosaveIfDue(): Unit =
+      if (dirty.get() && (System.nanoTime() - lastSaveNs) / 1e9 >= autosaveSecs) {
+        // clear BEFORE saving so a mutation landing mid-save re-marks
+        // dirty; on a FAILED save re-mark ourselves, so the mutation is
+        // retried next check instead of sitting unpersisted until
+        // another mutation arrives (main.rs run_background clears only
+        // after a successful save). A failed save must not escape: a
+        // scheduled task that throws is never run again.
+        dirty.set(false)
         try {
-          if (dirty.get() && (System.nanoTime() - lastSaveNs) / 1e9 >= autosaveSecs) {
-            // clear BEFORE saving so a mutation landing mid-save re-marks
-            // dirty; on a FAILED save re-mark ourselves, so the mutation
-            // is retried next cycle instead of sitting unpersisted until
-            // another mutation arrives (main.rs run_background clears
-            // only after a successful save)
-            dirty.set(false)
-            try {
-              GraphStore.save(session.graph, dataDir)
-              lastSaveNs = System.nanoTime()
-            } catch {
-              case e: Exception =>
-                dirty.set(true)
-                System.err.println(s"[graft] autosave failed (will retry): ${e.getMessage}")
-            }
-          }
-          Thread.sleep(pollMs)
+          GraphStore.save(session.graph, dataDir)
+          lastSaveNs = System.nanoTime()
         } catch {
-          case _: InterruptedException => Thread.currentThread().interrupt()
-          case e: Exception => System.err.println(s"[graft] autosave failed: ${e.getMessage}")
+          case e: Exception =>
+            dirty.set(true)
+            System.err.println(s"[graft] autosave failed (will retry): ${e.getMessage}")
         }
       }
-    }, "graft-autosave")
-    autosaveThread.setDaemon(true)
 
     /** Returns the bound API port (HTTP and WS) and gRPC port. */
     def start(): (Int, Option[Int]) = {
-      running = true
       val ap = api.start()
       // keep the BOUND port (start() returns it): with --grpc-port 0 the
       // configured value is useless for reaching the server
       val gp = grpc.map(_.start())
-      autosaveThread.start()
+      autosave.scheduleWithFixedDelay(() => autosaveIfDue(), 100, 100, TimeUnit.MILLISECONDS)
       (ap, gp)
     }
 
     def stop(): Unit = {
-      running = false
-      autosaveThread.interrupt()
+      autosave.shutdownNow()
       grpc.foreach(_.stop())
       api.stop()
       broker.stop()

@@ -189,12 +189,10 @@ class ApiServer(broker: EngineBroker, port: Int = 0,
   }
 
   /** The broker's future for `query`, failed with a TimeoutException
-    * after `timeoutSec`; a submit that throws gives a failed future. */
+    * after `timeoutSec`. */
   private def submit(query: String, params: Option[Map[String, String]],
       timeoutSec: Long): CompletableFuture[Either[String, QueryOutcome]] =
-    (try broker.submit(query, params)
-    catch { case NonFatal(e) => CompletableFuture.failedFuture[Either[String, QueryOutcome]](e) })
-      .orTimeout(timeoutSec, TimeUnit.SECONDS)
+    broker.submit(query, params).orTimeout(timeoutSec, TimeUnit.SECONDS)
 
   /** `{"query": "...", "params": {...}, "log": bool}`: the top level
     * must be an object whose `query` is a string. `params` is optional

@@ -213,10 +213,6 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     }
   }
 
-  private def varName(np: NodePattern): String = np.variable.getOrElse {
-    val v = freshAnon(); hidden += v; v
-  }
-
   private def matchNodeOnly(g: PropertyGraph, binding: DataFrame, np: NodePattern): DataFrame = {
     np.variable match {
       case Some(v) if kinds.contains(v) =>

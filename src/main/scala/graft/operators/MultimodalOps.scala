@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Tables
 
@@ -25,12 +24,6 @@ import graft.Tables
   * explicit aggregation).
   */
 object MultimodalOps {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("bytes", BinaryType, nullable = false),
-    StructField("meta", MapType(StringType, StringType), nullable = false)))
 
   /** Synthesizes a deterministic media table from `documents` (the
     * text bytes stand in for encoded media payloads). */
@@ -96,19 +89,6 @@ object MultimodalOps {
           i => (featLevel(col("__h"), i).cast("double") / 1000.0 - 1.0)
             .cast("float")))
       .drop("__h")
-
-  /** Exact-integer squared norm of the fake embedding, scaled by 10⁶:
-    * Σ (k_i − 1000)² over the same integer levels the float embedding
-    * is built from — BIGINT on both engines, so the pipeline summary
-    * is hash-checkable with no floating-point accumulation order in
-    * sight. */
-  def featNormSqScaled(media: DataFrame, dim: Int = 64): DataFrame =
-    media.withColumn("__h", mdSlice(col("bytes"), 17))
-      .select(col("media_id"),
-        aggregate(sequence(lit(0L), lit(dim - 1L)), lit(0L),
-          (acc, i) => acc +
-            (featLevel(col("__h"), i) - 1000L) * (featLevel(col("__h"), i) - 1000L))
-          .as("norm_sq_scaled"))
 
   /** Full pipeline query: media → decode → resize → features, grouped
     * stats per kind. Every aggregate is an exact integer (dimensions

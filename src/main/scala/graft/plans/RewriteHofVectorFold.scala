@@ -33,14 +33,11 @@ import graft.functions.{DotProduct, SquaredL2}
   *    elements to double (float→double widening is exact, identical to
   *    DotProduct's own widening). A bare float×float lambda rounds each
   *    product to float first — a DIFFERENT result — and is left alone.
-  *
-  * Disable with `spark.graft.rewriteHofDot=false`.
   */
 object RewriteHofVectorFold extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString("spark.graft.rewriteHofDot", "true") != "true") plan
-    else plan.transformAllExpressions {
+    plan.transformAllExpressions {
       case ArrayAggregate(
             ZipWith(a, b, prod: LambdaFunction),
             DoubleZero(),

@@ -128,45 +128,6 @@ object StreamingOps {
       }
   }
 
-  /** Flat-tuple twin of [[sessionize]] — identical session semantics
-    * and output rows, but the per-event input is `(Long, Long)` (user,
-    * epoch-millis straight off `ts_ns`) instead of a case class with a
-    * boxed `java.sql.Timestamp`, the state is a primitive tuple, and
-    * the in-batch sort is a primitive-array sort. Exists to isolate
-    * WHERE sessionize's per-event cost goes: the two paths share the
-    * state round-trip count exactly, so any throughput delta is the
-    * row encoder + per-event object overhead, not the state store.
-    * (StreamBench `sessionize` vs `sessionize_flat` is the probe;
-    * BASELINE.md records the measurements.) */
-  def sessionizeFlat(events: DataFrame, gapMs: Long = 30 * 60 * 1000L): Dataset[SessionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id"), expr("ts_ns div 1000000").as("ts_ms"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Int), SessionOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Long)],
-            state: GroupState[(Long, Long, Int)]) =>
-          val times = rows.map(_._2).toArray
-          java.util.Arrays.sort(times)
-          var (start, last, n) = state.getOption.getOrElse((times(0), times(0), 0))
-          val closedOut = Seq.newBuilder[SessionOut]
-          var i = 0
-          while (i < times.length) {
-            val t = times(i)
-            if (t - last > gapMs) {
-              closedOut += SessionOut(user, start, last, n, closed = true)
-              start = t; last = t; n = 1
-            } else { last = math.max(last, t); n += 1 }
-            i += 1
-          }
-          state.update((start, last, n))
-          (closedOut.result() :+
-            SessionOut(user, start, last, n, closed = false)).iterator
-      }
-  }
-
   case class FunnelInput(user_id: Long, event_type: String, ts_us: Long)
   case class FunnelState(v_us: Long, c_us: Long, p_us: Long)
   case class FunnelOut(user_id: Long, v_us: Option[Long], c_us: Option[Long],

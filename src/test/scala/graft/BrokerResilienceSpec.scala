@@ -1,6 +1,8 @@
 package graft
 
-import java.util.concurrent.{TimeUnit, TimeoutException}
+import java.util.concurrent.{ExecutionException, RejectedExecutionException, TimeUnit, TimeoutException}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,8 +16,8 @@ import graft.engine.{GraphSession, QueryOutcome}
   * query (deep lineage, a huge literal list, an executor-side error
   * rethrown as an Error) can raise exactly those on the engine thread.
   * This spec pins the survivability contract: a fatal per-query error
-  * is answered as Left and the SAME thread keeps draining; a
-  * deliberate stop() still stops. */
+  * is answered as Left and the SAME thread keeps draining; requests run
+  * in submission order; a deliberate stop() still stops. */
 class BrokerResilienceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -106,12 +108,47 @@ class BrokerResilienceSpec extends AnyFunSuite {
     } finally broker.stop()
   }
 
+  test("requests run in submission order, across a stop()/start() cycle") {
+    // perfbench's Outstanding ties an engine-side span to the OLDEST
+    // outstanding request with the same text: that needs FIFO draining
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val session = new GraphSession(spark) {
+      override def execute(query: String): QueryOutcome = {
+        ran.add(query); QueryOutcome(Nil, 0L, 0L, mutated = false)
+      }
+    }
+    val broker = new EngineBroker(session)
+    def roundTrip(tag: String): Unit = {
+      ran.clear()
+      val qs = (0 until 50).map(i => s"$tag-$i")
+      val futures = qs.map(broker.submit(_, None))
+      futures.foreach(f => assert(f.get(10, TimeUnit.SECONDS).isRight))
+      assert(ran.asScala.toSeq == qs)
+    }
+    broker.start()
+    try {
+      roundTrip("first")
+      broker.stop()
+      broker.start()
+      roundTrip("restarted")
+    } finally broker.stop()
+  }
+
+  /** Live engine threads; other suites' unstopped brokers own some. */
+  private def engineThreads(): Set[Thread] = Thread.getAllStackTraces.keySet
+    .asScala.filter(t => t.isAlive && t.getName == "graft-engine").toSet
+
   test("deliberate stop() is final — no self-heal past it") {
+    val others = engineThreads()
     val broker = new EngineBroker(stubSession())
     broker.start()
     assert(submit(broker, "ok", 10).exists(_.isRight))
     broker.stop()
-    // post-stop the request must time out (thread gone, not restarted)
-    assert(submit(broker, "ok", 1).isEmpty)
+    // post-stop a request is rejected at once, and no engine thread is
+    // left alive to drain it
+    val err = intercept[ExecutionException](
+      broker.submit("ok", None).get(1, TimeUnit.SECONDS))
+    assert(err.getCause.isInstanceOf[RejectedExecutionException])
+    assert((engineThreads() -- others).isEmpty)
   }
 }

@@ -108,7 +108,7 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(neg.as[Double].collect().toSeq == Seq(-18.0, -5.0))
   }
 
-  test("hof_rewrite_skips_float_precision_and_respects_conf") {
+  test("hof_rewrite_skips_float_precision") {
     // bare float*float rounds per element — NOT the same arithmetic;
     // the rule must leave it interpreted rather than change results
     val df = spark.range(1).select(
@@ -119,14 +119,5 @@ class ExtensionsSpec extends AnyFunSuite {
       lit(0.0), (acc, v) => acc + v).as("dot"))
     assert(!floatMul.queryExecution.optimizedPlan.expressions.exists(
       _.exists(_.isInstanceOf[graft.functions.DotProduct])))
-
-    spark.conf.set("spark.graft.rewriteHofDot", "false")
-    try {
-      val off = df.select(aggregate(
-        zip_with(col("a"), col("b"), (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, v) => acc + v).as("dot"))
-      assert(!off.queryExecution.optimizedPlan.expressions.exists(
-        _.exists(_.isInstanceOf[graft.functions.DotProduct])))
-    } finally spark.conf.unset("spark.graft.rewriteHofDot")
   }
 }

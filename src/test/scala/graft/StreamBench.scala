@@ -59,8 +59,6 @@ object StreamBench {
       val (df, mode) = name match {
         case "sessionize" =>
           (StreamingOps.sessionize(stream).toDF, OutputMode.Update())
-        case "sessionize_flat" =>
-          (StreamingOps.sessionizeFlat(stream).toDF, OutputMode.Update())
         case "hourly" =>
           (StreamingOps.hourlyCounts(stream), OutputMode.Complete())
         case "latest" =>

@@ -105,21 +105,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamedHourly(parted) == expected)
   }
 
-  // the encoder-probe twin must be row-for-row identical to the
-  // Timestamp-encoded sessionizer — same closes, same progress rows
-  test("streaming_sessionize_flat_twin_matches_sessionize") {
-    def rows(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-        name: String) = {
-      val s = StreamingOps.eventsStream(spark, sf)
-      StreamingOps.runToMemory(spark, f(s), name, OutputMode.Update)
-        .orderBy("user_id", "session_start", "session_end", "closed")
-        .collect().toSeq
-    }
-    val base = rows(s => StreamingOps.sessionize(s).toDF, "sess_twin_a")
-    val flat = rows(s => StreamingOps.sessionizeFlat(s).toDF, "sess_twin_b")
-    assert(base.nonEmpty && flat == base)
-  }
-
   test("streaming_doc_gate_matches_batch") {
     // the stateless ingest gate must emit exactly the batch filter's
     // rows: same quality floor, same md5-stratified keep set

@@ -216,7 +216,7 @@ class WsReplSpec extends AnyFunSuite {
   test("daemon_autosave_within_window_and_reload") {
     val dir = Files.createTempDirectory("graft_daemon").toString
     val session = new GraphSession(spark)
-    val daemon = new Serve.Daemon(session, dir, autosaveSecs = 1, pollMs = 50)
+    val daemon = new Serve.Daemon(session, dir, autosaveSecs = 1)
     val (port, _) = daemon.start()
     try {
       val c = new WsClient("127.0.0.1", port)
