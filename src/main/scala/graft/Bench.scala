@@ -6,16 +6,18 @@ import scala.jdk.CollectionConverters._
 /** Driver benchmark: one JSON line with per-query seconds.
   *
   * Methodology (fixed in r3, warm-min added in r7): queries run in
-  * FIXED sorted order; `cold` is the 1st pass so one-time costs
-  * (graph build, LPA chain, IVF training — shared via per-dataset
-  * caches) stay visible instead of landing on whichever query a
-  * hash-ordered Map happened to put first, and `queries` reports the
-  * per-query MIN of two steady-state passes. Why min-of-two: the
-  * steady-state time of a fixed cached plan is a constant plus
-  * ambient noise, so the min estimates the constant; single-pass warm
-  * numbers on this shared host have shown one-off 5-27× spikes on
-  * map-only cached plans (r6 q50/q51, r7 q83 — each adjudicated as
-  * load, not plan) that a second sample removes. A real regression
+  * FIXED sorted order; `cold` is the 1st pass, so one-time JVM and
+  * session costs land on the first queries of the sorted order, and
+  * `queries` reports the per-query MIN of two steady-state passes.
+  * Each query builds its own artifacts (graph, LPA assignment, pair
+  * tables) within its call; what a later query or pass reuses is only
+  * the tables' schemas ([[Tables]]), the IVF centroids and
+  * [[graft.operators.BucketedOps]]' ingest-time copies. Why min-of-two: the
+  * steady-state time of a fixed plan is a constant plus ambient
+  * noise, so the min estimates the constant; single-pass warm numbers
+  * on a shared host have shown one-off 5-27× spikes (r6 q50/q51, r7
+  * q83 — each adjudicated as load, not plan) that a second sample
+  * removes. A real regression
   * slows EVERY pass, so the min cannot hide one. No Kryo: every
   * RDD-shuffle stage moves flat primitive tuples since the LPA rewrite,
   * so the serializer choice is immaterial (and Kryo was measured +70%

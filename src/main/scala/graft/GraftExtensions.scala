@@ -5,12 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ExpressionInfo, Multiply, Sqrt}
 
 import graft.functions.{DotProduct, SquaredL2}
-import graft.plans.RewriteHofVectorFold
 
 /** Spark-native installation point for the graft library: makes the
-  * compiled vector expressions available to `spark.sql(...)` users and
-  * installs the HOF→compiled rewrite, so the library composes with a
-  * plain SQL deployment the idiomatic way —
+  * compiled vector expressions available to `spark.sql(...)` users, so
+  * the library composes with a plain SQL deployment the idiomatic way —
   *
   * {{{
   *   spark.sql.extensions=graft.GraftExtensions       // spark-submit
@@ -23,15 +21,13 @@ import graft.plans.RewriteHofVectorFold
   *  - `graft_sql2(a, b)`     — Σ (aᵢ−bᵢ)², squared Euclidean distance
   *  - `graft_cosine(a, b)`   — graft_dot(a,b) / (‖a‖·‖b‖)
   *
-  * Optimizer rule: [[graft.plans.RewriteHofVectorFold]] rewrites the
-  * interpreted `aggregate(zip_with(...))` dot-product shape into
-  * `graft_dot` (exact-semantics guard included, so it is always on).
+  * The library's own operators call the compiled expressions directly
+  * ([[graft.functions.VectorFunctions]]). This class is also where a
+  * planner strategy or physical operator would be injected.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => RewriteHofVectorFold)
-  }
 }
 
 object GraftExtensions {

@@ -84,9 +84,9 @@ object Serve {
       grpc.foreach(_.stop())
       api.stop()
       broker.stop()
-      // release every per-(session, dataset) materialized artifact the
-      // daemon accumulated (graphs, LPA/PR assignments, pair tables) so
-      // checkpointed blocks don't outlive the serving lifecycle
+      // drop what the registered caches hold (bucketed tables and
+      // their directories, the IVF centroids) so none of it outlives
+      // the serving lifecycle
       graft.core.BoundedCache.invalidateAll()
     }
   }

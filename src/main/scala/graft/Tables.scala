@@ -20,9 +20,8 @@ import org.apache.spark.sql.types.StructType
   * length; a table rewritten in place changes those and is inferred
   * again. Spark still lists and scans the files on every read, so
   * appended files and new rows are seen. So it is not a
-  * [[graft.core.BoundedCache]], and `invalidateAll` leaves it: those
-  * caches hold computed artifacts, which go stale; a schema that
-  * follows the files' status does not.
+  * [[graft.core.BoundedCache]], and `invalidateAll` leaves it: a schema
+  * that follows the files' status does not go stale.
   */
 object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {

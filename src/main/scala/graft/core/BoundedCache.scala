@@ -1,19 +1,20 @@
 package graft.core
 
-/** Bounded LRU cache for per-(session, dataset[, params]) materialized
-  * artifacts — localCheckpointed DataFrames, property graphs, trained
-  * index structures.
+/** Bounded LRU cache for what a session keeps across queries: the
+  * bucketed and partitioned table copies [[graft.operators.BucketedOps]]
+  * writes at ingest, and the IVF centroids
+  * [[graft.operators.SimilarityOps]] trains on a sample. Query results
+  * and the frames a query derives (graphs, pair tables) are not kept:
+  * each query builds them within its call, so they follow the tables on
+  * disk.
   *
   * Why bounded: a long-lived daemon (graft.Serve) touching many
-  * datasets/param combos would otherwise pin checkpointed blocks in the
-  * block-manager indefinitely and never observe refreshed data on disk.
-  * (Table schemas are not cached here: [[graft.Tables]] keeps them
-  * keyed by each file's status, so they follow the files by
-  * themselves.)
-  * Eviction (LRU, past `maxEntries`) and explicit invalidation run the
-  * cache's `release` hook (best-effort unpersist) and drop the strong
-  * reference; Spark's ContextCleaner then reclaims any remaining
-  * checkpointed blocks once the RDD is unreachable.
+  * datasets/param combos would otherwise keep every entry for the life
+  * of the JVM. (Table schemas are not cached here: [[graft.Tables]]
+  * keeps them keyed by each file's status, so they follow the files by
+  * themselves.) Eviction (LRU, past `maxEntries`) and explicit
+  * invalidation run the cache's `release` hook, which for the table
+  * copies drops their catalog entries and deletes their directories.
   *
   * Every instance self-registers so [[BoundedCache.invalidateAll]] can
   * flush the whole family in one call — the dataset-refresh hook for
@@ -30,8 +31,8 @@ final class BoundedCache[K, V](maxEntries: Int = BoundedCache.DefaultMaxEntries,
   BoundedCache.register(this)
 
   /** Get-or-build under the cache lock: the build runs at most once per
-    * key (a concurrent duplicate build of a 60 s analytic chain is
-    * costlier than brief lock convoying on the handful of callers). */
+    * key (a concurrent duplicate table copy or KMeans fit is costlier
+    * than brief lock convoying on the handful of callers). */
   def getOrElseUpdate(k: K)(mk: => V): V = synchronized {
     val got = m.get(k)
     if (got != null) got
@@ -55,7 +56,7 @@ final class BoundedCache[K, V](maxEntries: Int = BoundedCache.DefaultMaxEntries,
 object BoundedCache {
   /** A handful of datasets/param combos — enough for every test and the
     * bench's single dataset, small enough that a daemon cycling through
-    * datasets releases old blocks instead of accumulating them. */
+    * datasets releases old entries instead of accumulating them. */
   val DefaultMaxEntries = 8
 
   private val all = scala.collection.mutable.ArrayBuffer.empty[BoundedCache[_, _]]
@@ -65,12 +66,6 @@ object BoundedCache {
   /** Flush every registered cache (dataset-refresh / shutdown hook). */
   def invalidateAll(): Unit =
     all.synchronized(all.toList).foreach(_.clear())
-
-  /** Best-effort unpersist for cached DataFrames: removes any
-    * CacheManager entry now; checkpoint blocks go when ContextCleaner
-    * collects the unreferenced RDD. */
-  def releaseDf(df: org.apache.spark.sql.DataFrame): Unit =
-    quiet(df.unpersist(false))
 
   private[core] def quiet(f: => Unit): Unit =
     try f catch { case _: Throwable => () }

@@ -509,15 +509,19 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
           // executor never calls resolve_param (cypher_spec.rs:1283-1292),
           // so `SET n.p = $x` stores the literal text "$x"
           binding = dropCarried(binding)
-          g = execSetProp(g, binding, v, key, rawText(value))
+          val text = rawText(value)
+          g = rewriteBound(g, binding, v, "properties")(p =>
+            map_concat(map_filter(p, (k, _) => k =!= key), map(lit(key), lit(text))))
 
         case Clause.SetLabel(v, label) =>
+          // SET n:Label REPLACES the label (M5, cypher_spec.rs:1262-1274)
           binding = dropCarried(binding)
-          g = execSetLabel(g, binding, v, label)
+          g = rewriteBound(g, binding, v, "label")(_ => lit(label))
 
         case Clause.RemoveProp(v, key) =>
           binding = dropCarried(binding)
-          g = execRemoveProp(g, binding, v, key)
+          g = rewriteBound(g, binding, v, "properties")(p =>
+            map_filter(p, (k, _) => k =!= key))
 
         case Clause.Delete(vars, detach) =>
           binding = dropCarried(binding)
@@ -803,48 +807,16 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
   private def boundIds(binding: DataFrame, v: String): DataFrame =
     binding.select(vcol(v).as("__tid")).distinct()
 
-  private def execSetProp(g: PropertyGraph, binding: DataFrame, v: String,
-      key: String, value: String): PropertyGraph = {
+  /** SET / REMOVE: rewrite column `c` of the rows bound to `v` with
+    * `update`, keep it on every other row, and commit only the table
+    * `v` lives in. An unbound variable leaves the graph as it is. */
+  private def rewriteBound(g: PropertyGraph, binding: DataFrame, v: String,
+      c: String)(update: Column => Column): PropertyGraph = {
     if (!kinds.contains(v)) return g
     val ids = boundIds(binding, v)
     def upd(df: DataFrame): DataFrame =
       df.join(ids, col("id") === col("__tid"), "left")
-        .withColumn("properties",
-          when(col("__tid").isNotNull,
-            map_concat(map_filter(col("properties"), (k, _) => k =!= key),
-              map(lit(key), lit(value))))
-            .otherwise(col("properties")))
-        .drop("__tid")
-    kinds(v) match {
-      case NodeKind => g.commitNodes(upd(g.nodes))
-      case RelKind  => g.commitEdges(upd(g.edges))
-    }
-  }
-
-  private def execSetLabel(g: PropertyGraph, binding: DataFrame, v: String,
-      label: String): PropertyGraph = {
-    if (!kinds.contains(v)) return g
-    val ids = boundIds(binding, v)
-    def upd(df: DataFrame): DataFrame =
-      df.join(ids, col("id") === col("__tid"), "left")
-        .withColumn("label", when(col("__tid").isNotNull, lit(label)).otherwise(col("label")))
-        .drop("__tid")
-    // SET n:Label REPLACES the label (M5, cypher_spec.rs:1262-1274)
-    kinds(v) match {
-      case NodeKind => g.commitNodes(upd(g.nodes))
-      case RelKind  => g.commitEdges(upd(g.edges))
-    }
-  }
-
-  private def execRemoveProp(g: PropertyGraph, binding: DataFrame, v: String,
-      key: String): PropertyGraph = {
-    if (!kinds.contains(v)) return g
-    val ids = boundIds(binding, v)
-    def upd(df: DataFrame): DataFrame =
-      df.join(ids, col("id") === col("__tid"), "left")
-        .withColumn("properties",
-          when(col("__tid").isNotNull, map_filter(col("properties"), (k, _) => k =!= key))
-            .otherwise(col("properties")))
+        .withColumn(c, when(col("__tid").isNotNull, update(col(c))).otherwise(col(c)))
         .drop("__tid")
     kinds(v) match {
       case NodeKind => g.commitNodes(upd(g.nodes))
@@ -868,15 +840,12 @@ class CypherExecutor(spark: SparkSession, params: Map[String, String]) {
     if (!detach && nodeIds != null) {
       // constraint check against the PRE-delete edge set
       // (cypher_spec.rs:1234-1240)
-      val incident = g.edges.join(nodeIds,
-        col("src") === col("__tid") || col("dst") === col("__tid"), "left_semi")
-      if (incident.limit(1).count() > 0) {
-        val nid = g.edges.join(nodeIds,
+      g.edges.join(nodeIds,
           col("src") === col("__tid") || col("dst") === col("__tid"))
-          .select("__tid").head().getString(0)
-        throw ParseException(
-          s"Cannot DELETE node $nid with existing relationships; use DETACH DELETE")
-      }
+        .select("__tid").take(1).foreach { r =>
+          throw ParseException(s"Cannot DELETE node ${r.getString(0)} " +
+            "with existing relationships; use DETACH DELETE")
+        }
     }
 
     var edges = g.edges

@@ -21,25 +21,24 @@ import graft.Tables
   * build the lists, map-side pair explode, map-side-combined count
   * aggregation on top (r13: replaced the membership self-join — see
   * cappedPairCounts).
+  *
+  * Each query derives its membership table and co-purchase edges within
+  * its own call, so an answer follows `lineitem` on disk: nothing is
+  * kept between queries.
   */
 object CooccurrenceOps {
 
-  /** Distinct membership tables, materialized once per (session,
-    * dataset, kind): both candidate-join SIDES and the degree filter
-    * reference the same frame, and without materialization each
-    * physical branch re-scans the fact table (measured: 6 lineitem
-    * scans in the q58 plan) — at warehouse scale the membership
-    * derivation must run once. */
-  private val membCache =
-    new graft.core.BoundedCache[(String, String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
-  private def memb(s: SparkSession, d: String, kind: String,
+  /** Distinct membership table (a, b) over two lineitem columns,
+    * materialized for the call: both candidate-join SIDES and the
+    * degree filter reference the same frame, and without
+    * materialization each physical branch re-scans the fact table
+    * (measured: 6 lineitem scans in the q58 plan) — at warehouse scale
+    * the membership derivation must run once. */
+  private def memb(s: SparkSession, d: String,
       cols: (String, String)): DataFrame =
-    membCache.getOrElseUpdate((s.sparkContext.applicationId, d, kind))(
-      Tables(s, d, "lineitem")
-        .select(col(cols._1).as("a"), col(cols._2).as("b"))
-        .distinct().graftCheckpoint())
+    Tables(s, d, "lineitem")
+      .select(col(cols._1).as("a"), col(cols._2).as("b"))
+      .distinct().graftCheckpoint()
 
   /** q57: part pairs that co-occur in the same order (market-basket
     * co-purchase), top `k` by distinct order count. Orders with more
@@ -53,7 +52,7 @@ object CooccurrenceOps {
     // memb is already distinct — straight into the capped pair count,
     // no second distinct pass
     cappedPairCounts(
-      memb(s, d, "order_part", ("l_orderkey", "l_partkey"))
+      memb(s, d, ("l_orderkey", "l_partkey"))
         .select(col("a").as("okey"), col("b").as("pkey")),
       maxBasket)
       .orderBy(col("n_orders").desc, col("p1"), col("p2"))
@@ -61,8 +60,8 @@ object CooccurrenceOps {
 
   /** [[copurchasePairs]] over an explicit (okey, pkey) membership frame
     * — the unit-testable core. Collapses duplicate memberships first;
-    * the cached production path ([[memb]]) is already distinct and
-    * calls [[cappedPairCounts]] directly. */
+    * the production path ([[memb]]) is already distinct and calls
+    * [[cappedPairCounts]] directly. */
   def copurchasePairsOf(memb: DataFrame, k: Int, maxBasket: Int): DataFrame =
     cappedPairCounts(memb.select("okey", "pkey").distinct(), maxBasket)
       .orderBy(col("n_orders").desc, col("p1"), col("p2"))
@@ -127,7 +126,7 @@ object CooccurrenceOps {
     */
   def supplierOverlap(s: SparkSession, d: String, k: Int = 50,
       maxDf: Int = 1000): DataFrame = {
-    val sp = memb(s, d, "supp_part", ("l_suppkey", "l_partkey"))
+    val sp = memb(s, d, ("l_suppkey", "l_partkey"))
       .select(col("a").as("sk"), col("b").as("pk"))
     val sizes = sp.groupBy("sk").agg(count(lit(1)).as("nparts"))
     // r13 rewrite, same shape as [[cappedPairCounts]]: the df cap rides
@@ -188,51 +187,32 @@ object CooccurrenceOps {
     * join ([[copurchasePairsOf]] shape). */
   def triangles(s: SparkSession, d: String, minSupport: Int = 2,
       maxBasket: Int = 64): DataFrame =
-    if (minSupport == 2 && maxBasket == 64)
-      triCache.getOrElseUpdate((s.sparkContext.applicationId, d))(
-        trianglesOfEdges(copurchaseEdges(s, d, minSupport, maxBasket))
-          .graftCheckpoint())
-    else
-      trianglesOfEdges(buildCopurchaseEdges(s, d, minSupport, maxBasket))
+    trianglesOfEdges(copurchaseEdges(s, d, minSupport, maxBasket))
 
-  /** The default-parameter co-purchase edge set and per-node triangle
-    * counts, cached per (session, dataset): q68 and the clustering
-    * coefficient (q96) share both — the derived-graph-artifact pattern
-    * used for the LPA/PageRank chain. */
-  private val undCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-  private val triCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
+  /** The co-purchase edge set (p1 < p2, distinct): part pairs that
+    * share at least `minSupport` capped baskets. Materialized, since
+    * q96 reads it twice: for the degrees and for the triangles. */
   private def copurchaseEdges(s: SparkSession, d: String,
       minSupport: Int, maxBasket: Int): DataFrame =
-    undCache.getOrElseUpdate((s.sparkContext.applicationId, d))(
-      buildCopurchaseEdges(s, d, minSupport, maxBasket)
-        .graftCheckpoint())
-
-  private def buildCopurchaseEdges(s: SparkSession, d: String,
-      minSupport: Int, maxBasket: Int): DataFrame =
     cappedPairCounts(
-      memb(s, d, "order_part", ("l_orderkey", "l_partkey"))
+      memb(s, d, ("l_orderkey", "l_partkey"))
         .select(col("a").as("okey"), col("b").as("pkey")),
       maxBasket)
       .filter(col("n_orders") >= minSupport)
       .select("p1", "p2")
+      .graftCheckpoint()
 
   /** q96: LOCAL CLUSTERING COEFFICIENT over the co-purchase graph —
     * per node, 2·triangles / (deg·(deg−1)) as an exact ppm integer
     * (deg < 2 ⇒ 0), the classic neighborhood-cohesion feature next to
-    * the raw triangle counts of q68. Reuses the CACHED edge set and
-    * triangle counts, so warm cost is one degree aggregation + a join
-    * on the (small) per-node tables; no triangle re-enumeration. */
+    * the raw triangle counts of q68. The edge set is derived once and
+    * feeds both the degree count and the triangle enumeration. */
   def clusteringCoefficient(s: SparkSession, d: String): DataFrame = {
     val und = copurchaseEdges(s, d, 2, 64)
     val deg = und.select(col("p1").as("node"))
       .union(und.select(col("p2").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-    deg.join(triangles(s, d), Seq("node"), "left")
+    deg.join(trianglesOfEdges(und), Seq("node"), "left")
       .withColumn("n_tri", coalesce(col("n_tri"), lit(0L)))
       .withColumn("coeff_ppm",
         when(col("deg") >= 2,

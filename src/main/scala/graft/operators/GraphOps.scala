@@ -9,69 +9,47 @@ import graft.core.GraphBuilder
 /** Graph-analytics queries over the FK-derived property graph
   * (FIXTURES.md §3): the reference GUI's analytics (SURVEY §2.8)
   * rendered as driver-checkable queries.
+  *
+  * Each query builds the graph it reads within its own call, so an
+  * answer follows the tables on disk: nothing is kept between queries.
   */
 object GraphOps {
 
-  /** One FK-derived graph per dataset per process: every graph query
-    * (q30-q34) consumes the same materialized snapshot instead of
-    * re-deriving the 6-table union — the shared-scan shape a warehouse
-    * deployment gets from a materialized graph table. */
-  // keyed by (session applicationId, dataset path): a cached DataFrame
-  // is bound to the session that built it — a second session in the
-  // same JVM must not receive one bound to a stopped/stale session.
-  // Bounded LRU (see BoundedCache): eviction releases the graph's
-  // checkpointed blocks so long-lived daemons don't pin storage.
-  private val graphCache =
-    new graft.core.BoundedCache[(String, String), graft.core.PropertyGraph](
-      release = g => { g.nodes.unpersist(false); g.edges.unpersist(false); () })
-
+  /** The FK-derived graph, materialized once for the call that reads
+    * it: the iterative algorithms read it once per sweep, and would
+    * otherwise re-derive the 6-table union each time. */
   private def builtGraph(s: SparkSession, d: String): graft.core.PropertyGraph = {
-    import org.apache.spark.sql.functions.col
-    graphCache.getOrElseUpdate((s.sparkContext.applicationId, d))({
-      // r13 (guide §2.3 — shuffle/materialize fewer bytes): the
-      // analytics family reads edges only as (src, dst, label) — the
-      // synthetic edge-id strings and per-edge property maps that the
-      // full Relationship model carries are never consumed by q30-q34 /
-      // q53/q54/q65/q101/q107, so the materialized snapshot drops them
-      // (~40% of the edge bytes at sf0.1). GraphBuilder.fromTables
-      // itself is unchanged — engine-side consumers still get the full
-      // model.
-      val g = GraphBuilder.fromTables(s, d)
-      graft.core.PropertyGraph(
-        g.nodes, g.edges.select(col("src"), col("dst"), col("label")))
-        .materialized
-    })
+    // r13 (guide §2.3 — shuffle/materialize fewer bytes): the
+    // analytics family reads edges only as (src, dst, label) — the
+    // synthetic edge-id strings and per-edge property maps that the
+    // full Relationship model carries are never consumed by q30-q34 /
+    // q53/q54/q65/q101/q107, so the materialized snapshot drops them
+    // (~40% of the edge bytes at sf0.1). GraphBuilder.fromTables
+    // itself is unchanged — engine-side consumers still get the full
+    // model.
+    val g = GraphBuilder.fromTables(s, d)
+    graft.core.PropertyGraph(
+      g.nodes, g.edges.select(col("src"), col("dst"), col("label")))
+      .materialized
   }
 
   /** GA3/A3: undirected degree of every node. Oracle-checked. */
   def graphDegree(s: SparkSession, d: String): DataFrame =
     GraphAlgos.degrees(builtGraph(s, d)).orderBy("id")
 
-  /** One LPA assignment per dataset per process: q31 and q32 share it
-    * (the assignment is the expensive iterative piece; density on top
-    * of it is one join + two aggregations). The cached value is
-    * localCheckpointed inside [[GraphAlgos.weightedLabelPropagation]],
-    * so reuse costs no recomputation. */
-  private val lpaCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
-  private def lpaAssignment(s: SparkSession, d: String): DataFrame =
-    lpaCache.getOrElseUpdate((s.sparkContext.applicationId, d))(
-      GraphAlgos.weightedLabelPropagation(builtGraph(s, d)))
-
   /** GA2: weighted label-propagation communities (iterative — pinned by
-    * determinism of the tie-break, rows-only driver check). The derived
-    * graph is materialized once up front: the iterative consumer would
-    * otherwise re-derive the 6-table union per sweep. */
+    * determinism of the tie-break, rows-only driver check). */
   def lpaCommunities(s: SparkSession, d: String): DataFrame =
-    lpaAssignment(s, d).orderBy("id")
+    GraphAlgos.weightedLabelPropagation(builtGraph(s, d)).orderBy("id")
 
-  /** GA4: community density over the (shared) full LPA assignment. */
-  def communityDensity(s: SparkSession, d: String): DataFrame =
-    GraphAlgos.communityDensity(builtGraph(s, d), lpaAssignment(s, d))
+  /** GA4: community density over the full LPA assignment, which runs
+    * on the same graph the density counts edges of. */
+  def communityDensity(s: SparkSession, d: String): DataFrame = {
+    val g = builtGraph(s, d)
+    GraphAlgos.communityDensity(g, GraphAlgos.weightedLabelPropagation(g))
       .withColumn("density", OracleSql.roundTo(col("density"), 6))
       .orderBy("community")
+  }
 
   /** GA5/GA6: grouping sizes — per-label node groups (the label-centric
     * layout grouping) with per-group mean degree. Oracle-checked. */
@@ -151,17 +129,9 @@ object GraphOps {
   /** Beyond-parity graph analytic: integer fixed-point PageRank (q53),
     * 8 sweeps over the FK-derived directed multigraph. See
     * GraphAlgos.pageRankInt for the exact-arithmetic formulation that
-    * makes an iterative float-free rank oracle-checkable. Cached per
-    * (session, dataset) like the LPA assignment — the materialized-
-    * analytics-table shape; the result is localCheckpointed inside the
-    * algorithm, so reuse costs no recomputation. */
-  private val prCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
+    * makes an iterative float-free rank oracle-checkable. */
   def pageRank(s: SparkSession, d: String): DataFrame =
-    prCache.getOrElseUpdate((s.sparkContext.applicationId, d))(
-      GraphAlgos.pageRankInt(builtGraph(s, d))).orderBy("id")
+    GraphAlgos.pageRankInt(builtGraph(s, d)).orderBy("id")
 
   /** DuckDB rendering of [[pageRank]] — the FK edge list + out-degrees
     * + all 8 sweeps as unrolled materialized CTEs, in the same exact
@@ -190,15 +160,10 @@ object GraphOps {
   /** q101: PERSONALIZED PageRank — random walk with restart to the
     * Supplier nodes (GraphAlgos.personalizedPageRankInt): rank measures
     * proximity to the seed set, the related-entity / recommendation
-    * primitive. Cached per (session, dataset) like q53. */
-  private val pprCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
+    * primitive. */
   def personalizedPageRank(s: SparkSession, d: String,
       seedLabel: String = "Supplier"): DataFrame =
-    pprCache.getOrElseUpdate((s.sparkContext.applicationId, d + "#" + seedLabel))(
-      GraphAlgos.personalizedPageRankInt(builtGraph(s, d), seedLabel))
+    GraphAlgos.personalizedPageRankInt(builtGraph(s, d), seedLabel)
       .orderBy("id")
 
   /** DuckDB rendering of [[personalizedPageRank]] — q53's unrolled
@@ -235,13 +200,8 @@ object GraphOps {
     * (region–nation–customer–order–part is 4 hops); the frontier
     * empties at the fixpoint and the loop exits early, producing the
     * same assignment as the oracle's fixed 8 unrolled sweeps. */
-  private val hopCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
   def hopDistance(s: SparkSession, d: String): DataFrame =
-    hopCache.getOrElseUpdate((s.sparkContext.applicationId, d))(
-      GraphAlgos.hopDistanceFrom(builtGraph(s, d), "Region")).orderBy("id")
+    GraphAlgos.hopDistanceFrom(builtGraph(s, d), "Region").orderBy("id")
 
   /** DuckDB rendering of [[hopDistance]]: seeds + 8 unrolled min-relax
     * sweeps; the null CASE mirrors the engine exactly. */
@@ -282,15 +242,9 @@ object GraphOps {
     * frontier Bellman–Ford with per-edge-TYPE integer costs
     * ([[ssspTypeWeights]]), capped at 8 relaxation rounds exactly like
     * the oracle's 8 unrolled min-relax sweeps (after k rounds both
-    * equal min weight over ≤ k-edge walks, converged or not). Cached
-    * per (session, dataset) like q54. */
-  private val ssspCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
+    * equal min weight over ≤ k-edge walks, converged or not). */
   def shortestPath(s: SparkSession, d: String): DataFrame =
-    ssspCache.getOrElseUpdate((s.sparkContext.applicationId, d))(
-      GraphAlgos.ssspFrom(builtGraph(s, d), "Region", ssspTypeWeights))
+    GraphAlgos.ssspFrom(builtGraph(s, d), "Region", ssspTypeWeights)
       .orderBy("id")
 
   /** DuckDB rendering of [[shortestPath]]: the weighted FK edge list
@@ -339,13 +293,8 @@ object GraphOps {
     * remove-degree-<k sweeps over the undirected FK graph, early exit
     * only at the peeling fixpoint (identical to the oracle's unrolled
     * sweeps). Survivors with their last-peel degree. */
-  private val kcoreCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
   def kCore(s: SparkSession, d: String): DataFrame =
-    kcoreCache.getOrElseUpdate((s.sparkContext.applicationId, d))(
-      GraphAlgos.kCore(builtGraph(s, d))).orderBy("id")
+    GraphAlgos.kCore(builtGraph(s, d)).orderBy("id")
 
   /** DuckDB rendering of [[kCore]]: the FK edge list + 8 unrolled
     * peel sweeps (degree within the previous survivor set, HAVING >= k). */

@@ -31,6 +31,9 @@ import graft.algo.GraphAlgos
   * AQE skew-join handles hot shingles; a stop-shingle filter (drop
   * shingles with document frequency above a cap) is the standard
   * mitigation and is applied here.
+  *
+  * Each query derives its shingles and pairs within its own call, so an
+  * answer follows `documents` on disk: nothing is kept between queries.
   */
 object TextOps {
 
@@ -117,29 +120,24 @@ object TextOps {
     * lambda in [[shingles]]: Catalyst's CollapseProject re-inlines
     * array-lambda shingling so `split` re-runs per element (O(n²) per
     * doc, measured 10-50× slower). Here the tokenizer runs once per
-    * document and everything downstream is codegen'd. */
-  // one materialized shingle set per (session, dataset): q25 references
-  // it 4× in one plan and q26 once more — the checkpoint turns five
-  // window+dedup recomputations (or fragile exchange-reuse) into scans.
-  // At cluster scale the same shape is "write the shingle table once".
-  private val shingleCache =
-    new graft.core.BoundedCache[(String, String), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
-  def shingleRows(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s.sparkContext.applicationId, d))({
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("doc_id").orderBy("pos")
-      withToks(s, d)
-        .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
-        .withColumn("t1", lead(col("tok"), 1).over(w))
-        .withColumn("t2", lead(col("tok"), 2).over(w))
-        .filter(col("t2").isNotNull)
-        .select(col("doc_id"),
-          concat_ws(" ", col("tok"), col("t1"), col("t2")).as("sh"))
-        .dropDuplicates("doc_id", "sh")
-        .graftCheckpoint()
-    })
+    * document and everything downstream is codegen'd. Materialized:
+    * q25 references it 4× in one plan, and the checkpoint turns those
+    * window+dedup recomputations (or fragile exchange-reuse) into
+    * scans. At cluster scale the same shape is "write the shingle table
+    * once". */
+  def shingleRows(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("doc_id").orderBy("pos")
+    withToks(s, d)
+      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
+      .withColumn("t1", lead(col("tok"), 1).over(w))
+      .withColumn("t2", lead(col("tok"), 2).over(w))
+      .filter(col("t2").isNotNull)
+      .select(col("doc_id"),
+        concat_ws(" ", col("tok"), col("t1"), col("t2")).as("sh"))
+      .dropDuplicates("doc_id", "sh")
+      .graftCheckpoint()
+  }
 
   /** N-gram Jaccard near-duplicate pairs: explode distinct 3-gram
     * shingles, self-join on the shingle, keep pairs with
@@ -148,18 +146,7 @@ object TextOps {
     * Scale: per-shingle document lists are the join key; a document
     * frequency cap (maxDf) drops degenerate stop-shingles that would
     * create quadratic hot keys at 100 TB. */
-  // one materialized near-dup pair table per (session, dataset, maxDf):
-  // q25 returns it and q43's clustering consumes it — at cluster scale
-  // this is "write the pair table once", the same shape as shingleRows
-  private val pairCache =
-    new graft.core.BoundedCache[(String, String, Int), DataFrame](
-      release = graft.core.BoundedCache.releaseDf)
-
-  def ngramJaccardPairs(s: SparkSession, d: String, maxDf: Int = 1000): DataFrame =
-    pairCache.getOrElseUpdate((s.sparkContext.applicationId, d, maxDf))(
-      ngramJaccardPairsUncached(s, d, maxDf).graftCheckpoint())
-
-  private def ngramJaccardPairsUncached(s: SparkSession, d: String, maxDf: Int): DataFrame = {
+  def ngramJaccardPairs(s: SparkSession, d: String, maxDf: Int = 1000): DataFrame = {
     val sh = shingleRows(s, d)
     val dfOk = sh.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("sh")

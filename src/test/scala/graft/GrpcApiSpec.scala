@@ -56,7 +56,7 @@ class GrpcApiSpec extends AnyFunSuite {
       val bad = executeQuery(ch, "UPDATE NODE x SET y=1")
       assert(get[String](bad, "error").contains("unrecognized statement"))
       assert(list(bad, "rows").isEmpty && !get[Boolean](bad, "mutated"))
-    } finally { ch.shutdownNow(); api.stop() }
+    } finally { ch.shutdownNow(); api.stop(); broker.stop() }
   }
 
   test("grpc_server_survives_raw_garbage_bytes") {
@@ -122,7 +122,7 @@ class GrpcApiSpec extends AnyFunSuite {
       val e2 = intercept[Exception](executeQuery(wrongKey, "MATCH NODE Person;"))
       assert(e2.getMessage.contains("UNAUTHENTICATED"))
       assert(get[String](executeQuery(goodKey, "MATCH NODE Person;"), "error").isEmpty)
-    } finally { noKey.shutdownNow(); api.stop() }
+    } finally { noKey.shutdownNow(); api.stop(); broker.stop() }
   }
 
   test("grpc_timeout_is_deadline_exceeded_and_the_next_call_succeeds") {

@@ -199,6 +199,6 @@ class GrpcWireCompatSpec extends AnyFunSuite {
       val bad = executeQuery(ch, "UPDATE NODE x SET y=1")
       assert(bad.getField(QueryResponse.findFieldByName("error")).toString
         .contains("unrecognized statement"))
-    } finally { channel.shutdownNow(); api.stop() }
+    } finally { channel.shutdownNow(); api.stop(); broker.stop() }
   }
 }

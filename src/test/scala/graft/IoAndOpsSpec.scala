@@ -170,6 +170,41 @@ class IoAndOpsSpec extends AnyFunSuite {
     assert(Tables(spark, dir, "t").select("k").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
   }
 
+  test("analytics_follow_rewritten_tables") {
+    import spark.implicits._
+    import java.nio.file.{Files => NF, Paths}
+    val dir = tmpDir("graft_fresh")
+    NF.list(Paths.get(sf)).forEach(p => NF.copy(p, Paths.get(dir).resolve(p.getFileName)))
+    def degrees(): Map[String, Long] =
+      graft.operators.GraphOps.graphDegree(spark, dir)
+        .select("id", "degree").as[(String, Long)].collect().toMap
+    def pairs(): Set[(Long, Long)] =
+      TextOps.ngramJaccardPairs(spark, dir)
+        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    val deg0 = degrees()
+    val pairs0 = pairs()
+
+    // nation 0 moves from region 0 to region 1; the last document gets
+    // an exact duplicate under a new id
+    Tables.nation(spark, sf)
+      .withColumn("n_regionkey",
+        when(col("n_nationkey") === 0, col("n_regionkey") + 1)
+          .otherwise(col("n_regionkey")))
+      .write.mode("overwrite").parquet(s"$dir/nation.parquet")
+    val docs = Tables.documents(spark, sf)
+    val last = docs.agg(max("doc_id")).as[Long].head()
+    docs.unionByName(docs.filter(col("doc_id") === last)
+        .withColumn("doc_id", lit(last + 1)))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+
+    val deg1 = degrees()
+    assert(deg1("region:0") == deg0("region:0") - 1)
+    assert(deg1("region:1") == deg0("region:1") + 1)
+    val pairs1 = pairs()
+    assert(!pairs0.contains((last, last + 1)))
+    assert(pairs1 == pairs0 + ((last, last + 1)))
+  }
+
   test("exporters_shapes") {
     val s = new GraphSession(spark)
     s.execute("CREATE (:Person {name: 'Ada'});")
