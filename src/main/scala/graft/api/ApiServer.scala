@@ -2,9 +2,8 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{CompletableFuture, TimeUnit, TimeoutException}
+import java.util.concurrent.{CompletableFuture, TimeUnit}
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.core.JsonProcessingException
 import io.netty.bootstrap.ServerBootstrap
@@ -18,7 +17,6 @@ import io.netty.handler.codec.http.websocketx._
 import io.netty.util.concurrent.DefaultThreadFactory
 
 import graft.Json
-import graft.engine.QueryOutcome
 
 /** The reference's API server (api/server.rs:60-259): `POST /api/query`
   * and the `/api/repl` WebSocket REPL on one port, like its single actix
@@ -37,9 +35,12 @@ import graft.engine.QueryOutcome
   *    anything over 16 KiB into 16 KiB frames.
   *
   * Transport only: queries run on the shared [[EngineBroker]] engine
-  * thread, serialized with every other transport (SURVEY §3/API4). No
-  * thread waits for them: each reply is written from the broker's
-  * future on the connection's event loop. The caller owns the broker.
+  * thread, serialized with every other transport (SURVEY §3/API4). The
+  * broker mints each request's id and writes its api-log lines (`HTTP`
+  * or `WS`); this server writes only the REPL's `WS connected` and
+  * `WS closed` lines. No thread waits for a query: each reply is
+  * written from the broker's future on the connection's event loop.
+  * The caller owns the broker.
   */
 class ApiServer(broker: EngineBroker, port: Int = 0,
     apiKey: Option[String] = None, bindAddr: String = "127.0.0.1") {
@@ -117,26 +118,15 @@ class ApiServer(broker: EngineBroker, port: Int = 0,
       }
 
     private def answer(ctx: ChannelHandlerContext, query: String,
-        params: Option[Map[String, String]]): CompletableFuture[Unit] = {
-      val rid = broker.nextRid()
-      val t0 = System.nanoTime()
-      def log(status: Int): Unit =
-        broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, status))
-      submit(query, params, HttpTimeoutSec).handleAsync[Unit](
-        (result: Either[String, QueryOutcome], err: Throwable) =>
-          try (result, err) match {
-            case (Right(out), _) =>
-              val body = Dto.outcomeJson(out)
-              log(200); respond(ctx, 200, body, "application/json")
-            case (Left(msg), _) => log(400); respond(ctx, 400, msg)
-            case (_, _: TimeoutException) => log(504); respond(ctx, 504, "query timeout")
-            case (_, e) => throw e
-          } catch {
-            case NonFatal(e) =>
-              respond(ctx, 500, Option(e.getMessage).getOrElse("error"))
-          },
+        params: Option[Map[String, String]]): CompletableFuture[Unit] =
+      broker.submit(query, params, HttpTimeoutSec, "HTTP").thenApplyAsync[Unit](
+        (reply: Reply) => reply match {
+          case Reply.Answered(out) => respond(ctx, 200, Dto.outcomeJson(out), "application/json")
+          case Reply.EngineError(msg) => respond(ctx, 400, msg)
+          case Reply.TimedOut => respond(ctx, 504, "query timeout")
+          case Reply.Failed(e) => respond(ctx, 500, Option(e.getMessage).getOrElse("error"))
+        },
         ctx.executor())
-    }
   }
 
   /** The REPL side of an upgraded connection. Ping→pong is answered by
@@ -164,35 +154,22 @@ class ApiServer(broker: EngineBroker, port: Int = 0,
 
     // the reference WS REPL builds its ApiRequest with params: None
     // (server.rs:205) — always the no-params path
-    private def answer(ctx: ChannelHandlerContext, query: String): CompletableFuture[Unit] = {
-      val rid = broker.nextRid()
-      broker.apiLog.foreach(_.append(s"rid=$rid WS query qlen=${query.length}"))
-      val t0 = System.nanoTime()
-      submit(query, None, ReplTimeoutSec).handleAsync[Unit](
-        (result: Either[String, QueryOutcome], err: Throwable) => {
-          val reply = (result, err) match {
-            case (Right(out), _) => Dto.outcomeJsonPretty(out)
-            case (Left(msg), _) => s"error: $msg"
-            case (_, _: TimeoutException) => "timeout"
-            case (_, e) => s"error: ${e.getMessage}"
-          }
-          broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000,
-            if (reply.startsWith("{")) 200 else 400))
-          ctx.writeAndFlush(new TextWebSocketFrame(reply))
+    private def answer(ctx: ChannelHandlerContext, query: String): CompletableFuture[Unit] =
+      broker.submit(query, None, ReplTimeoutSec, "WS").thenApplyAsync[Unit](
+        (reply: Reply) => {
+          ctx.writeAndFlush(new TextWebSocketFrame(reply match {
+            case Reply.Answered(out) => Dto.outcomeJsonPretty(out)
+            case Reply.EngineError(msg) => s"error: $msg"
+            case Reply.TimedOut => "timeout"
+            case Reply.Failed(e) => s"error: ${e.getMessage}"
+          }))
           ()
         },
         ctx.executor())
-    }
 
     override def exceptionCaught(ctx: ChannelHandlerContext, cause: Throwable): Unit =
       ctx.close()
   }
-
-  /** The broker's future for `query`, failed with a TimeoutException
-    * after `timeoutSec`. */
-  private def submit(query: String, params: Option[Map[String, String]],
-      timeoutSec: Long): CompletableFuture[Either[String, QueryOutcome]] =
-    broker.submit(query, params).orTimeout(timeoutSec, TimeUnit.SECONDS)
 
   /** `{"query": "...", "params": {...}, "log": bool}`: the top level
     * must be an object whose `query` is a string. `params` is optional

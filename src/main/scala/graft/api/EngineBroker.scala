@@ -1,10 +1,22 @@
 package graft.api
 
-import java.util.concurrent.{CompletableFuture, ExecutorService, Executors, RejectedExecutionException, ThreadFactory, TimeUnit}
+import java.util.concurrent.{CompletableFuture, ExecutorService, Executors, RejectedExecutionException, ThreadFactory, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.engine.{GraphSession, QueryOutcome}
 import graft.io.QueryLog
+
+/** How a request ended, and the status its api-log line records. */
+sealed abstract class Reply(val status: Int)
+
+object Reply {
+  final case class Answered(out: QueryOutcome) extends Reply(200)
+  /** The engine's error text, answered in-band by every transport. */
+  final case class EngineError(message: String) extends Reply(400)
+  case object TimedOut extends Reply(504)
+  /** Anything else, such as a stopped broker. */
+  final case class Failed(cause: Throwable) extends Reply(500)
+}
 
 /** The single-engine-thread request broker (reference api/mod.rs:8-32 +
   * the drain loops at frontend.rs:1226-1250 / main.rs:268-288): every
@@ -14,6 +26,13 @@ import graft.io.QueryLog
   * GraphSession, so mutations are linearized exactly like the
   * reference's engine thread while Spark parallelizes each query
   * internally.
+  *
+  * It owns each request's lifecycle: [[submit]] mints the request id,
+  * writes both api-log lines (`rid=<id> <transport> query qlen=<n>` on
+  * submit, `rid=<id> dt_ms=<ms> status=<s>` at the end) and applies
+  * the transport's timeout. The engine thread writes the query log. A
+  * transport only maps the [[Reply]] to its wire; the api log's other
+  * lines are the REPL's `WS connected` / `WS closed`.
   */
 class EngineBroker(session: GraphSession, logDir: Option[String] = None) {
 
@@ -28,21 +47,36 @@ class EngineBroker(session: GraphSession, logDir: Option[String] = None) {
   // null while stopped; a stop()/start() cycle gets a fresh executor
   private var engine: ExecutorService = _
 
-  /** The request id a transport mints for its api-log lines. */
-  def nextRid(): String = s"${System.nanoTime()}-${ridCounter.getAndIncrement()}"
-
-  /** Queue `query` for the engine thread; the future completes there
-    * with the outcome or the error text. `params` None = the request
+  /** Queue `query` for the engine thread. `params` None = the request
     * carried no params field — routed through the no-params engine
     * path, like the reference's `execute_and_log`; Some (even empty) =
-    * with-params path (frontend.rs:1208-1209, main.rs:270-273). It is
-    * the one way in, for transports and in-process callers alike.
-    * Callers bound the wait themselves (the request still completes on
-    * the engine thread, matching the reference's recv_timeout
-    * semantics) and finish their reply on their own executor, not on
-    * the engine thread. On a stopped broker the future has already
-    * failed with a RejectedExecutionException. */
-  def submit(query: String, params: Option[Map[String, String]])
+    * with-params path (frontend.rs:1208-1209, main.rs:270-273).
+    * `transport` (`HTTP`, `WS`, `gRPC`) names the request in the api
+    * log. The future never fails: it completes with the [[Reply]] once
+    * the engine answers, or `TimedOut` after `timeoutSec` (the request
+    * still runs later on the engine thread, like the reference's
+    * recv_timeout), or at once `Failed` on a stopped broker. It may
+    * complete on the engine thread, so callers finish their reply on
+    * their own executor. */
+  def submit(query: String, params: Option[Map[String, String]], timeoutSec: Long,
+      transport: String): CompletableFuture[Reply] = {
+    val rid = s"${System.nanoTime()}-${ridCounter.getAndIncrement()}"
+    apiLog.foreach(_.append(s"rid=$rid $transport query qlen=${query.length}"))
+    val t0 = System.nanoTime()
+    enqueue(query, params).orTimeout(timeoutSec, TimeUnit.SECONDS).handle[Reply](
+      (result: Either[String, QueryOutcome], err: Throwable) => {
+        val reply = (result, err) match {
+          case (Right(out), _) => Reply.Answered(out)
+          case (Left(msg), _) => Reply.EngineError(msg)
+          case (_, _: TimeoutException) => Reply.TimedOut
+          case (_, e) => Reply.Failed(e)
+        }
+        apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, reply.status))
+        reply
+      })
+  }
+
+  private def enqueue(query: String, params: Option[Map[String, String]])
       : CompletableFuture[Either[String, QueryOutcome]] = synchronized {
     if (engine == null) CompletableFuture.failedFuture(
       new RejectedExecutionException("the engine broker is stopped"))

@@ -1,7 +1,7 @@
 package graft.api
 
+import java.io.{ByteArrayInputStream, InputStream}
 import java.net.InetSocketAddress
-import java.util.concurrent.{TimeUnit, TimeoutException}
 import scala.jdk.CollectionConverters._
 
 import org.sparkproject.connect.grpc.{Metadata, MethodDescriptor, Server, ServerCall, ServerCallHandler, ServerInterceptor, ServerInterceptors, ServerServiceDefinition, Status}
@@ -12,7 +12,7 @@ import org.sparkproject.connect.protobuf.DescriptorProtos._
 import org.sparkproject.connect.protobuf.DescriptorProtos.FieldDescriptorProto.Label.{LABEL_OPTIONAL, LABEL_REPEATED}
 import org.sparkproject.connect.protobuf.DescriptorProtos.FieldDescriptorProto.Type.{TYPE_BOOL, TYPE_MESSAGE, TYPE_STRING, TYPE_UINT64}
 import org.sparkproject.connect.protobuf.Descriptors.{Descriptor, FileDescriptor}
-import org.sparkproject.connect.protobuf.DynamicMessage
+import org.sparkproject.connect.protobuf.{DynamicMessage, InvalidProtocolBufferException}
 
 import graft.engine.{QueryOutcome, ResultRow}
 
@@ -21,8 +21,10 @@ import graft.engine.{QueryOutcome, ResultRow}
   * unary Execute, `x-api-key` checked in request metadata
   * (UNAUTHENTICATED on mismatch), engine errors returned IN-BAND via
   * the response's `error` field, DEADLINE_EXCEEDED after the 30 s
-  * broker timeout. Execution shares the single-engine-thread
-  * [[EngineBroker]] with HTTP and the WS REPL.
+  * broker timeout, INTERNAL for a request that does not decode (as
+  * tonic answers one). Execution shares the single-engine-thread
+  * [[EngineBroker]] with HTTP and the WS REPL; the broker mints each
+  * call's request id and writes its `gRPC` api-log lines.
   *
   * No grpc-java artifact resolves offline and protoc is unavailable, but
   * Spark Connect ships the stock gRPC and protobuf-java runtimes, shaded
@@ -150,43 +152,46 @@ object GraphLoomProto {
     Metadata.Key.of("x-api-key", Metadata.ASCII_STRING_MARSHALLER)
 }
 
-/** The server: [[GraphLoomProto.executeMethod]] over the shared broker. */
+/** The server: [[GraphLoomProto.executeMethod]] over the shared broker.
+  * It takes the request as raw bytes and parses them itself, so a
+  * message that does not decode is answered INTERNAL and never reaches
+  * the engine. */
 class GrpcApi(broker: EngineBroker, port: Int = 0,
     apiKey: Option[String] = None, bindAddr: String = "127.0.0.1",
     timeoutSec: Long = 30) {
   import GraphLoomProto._
 
+  private val rawBytes = new MethodDescriptor.Marshaller[Array[Byte]] {
+    override def stream(b: Array[Byte]): InputStream = new ByteArrayInputStream(b)
+    override def parse(in: InputStream): Array[Byte] = in.readAllBytes()
+  }
+
+  private def reply(obs: StreamObserver[DynamicMessage], r: Reply): Unit = r match {
+    // engine errors travel IN-BAND (grpc.rs:90-96)
+    case Reply.Answered(out) => obs.onNext(response(Right(out))); obs.onCompleted()
+    case Reply.EngineError(msg) => obs.onNext(response(Left(msg))); obs.onCompleted()
+    case Reply.TimedOut =>
+      obs.onError(Status.DEADLINE_EXCEEDED.withDescription("query timeout").asRuntimeException())
+    case Reply.Failed(e) => obs.onError(Status.INTERNAL.withCause(e)
+      .withDescription(String.valueOf(e.getMessage)).asRuntimeException())
+  }
+
   private val handler = ServerCalls.asyncUnaryCall(
-    new ServerCalls.UnaryMethod[DynamicMessage, DynamicMessage] {
-      override def invoke(req: DynamicMessage, obs: StreamObserver[DynamicMessage]): Unit = {
-        val q = query(req)
-        val rid = broker.nextRid()
-        broker.apiLog.foreach(_.append(s"rid=$rid gRPC query qlen=${q.length}"))
-        val t0 = System.nanoTime()
-        def log(status: Int): Unit =
-          broker.apiLog.foreach(_.logApi(rid, (System.nanoTime() - t0) / 1000000, status))
-        // the reference gRPC bridge wraps the proto map in Some(...)
-        // unconditionally (grpc.rs:44) — ALWAYS the with-params path,
-        // even when the map is empty. The reply is finished from the
-        // broker's future: no gRPC thread waits on the engine thread.
-        broker.submit(q, Some(params(req)))
-          .orTimeout(timeoutSec, TimeUnit.SECONDS)
-          .handleAsync[Unit]((result: Either[String, QueryOutcome], err: Throwable) =>
-            err match {
-              case null => // engine errors travel IN-BAND (grpc.rs:90-96)
-                log(if (result.isRight) 200 else 400)
-                obs.onNext(response(result))
-                obs.onCompleted()
-              case _: TimeoutException =>
-                log(504)
-                obs.onError(Status.DEADLINE_EXCEEDED
-                  .withDescription("query timeout").asRuntimeException())
-              case e =>
-                log(500)
-                obs.onError(Status.INTERNAL.withCause(e)
-                  .withDescription(String.valueOf(e.getMessage)).asRuntimeException())
-            })
-      }
+    new ServerCalls.UnaryMethod[Array[Byte], DynamicMessage] {
+      override def invoke(bytes: Array[Byte], obs: StreamObserver[DynamicMessage]): Unit =
+        try {
+          val req = DynamicMessage.parseFrom(QueryRequest, bytes)
+          // the reference gRPC bridge wraps the proto map in Some(...)
+          // unconditionally (grpc.rs:44) — ALWAYS the with-params path,
+          // even when the map is empty. The reply is finished from the
+          // broker's future: no gRPC thread waits on the engine thread.
+          broker.submit(query(req), Some(params(req)), timeoutSec, "gRPC")
+            .thenAcceptAsync(reply(obs, _))
+        } catch {
+          case e: InvalidProtocolBufferException => obs.onError(Status.INTERNAL
+            .withDescription(s"failed to decode QueryRequest: ${e.getMessage}")
+            .asRuntimeException())
+        }
     })
 
   // x-api-key gate (grpc.rs:26-33): UNAUTHENTICATED unless the metadata
@@ -206,7 +211,8 @@ class GrpcApi(broker: EngineBroker, port: Int = 0,
 
   private val service: ServerServiceDefinition = ServerInterceptors.intercept(
     ServerServiceDefinition.builder("graph_loom.GraphQuery")
-      .addMethod(executeMethod, handler).build(),
+      .addMethod(executeMethod.toBuilder(rawBytes, executeMethod.getResponseMarshaller)
+        .build(), handler).build(),
     auth)
 
   private var server: Server = _

@@ -95,21 +95,11 @@ class GraphSession(val spark: SparkSession) {
       val exec = new CypherExecutor(spark, params)
       val (rows, g2) = exec.run(graph, parsed)
       graph = g2
-      // mutated flag is a prefix heuristic, not observed change (T8);
-      // the with-params variant omits SET/REMOVE (which it never routes
-      // here anyway) and needs the space after CREATE
-      val mutated =
-        if (hasParams)
-          upper.startsWith("CREATE ") || upper.startsWith("MERGE ") ||
-            (upper.startsWith("DELETE ") && !upper.startsWith("DELETE NODE ") &&
-              !upper.startsWith("DELETE REL ")) ||
-            upper.startsWith("DETACH DELETE ")
-        else
-          upper.startsWith("CREATE") || upper.startsWith("MERGE ") ||
-            upper.startsWith("SET ") || upper.startsWith("REMOVE ") ||
-            (upper.startsWith("DELETE ") && !upper.startsWith("DELETE NODE ") &&
-              !upper.startsWith("DELETE REL ")) ||
-            upper.startsWith("DETACH DELETE ")
+      // mutated flag is a prefix heuristic, not observed change (T8):
+      // the reference's two prefix lists mark every statement this
+      // branch routes as mutated except the reading ones, under both
+      // router variants
+      val mutated = !Seq("MATCH ", "OPTIONAL MATCH ", "RETURN ").exists(upper.startsWith)
       (rows, 0L, 0L, mutated)
     } else if (upper.startsWith("CREATE NODE ")) {
       execCreateNode(LegacyParser.parse(stmt).asInstanceOf[LegacyCmd.CreateNode])

@@ -225,15 +225,16 @@ object CooccurrenceOps {
   /** [[triangles]] over an explicit undirected edge list (`p1 < p2`,
     * distinct) — the unit-testable degree-oriented enumeration core.
     *
-    * The edge list, the oriented edge list, and the triangle list are
-    * each MATERIALIZED (localCheckpoint) because each is referenced 2-3
-    * times downstream: left as views, Catalyst re-expands every
-    * reference multiplicatively (measured: 318 joins / 360 scans in
-    * the q68 physical plan; materialized: 6 joins). At cluster scale
+    * The edge list must already be MATERIALIZED (checkpointed, as
+    * [[copurchaseEdges]] hands it over, or a local relation): it is
+    * read twice here and is not checkpointed again. The oriented edge
+    * list and the triangle list are materialized here because each is
+    * referenced 2-3 times downstream: left as views, Catalyst re-expands
+    * every reference multiplicatively (measured: 318 joins / 360 scans
+    * in the q68 physical plan; materialized: 6 joins). At cluster scale
     * the same three frames are the ones a production job would persist
     * or write between stages. */
-  def trianglesOfEdges(undRaw: DataFrame): DataFrame = {
-    val und = undRaw.graftCheckpoint()
+  def trianglesOfEdges(und: DataFrame): DataFrame = {
     val deg = und.select(col("p1").as("v"))
       .union(und.select(col("p2").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))

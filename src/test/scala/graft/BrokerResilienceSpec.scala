@@ -1,12 +1,12 @@
 package graft
 
-import java.util.concurrent.{ExecutionException, RejectedExecutionException, TimeUnit, TimeoutException}
+import java.util.concurrent.{RejectedExecutionException, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.EngineBroker
+import graft.api.{EngineBroker, Reply}
 import graft.engine.{GraphSession, QueryOutcome}
 
 /** The broker's single engine thread is the daemon's heart — if one
@@ -21,11 +21,18 @@ import graft.engine.{GraphSession, QueryOutcome}
 class BrokerResilienceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** Submits and waits up to `timeoutSec`; None = timeout. */
+  /** The engine's answer or error; None = timeout. */
+  private def result(reply: Reply): Option[Either[String, QueryOutcome]] = reply match {
+    case Reply.Answered(out) => Some(Right(out))
+    case Reply.EngineError(msg) => Some(Left(msg))
+    case Reply.TimedOut => None
+    case Reply.Failed(e) => throw e
+  }
+
+  /** Submits with a `timeoutSec` timeout and waits for the reply. */
   private def submit(broker: EngineBroker, query: String,
       timeoutSec: Long): Option[Either[String, QueryOutcome]] =
-    try Some(broker.submit(query, None).get(timeoutSec, TimeUnit.SECONDS))
-    catch { case _: TimeoutException => None }
+    result(broker.submit(query, None, timeoutSec, "test").join())
 
   /** Stub session: magic query strings raise synthetic fatal errors
     * (nothing is actually exhausted); anything else answers canned. */
@@ -121,8 +128,8 @@ class BrokerResilienceSpec extends AnyFunSuite {
     def roundTrip(tag: String): Unit = {
       ran.clear()
       val qs = (0 until 50).map(i => s"$tag-$i")
-      val futures = qs.map(broker.submit(_, None))
-      futures.foreach(f => assert(f.get(10, TimeUnit.SECONDS).isRight))
+      val futures = qs.map(broker.submit(_, None, 10, "test"))
+      futures.foreach(f => assert(result(f.join()).exists(_.isRight)))
       assert(ran.asScala.toSeq == qs)
     }
     broker.start()
@@ -146,9 +153,11 @@ class BrokerResilienceSpec extends AnyFunSuite {
     broker.stop()
     // post-stop a request is rejected at once, and no engine thread is
     // left alive to drain it
-    val err = intercept[ExecutionException](
-      broker.submit("ok", None).get(1, TimeUnit.SECONDS))
-    assert(err.getCause.isInstanceOf[RejectedExecutionException])
+    val err = broker.submit("ok", None, 10, "test").get(1, TimeUnit.SECONDS)
+    assert(err match {
+      case Reply.Failed(e) => e.isInstanceOf[RejectedExecutionException]
+      case _ => false
+    })
     assert((engineThreads() -- others).isEmpty)
   }
 }

@@ -629,6 +629,38 @@ class CypherConformanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s.executeWithParams("CREATE (:Sp8 {k:'w'})", Map("a" -> "b")).mutated)
   }
 
+  // the mutated flag of every statement the Cypher route takes, under
+  // both router variants: each prefix the reference marks mutated is
+  // exactly one the route does not read with (MATCH, OPTIONAL MATCH,
+  // RETURN); SET/REMOVE and the unspaced CREATE are not routed with
+  // params. None = the statement is rejected.
+  test("router_variants_mutated_flag_per_cypher_prefix") {
+    val s = newSession()
+    s.execute("CREATE (:Mf {k:'a'})")
+    val cases = Seq(
+      ("MATCH (n:Mf) RETURN n", Some(false), Some(false)),
+      ("match (n:Mf) return n", Some(false), Some(false)),
+      ("MATCH (n:Mf) SET n.x = '1'", Some(false), Some(false)),
+      ("MATCH (n:Nope) DELETE n", Some(false), Some(false)),
+      ("OPTIONAL MATCH (n:Mf) RETURN n", Some(false), Some(false)),
+      ("RETURN 1", None, None),
+      ("MERGE (a)-[:Mr]->(b)", Some(true), Some(true)),
+      ("merge (a)-[:Mr]->(b)", Some(true), Some(true)),
+      ("CREATE (:Mf {k:'c'})", Some(true), Some(true)),
+      ("CREATE(:Mf {k:'c'})", Some(true), None),
+      ("SET n.x = '1'", Some(true), None),
+      ("REMOVE n.x", Some(true), None),
+      ("DELETE n", Some(true), Some(true)),
+      ("DETACH DELETE n", Some(true), Some(true)))
+    def flag(run: => graft.engine.QueryOutcome): Option[Boolean] =
+      try Some(run.mutated) catch { case _: ParseException => None }
+    for ((stmt, noParams, withParams) <- cases) {
+      assert(flag(s.execute(stmt)) == noParams, s"no params: $stmt")
+      assert(flag(s.executeWithParams(stmt, Map("p" -> "v"))) == withParams,
+        s"with params: $stmt")
+    }
+  }
+
   // legacy WHERE condition parsing dispatches on the TRIMMED key after
   // splitting at the comparator (query_interface.rs:269-352): HAS keys
   // are quote-stripped, spaced `label = L` still hits the label branch,

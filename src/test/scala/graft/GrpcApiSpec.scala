@@ -96,11 +96,12 @@ class GrpcApiSpec extends AnyFunSuite {
           // past the runtime's default 4 MiB inbound cap (tonic's is 4 MB)
           request("x" * (4 << 20)).toByteArray -> Status.Code.RESOURCE_EXHAUSTED,
           // `query` claims 16 bytes and carries 1; a message the server
-          // cannot parse closes the call as UNKNOWN
-          Array[Byte](0x0a, 0x10, 'M') -> Status.Code.UNKNOWN,
+          // cannot parse is answered INTERNAL, as tonic answers a decode
+          // error in the reference
+          Array[Byte](0x0a, 0x10, 'M') -> Status.Code.INTERNAL,
           // `query` is not UTF-8: a proto3 parser rejects the string
           // field, as prost does in the reference
-          Array[Byte](0x0a, 0x02, 0xc3.toByte, 0x28) -> Status.Code.UNKNOWN)) {
+          Array[Byte](0x0a, 0x02, 0xc3.toByte, 0x28) -> Status.Code.INTERNAL)) {
         val e = intercept[StatusRuntimeException](ClientCalls.blockingUnaryCall(
           ch, rawMethod, CallOptions.DEFAULT, message))
         assert(e.getStatus.getCode == expected, e.getStatus)

@@ -4,8 +4,26 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.{ApiServer, EngineBroker}
-import graft.engine.GraphSession
+import graft.api.{ApiServer, EngineBroker, GrpcApi, WsClient}
+import graft.engine.{GraphSession, QueryOutcome}
+
+/** The broker's api log, parsed: its `qlen` lines as (rid, transport,
+  * qlen) and its status lines as (rid, status). */
+object ApiLog {
+  private val Query = raw".*\] rid=(\S+) (\S+) query qlen=(\d+)".r
+  private val Status = raw".*\] rid=(\S+) dt_ms=\d+ status=(\d+)".r
+
+  def lines(dir: java.nio.file.Path): Seq[String] =
+    java.nio.file.Files.list(dir).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("api_"))
+      .flatMap(p => java.nio.file.Files.readAllLines(p).toArray.toSeq.map(_.toString))
+
+  def queries(dir: java.nio.file.Path): Seq[(String, String, Int)] =
+    lines(dir).collect { case Query(rid, t, n) => (rid, t, n.toInt) }
+
+  def statuses(dir: java.nio.file.Path): Seq[(String, Int)] =
+    lines(dir).collect { case Status(rid, s) => (rid, s.toInt) }
+}
 
 /** Drives the reference's POST /api/query contract over a real socket
   * (api/server.rs:60-177 shapes). */
@@ -147,6 +165,67 @@ class HttpApiSpec extends AnyFunSuite {
       assert(post(port, """{"query": "MATCH NODE Person;"}""").statusCode() == 401)
       assert(post(port, """{"query": "MATCH NODE Person;"}""",
         key = Some("sekret")).statusCode() == 200)
+    } finally { api.stop(); broker.stop() }
+  }
+
+  test("api_log_one_rid_per_request_across_transports") {
+    // one broker behind all three transports: each request writes one
+    // qlen line and one status line, both under the rid the broker
+    // minted, whatever transport carried it
+    val session = new GraphSession(spark) {
+      override def execute(query: String): QueryOutcome =
+        executeWithParams(query, Map.empty)
+      override def executeWithParams(query: String,
+          params: Map[String, String]): QueryOutcome =
+        if (query.startsWith("bad")) throw new IllegalArgumentException("bad query")
+        else QueryOutcome(Nil, 0L, 0L, mutated = false)
+    }
+    val logDir = java.nio.file.Files.createTempDirectory("graft_api_rid")
+    val broker = new EngineBroker(session, Some(logDir.toString))
+    val api = new ApiServer(broker)
+    val grpc = new GrpcApi(broker)
+    val port = api.start()
+    val ch = GraphQueryClient.channel(grpc.start())
+    try {
+      assert(post(port, """{"query": "ok http"}""").statusCode() == 200)
+      assert(post(port, """{"query": "bad http!"}""").statusCode() == 400)
+      val ws = new WsClient("127.0.0.1", port)
+      assert(ws.recvText(5000).exists(_.contains("REPL ready")))
+      ws.sendText("ok repl")
+      assert(ws.recvText(30000).exists(_.startsWith("{")))
+      ws.sendText("bad repl!")
+      assert(ws.recvText(30000).contains("error: bad query"))
+      ws.close()
+      assert(GraphQueryClient.get[String](
+        GraphQueryClient.executeQuery(ch, "ok grpc"), "error").isEmpty)
+      assert(GraphQueryClient.get[String](
+        GraphQueryClient.executeQuery(ch, "bad grpc!"), "error") == "bad query")
+
+      val queries = ApiLog.queries(logDir)
+      val statuses = ApiLog.statuses(logDir)
+      assert(queries.map(q => (q._2, q._3)).toSet == Set(
+        "HTTP" -> 7, "HTTP" -> 9, "WS" -> 7, "WS" -> 9, "gRPC" -> 7, "gRPC" -> 9),
+        ApiLog.lines(logDir).mkString("\n"))
+      assert(queries.map(_._1).distinct.size == 6 && statuses.size == 6)
+      val statusOf = statuses.toMap
+      assert(statusOf.keySet == queries.map(_._1).toSet)
+      for ((rid, _, qlen) <- queries)
+        assert(statusOf(rid) == (if (qlen == 7) 200 else 400), rid)
+    } finally { ch.shutdownNow(); grpc.stop(); api.stop(); broker.stop() }
+  }
+
+  test("http_stopped_broker_answers_500_and_logs_it") {
+    val logDir = java.nio.file.Files.createTempDirectory("graft_api_stopped")
+    val broker = new EngineBroker(new GraphSession(spark), Some(logDir.toString))
+    val api = new ApiServer(broker)
+    val port = api.start()
+    try {
+      broker.stop()
+      val r = post(port, """{"query": "MATCH (n) RETURN n"}""")
+      assert(r.statusCode() == 500 && r.body() == "the engine broker is stopped", r.body())
+      val Seq((rid, transport, qlen)) = ApiLog.queries(logDir)
+      assert(transport == "HTTP" && qlen == "MATCH (n) RETURN n".length)
+      assert(ApiLog.statuses(logDir) == Seq(rid -> 500))
     } finally { api.stop(); broker.stop() }
   }
 }

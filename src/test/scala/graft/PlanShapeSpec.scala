@@ -536,6 +536,19 @@ class PlanShapeSpec extends AnyFunSuite {
       "minLabelClusters")
   }
 
+  test("triangle enumeration over a materialized edge list checkpoints only its own frames") {
+    import spark.implicits._
+    import graft.core.Materialize.GraftMaterializeOps
+    // K4 plus a pendant edge, materialized as copurchaseEdges hands it
+    // over (q68, q96). Enumeration checkpoints the oriented edges and
+    // the triangles: 7 jobs with their adaptive query stages. A second
+    // checkpoint of the input would store the edge set twice and run
+    // an 8th.
+    val und = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+      .toDF("p1", "p2").graftCheckpoint()
+    assert(jobsOf(graft.operators.CooccurrenceOps.trianglesOfEdges(und)) == 7)
+  }
+
   // ---- table reads
 
   test("a table's schema is inferred once a session: later reads and a graph build run no job") {

@@ -237,4 +237,25 @@ class WsReplSpec extends AnyFunSuite {
     assert(s2.execute("MATCH (p:Person) RETURN p").rows
       .exists(_.properties.get("name").contains("Ada")))
   }
+
+  test("ws_request_past_its_timeout_logs_504") {
+    // the REPL hands each line to the broker with its 60 s timeout and
+    // the name WS; the broker alone decides the logged status, so a
+    // WS request given a 1 s timeout shows what a REPL timeout logs
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val session = new GraphSession(spark) {
+      override def execute(query: String): graft.engine.QueryOutcome = {
+        if (query == "block") release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        graft.engine.QueryOutcome(Nil, 0L, 0L, mutated = false)
+      }
+    }
+    val logDir = Files.createTempDirectory("graft_ws_timeout")
+    val broker = new EngineBroker(session, Some(logDir.toString))
+    broker.start()
+    try {
+      assert(broker.submit("block", None, 1, "WS").join() == graft.api.Reply.TimedOut)
+      val Seq((rid, "WS", 5)) = ApiLog.queries(logDir)
+      assert(ApiLog.statuses(logDir) == Seq(rid -> 504))
+    } finally { release.countDown(); broker.stop() }
+  }
 }
